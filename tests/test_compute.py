@@ -410,6 +410,18 @@ def test_boruvka_msf_parallel_and_reversed_edges(spark):
     assert got == [(1, 2, 3.0), (2, 3, 4.0)]
 
 
+
+def test_boruvka_msf_empty_input(spark):
+    """No edges: an empty forest with the (u, v, weight) schema, as a
+    zero-partition frame (no Python RDD behind it)."""
+    from titan_spark.compute.algorithms import minimum_spanning_forest
+
+    d = spark.createDataFrame([], "src long, dst long, weight double")
+    got = minimum_spanning_forest(d)
+    assert got.columns == ["u", "v", "weight"]
+    assert got.collect() == []
+    assert got.rdd.getNumPartitions() == 0
+
 def _py_h60(s):
     import hashlib
 

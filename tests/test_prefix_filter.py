@@ -5,6 +5,7 @@ by comparing the full prefix-filter + verify pipeline against the
 naive all-pairs Jaccard on a corpus with known near-dups.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from titan_spark.pipeline.dedup import (
@@ -111,3 +112,48 @@ def test_jaccard_pairs_broadcast_and_shuffle_arms_agree(spark):
     }
     assert bc == sh
     assert bc  # non-empty: the corpus has qualifying pairs
+
+
+def _jaccard_rows(docs, cands, **kw):
+    return {
+        (r["id_a"], r["id_b"], round(r["jaccard"], 6))
+        for r in jaccard_pairs(docs, cands, **kw).collect()
+    }
+
+
+def test_jaccard_pairs_malformed_budget_conf_falls_back(spark):
+    # a budget conf that is not a number of MB warns and uses the
+    # default budget instead of failing the verify join
+    docs = _corpus(spark)
+    cands = prefix_filter_candidates(docs, threshold=0.5)
+    want = _jaccard_rows(docs, cands)
+    key = "spark.titan.verifyBroadcastMb"
+    for bad in ("512m", "auto"):
+        spark.conf.set(key, bad)
+        try:
+            with pytest.warns(RuntimeWarning, match="not a number"):
+                got = _jaccard_rows(docs, cands)
+        finally:
+            spark.conf.unset(key)
+        assert got == want
+    assert want
+
+
+def test_jaccard_pairs_zero_budget_takes_shuffle_arm(spark):
+    # budget <= 0 is the shuffle arm, even for an empty shingle side
+    # (estimate 0 MB); a positive budget keeps the broadcast arm
+    from titan_spark.pipeline.dedup import verify_broadcast_fits
+
+    assert not verify_broadcast_fits(spark, 0.0, 0)
+    assert not verify_broadcast_fits(spark, 0.0, -1)
+    assert verify_broadcast_fits(spark, 0.0, 1)
+    assert verify_broadcast_fits(spark, 0.0)  # default budget
+
+    def plan(docs, cands, budget):
+        j = jaccard_pairs(docs, cands, broadcast_budget_mb=budget)
+        return j._jdf.queryExecution().optimizedPlan().toString()
+
+    docs = _corpus(spark)
+    none = spark.createDataFrame([], "id_a long, id_b long")
+    assert "strategy=broadcast" not in plan(docs, none, 0)
+    assert "strategy=broadcast" in plan(docs, none, 1e9)

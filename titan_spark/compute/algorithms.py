@@ -2971,7 +2971,11 @@ def minimum_spanning_forest(
                 RuntimeWarning,
             )
     if not forest_rounds:
-        return spark.createDataFrame([], "u long, v long, weight double")
+        # zero-partition frame: a createDataFrame([]) list would be a
+        # Python RDD whose first query starts Python workers
+        return spark.createDataFrame(
+            spark.sparkContext.emptyRDD(), "u long, v long, weight double"
+        )
     forest = forest_rounds[0]
     for nxt in forest_rounds[1:]:
         forest = forest.unionByName(nxt)

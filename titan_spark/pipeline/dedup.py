@@ -9,7 +9,11 @@ expressed with built-in column functions (hashes run JVM-side).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import math
+import os
+import warnings
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from titan_spark.functions.hashing import portable_hash64, resolve_hash_fn
 from titan_spark.functions.text import tokenize
@@ -74,7 +78,21 @@ def minhash_signatures(
     shingle_n: int = 3,
     hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """Per-doc minhash signature: array of num_hashes min-values.
+    """Per-doc minhash signature: array of num_hashes min-values (see
+    :func:`minhash_column`)."""
+    return df.select(
+        F.col(id_col),
+        minhash_column(text_col, num_hashes, shingle_n, hash_fn).alias("signature"),
+    )
+
+
+def minhash_column(
+    text_col: str = "text",
+    num_hashes: int = 32,
+    shingle_n: int = 3,
+    hash_fn: str = "xxhash64",
+) -> Column:
+    """The minhash signature expression: array of num_hashes min-values.
 
     h_i(x) = (a_i * x + b_i) mod p over 64-bit shingle hashes, with
     fixed per-i coefficients — fully deterministic, no fitted model.
@@ -85,6 +103,11 @@ def minhash_signatures(
     bit-identical DuckDB twin so the whole pipeline is oracle-checkable
     — see functions/hashing.py). Either is a valid MinHash base hash;
     only determinism and spread matter.
+
+    Building the expression costs hundreds of py4j calls in Python
+    (num_hashes lanes inside two lambdas; ~0.4 s measured on a 4-core
+    host), so a caller that applies it batch after batch can build it
+    once and reuse the Column.
     """
     h64 = resolve_hash_fn(hash_fn)
     sh = shingles(F.col(text_col), shingle_n)
@@ -103,10 +126,9 @@ def minhash_signatures(
     # one pass over the shingle hashes: fold elementwise-min across the
     # permutation lanes (the input array is evaluated exactly once)
     init = F.array_repeat(F.lit(_MINHASH_PRIME).cast("long"), num_hashes)
-    sig = F.aggregate(
+    return F.aggregate(
         hashed, init, lambda acc, h: F.zip_with(acc, _perms(h), lambda a, b: F.least(a, b))
     )
-    return df.select(F.col(id_col), sig.alias("signature"))
 
 
 def lsh_candidate_pairs(
@@ -248,7 +270,11 @@ def prefix_filter_candidates(
         .filter(F.col("_r") <= F.col("_sz") - F.ceil(F.lit(threshold) * F.col("_sz")) + 1)
         .select("_id", "_sz", "_g", "_r")
     )
-    ranked = cut_lineage(ranked, eager=True)
+    # the gate's row count rides on the cut's own job (no extra count)
+    n_ranked = Observation()
+    ranked = cut_lineage(
+        ranked.observe(n_ranked, F.count(F.lit(1)).alias("n")), eager=True
+    )
     # SHUFFLE_HASH above the broadcast regime: the prefix self-join is
     # a collision join on the shingle key whose sort order is never
     # reused downstream (the output feeds a pair-dedup hash aggregate),
@@ -260,7 +286,7 @@ def prefix_filter_candidates(
     # relation is far past any broadcast threshold and SMJ was the
     # alternative. Per-partition build size stays bounded: the posting
     # relation shuffles at the session's corpus-scaled partition count.
-    if ranked.count() > 2_000_000:  # cheap: ranked materialized above
+    if n_ranked.get["n"] > 2_000_000:
         ranked = ranked.hint("SHUFFLE_HASH")
     a, b = ranked.alias("a"), ranked.alias("b")
     # positional filter (PPJoin): a collision at prefix ranks (ra, rb)
@@ -292,6 +318,38 @@ def prefix_filter_candidates(
         .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
+
+
+_VERIFY_BC_DEFAULT_MB = 512.0
+
+
+def verify_broadcast_fits(
+    spark: SparkSession, est_mb: float, budget_mb: float | None = None
+) -> bool:
+    """Whether a verify join broadcasts its per-item side of ``est_mb``
+    estimated MB — the one budget the Jaccard and cosine verify joins
+    share. ``budget_mb`` overrides the budget, else conf
+    ``spark.titan.verifyBroadcastMb``, else env SPARK_GRAFT_VERIFY_BC_MB,
+    else 512. A value that is not a number of MB (``512m``, ``auto``)
+    falls back to 512 with a warning instead of failing the join. A
+    budget <= 0 always takes the shuffle arm, even for an empty side."""
+    if budget_mb is None:
+        raw = spark.conf.get(
+            "spark.titan.verifyBroadcastMb",
+            os.environ.get("SPARK_GRAFT_VERIFY_BC_MB", str(_VERIFY_BC_DEFAULT_MB)),
+        )
+        try:
+            budget_mb = float(raw)
+        except (TypeError, ValueError):
+            budget_mb = math.nan
+        if math.isnan(budget_mb):
+            warnings.warn(
+                f"verify broadcast budget {raw!r} is not a number of MB; "
+                f"using {_VERIFY_BC_DEFAULT_MB:g}",
+                RuntimeWarning,
+            )
+            budget_mb = _VERIFY_BC_DEFAULT_MB
+    return 0 < budget_mb and est_mb <= budget_mb
 
 
 def jaccard_pairs(
@@ -340,7 +398,10 @@ def jaccard_pairs(
     """
     # (id_a, id_b) pairs only — materialized once because the plan
     # references the candidate set four times (id union + two joins)
-    candidates = cut_lineage(candidates, eager=True)
+    n_cand = Observation()
+    candidates = cut_lineage(
+        candidates.observe(n_cand, F.count(F.lit(1)).alias("n")), eager=True
+    )
     cand_ids = (
         candidates.select(F.col("id_a").alias("_jid"))
         .unionByName(candidates.select(F.col("id_b").alias("_jid")))
@@ -361,26 +422,20 @@ def jaccard_pairs(
         )
     # materialize the per-doc shingle relation once: both join sides
     # read it (the un-cut form re-ran the semi-join + hash transform
-    # per side), and the byte estimate below needs one cheap agg on it
-    sh = cut_lineage(sh, eager=True)
-    n_docs_c, n_elems = sh.agg(
-        F.count(F.lit(1)), F.sum(F.size("_sh"))
-    ).first()
+    # per side); the byte estimate below is observed on the cut's job
+    size = Observation()
+    sh = cut_lineage(
+        sh.observe(
+            size, F.count(F.lit(1)).alias("docs"), F.sum(F.size("_sh")).alias("elems")
+        ),
+        eager=True,
+    )
     elem_bytes = 8 if hash_shingles else 40
-    est_mb = ((n_elems or 0) * elem_bytes + (n_docs_c or 0) * 24) / 1e6
+    est_mb = ((size.get["elems"] or 0) * elem_bytes + size.get["docs"] * 24) / 1e6
     sess = candidates.sparkSession
-    if broadcast_budget_mb is None:
-        import os
-
-        broadcast_budget_mb = float(
-            sess.conf.get(
-                "spark.titan.verifyBroadcastMb",
-                os.environ.get("SPARK_GRAFT_VERIFY_BC_MB", "512"),
-            )
-        )
     sh_a = sh.withColumnRenamed("_jid", "id_a").withColumnRenamed("_sh", "sh_a")
     sh_b = sh.withColumnRenamed("_jid", "id_b").withColumnRenamed("_sh", "sh_b")
-    if est_mb <= broadcast_budget_mb:
+    if verify_broadcast_fits(sess, est_mb, broadcast_budget_mb):
         # broadcast arm: each doc's array ships once per executor, and
         # the pair relation streams through two map-side hash joins
         # with NO shuffle — the alternative re-shuffles the pair rows
@@ -400,7 +455,6 @@ def jaccard_pairs(
         # no extra shuffle of the wide intermediate. Never lowers the
         # session setting; capped so a huge candidate set cannot
         # explode the task count past scheduler sanity.
-        n_cand = candidates.count()  # cheap: candidates materialized above
         try:
             # the conf may be non-numeric on some platforms (e.g.
             # "auto" under AQE-managed shuffles) — fall back to the
@@ -408,7 +462,7 @@ def jaccard_pairs(
             base_part = int(sess.conf.get("spark.sql.shuffle.partitions"))
         except (TypeError, ValueError):
             base_part = sess.sparkContext.defaultParallelism or 200
-        n_part = max(base_part, min(2048, n_cand // 50_000 + 1))
+        n_part = max(base_part, min(2048, n_cand.get["n"] // 50_000 + 1))
         j = candidates.join(sh_a.repartition(n_part, "id_a"), "id_a").join(
             sh_b.repartition(n_part, "id_b"), "id_b"
         )

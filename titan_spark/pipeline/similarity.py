@@ -17,10 +17,9 @@ consumed — go through an Arrow-batched numpy matmul instead (see
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window, functions as F
 from titan_spark.compute.checkpointing import cut_lineage
+from titan_spark.pipeline.dedup import verify_broadcast_fits
 
 try:  # optional fast path for plane_dots; the JVM fold needs neither
     import numpy as np
@@ -242,15 +241,8 @@ def _pair_vector_join(
     shuffle vs 8.8 s broadcast, identical rows). Above the budget the
     shuffle form is kept — the 100 TB path.
     """
-    sess = cand.sparkSession
-    budget_mb = float(
-        sess.conf.get(
-            "spark.titan.verifyBroadcastMb",
-            os.environ.get("SPARK_GRAFT_VERIFY_BC_MB", "512"),
-        )
-    )
     est_mb = df.count() * (dim * 8 + 24) / 1e6
-    if est_mb <= budget_mb:
+    if verify_broadcast_fits(cand.sparkSession, est_mb):
         return cand.join(F.broadcast(va), "id_a").join(F.broadcast(vb), "id_b")
     return cand.join(va, "id_a").join(vb, "id_b")
 

@@ -5,18 +5,26 @@ store — the incremental form of the batch MinHash+LSH pipeline
 Per micro-batch (foreachBatch):
 
 1. band incoming docs' minhash signatures (same deterministic hashes
-   as the batch pipeline — a doc gets the same bands in either mode);
-2. docs sharing ANY band with the store are near-dup suspects →
-   dropped (the store side of the join is bucketed parquet keyed on
-   the band hash; the probe reads only matching buckets at scale);
-3. within-batch collisions resolve greedily — the lower doc id of
-   each candidate pair survives (documented divergence from the batch
-   pipeline's full transitive clustering: a stream can't see forward);
-4. survivors' band rows append to the store WITH the batch id; history
-   reads take only STRICTLY EARLIER batches and drop duplicate
-   (band, band_hash, doc) rows, so a retried batch (foreachBatch is
-   at-least-once) reproduces its first attempt's survivors — the sink
-   output is idempotent, not just the store.
+   as the batch pipeline — a doc gets the same bands in either mode),
+   materialized once in one eager cut that also observes the set of
+   band-hash buckets the batch touches;
+2. docs sharing ANY band with the store are near-dup suspects (the
+   store is bucketed parquet keyed on the band hash; the probe reads
+   only the touched buckets). With no store on disk yet, there is no
+   probe at all;
+3. within-batch collisions among the remaining docs resolve greedily —
+   the lower doc id of each candidate pair survives (documented
+   divergence from the batch pipeline's full transitive clustering: a
+   stream can't see forward). History hits and within-batch losers
+   form ONE dropped-id set, materialized eagerly;
+4. the band rows minus the dropped ids append to the store WITH the
+   batch id, and the returned survivors are the batch minus the
+   dropped ids — a lazy plan that never reads the minhash or the store
+   again, so a later compaction cannot pull files out from under it.
+   History reads take only STRICTLY EARLIER batches, so a retried
+   batch (foreachBatch is at-least-once) reproduces its first
+   attempt's survivors — the sink output is idempotent, not just the
+   store.
 
 State is the store itself — bounded by unique-document volume, not
 stream length; no executor state store grows with the corpus.
@@ -26,9 +34,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
 
-from titan_spark.pipeline.dedup import minhash_signatures
+from titan_spark.compute.checkpointing import cut_lineage
+from titan_spark.functions.hashing import resolve_hash_fn
+from titan_spark.pipeline.dedup import minhash_column
 
 _STORE_SCHEMA = "band int, band_hash long, doc_id long, batch_id long"
 # the persistent store is hive-partitioned on pmod(band_hash, N): a
@@ -72,18 +82,22 @@ class IncrementalDedup:
         # (appends and compaction both write bucketed) — cache the
         # positive answer so steady-state probes skip the listdir
         self._known_bucketed = False
+        # (signature, exploded bands) expressions, built on first use
+        self._band_cols = None
 
     def warm_up(self) -> None:
         """One-time bootstrap (call at construction/stream start, off
         the per-batch latency path): run the full ``process_batch``
-        plan twice — once against a missing store and once against the
+        plan twice — once with no store (no probe) and once against the
         bucketed store the first pass created — on a two-doc synthetic
         batch in a throwaway directory. This compiles both plan shapes'
-        whole-stage codegen (minhash + banding, empty-store probe,
+        whole-stage codegen (minhash + banding, within-batch window,
         partition-pruned bucket probe, bucketed parquet append) before
         the first real micro-batch, which otherwise pays the JIT +
-        codegen cost on the latency path (measured ~2-3x the
-        steady-state batch wall)."""
+        codegen cost on the latency path. Measured on a 4-core host
+        with 200-doc batches: a cold first batch took 8.2-11.2 s
+        against 4.4-5.4 s steady state (~2x); after warm_up (~14 s)
+        the first batch took 3.9 s."""
         import shutil
         import tempfile
 
@@ -111,6 +125,20 @@ class IncrementalDedup:
             shutil.rmtree(tmp, ignore_errors=True)
 
     # -- store --------------------------------------------------------
+    def _has_store(self) -> bool:
+        """Whether a store exists on disk. Crash recovery for
+        compact()'s swap window: if the store was renamed away but the
+        fully-written compacted copy never took its place, finish the
+        swap (the tmp dir is only ever complete at that point — the
+        write finishes before any rename starts)."""
+        if os.path.exists(self.store_dir):
+            return True
+        tmp = self.store_dir.rstrip("/") + ".compacting"
+        if os.path.exists(tmp):
+            os.rename(tmp, self.store_dir)
+            return True
+        return False
+
     def _store(
         self, buckets: list[int] | None = None, dedup: bool = True
     ) -> DataFrame:
@@ -119,20 +147,12 @@ class IncrementalDedup:
         bucket directories are read). Legacy non-partitioned stores are
         read whole with the bucket derived on the fly. ``dedup=False``
         skips the 3-column retry-dedup shuffle for probe paths that
-        apply their own coarser distinct."""
-        if not os.path.exists(self.store_dir):
-            # crash-recovery for compact()'s swap window: if the store
-            # was renamed away but the fully-written compacted copy
-            # never took its place, finish the swap (the tmp dir is
-            # only ever complete at that point — the write finishes
-            # before any rename starts)
-            tmp = self.store_dir.rstrip("/") + ".compacting"
-            if os.path.exists(tmp):
-                os.rename(tmp, self.store_dir)
-            else:
-                return self.spark.createDataFrame(
-                    [], _STORE_SCHEMA + ", bucket int"
-                )
+        only match keys against the rows."""
+        if not self._has_store():
+            # zero-partition frame: no Python RDD, so no Python workers
+            return self.spark.createDataFrame(
+                self.spark.sparkContext.emptyRDD(), _STORE_SCHEMA + ", bucket int"
+            )
         bucketed = self._known_bucketed or any(
             e.startswith("bucket=") for e in os.listdir(self.store_dir)
         )
@@ -195,32 +215,35 @@ class IncrementalDedup:
     def _band_rows(self, df: DataFrame) -> DataFrame:
         """(band, band_hash, doc_id) rows — one per band per doc, the
         same banding the batch LSH join keys on."""
-        sigs = minhash_signatures(
-            df, self.text_col, self.id_col, self.num_hashes, hash_fn=self.hash_fn
-        )
-        rows = self.num_hashes // self.bands
-        from titan_spark.functions.hashing import resolve_hash_fn
-
-        h64 = resolve_hash_fn(self.hash_fn)
-        # identical band-hash construction to the batch pipeline's
-        # lsh_candidate_pairs, so a doc's (band, band_hash) rows are the
-        # same whether it arrived by stream or batch
-        bands = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    h64(
-                        F.concat_ws(
-                            ",",
-                            *[F.col("signature")[b * rows + i] for i in range(rows)],
-                        )
-                    ).alias("band_hash"),
-                )
-                for b in range(self.bands)
-            ]
-        )
-        return sigs.select(F.col(self.id_col).alias("doc_id"), F.explode(bands).alias("b")).select(
-            F.col("b.band").alias("band"), F.col("b.band_hash").alias("band_hash"), "doc_id"
+        if self._band_cols is None:
+            # the expressions are the same for every batch: build them
+            # (hundreds of py4j calls) once per processor
+            h64 = resolve_hash_fn(self.hash_fn)
+            rows = self.num_hashes // self.bands
+            # identical band-hash construction to the batch pipeline's
+            # lsh_candidate_pairs, so a doc's (band, band_hash) rows are
+            # the same whether it arrived by stream or batch
+            bands = F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        h64(
+                            F.concat_ws(
+                                ",",
+                                *[F.col("signature")[b * rows + i] for i in range(rows)],
+                            )
+                        ).alias("band_hash"),
+                    )
+                    for b in range(self.bands)
+                ]
+            )
+            sig = minhash_column(self.text_col, self.num_hashes, hash_fn=self.hash_fn)
+            self._band_cols = (sig.alias("signature"), F.explode(bands).alias("b"))
+        sig, bands = self._band_cols
+        return (
+            df.select(F.col(self.id_col).alias("doc_id"), sig)
+            .select("doc_id", bands)
+            .select(F.col("b.band").alias("band"), F.col("b.band_hash").alias("band_hash"), "doc_id")
         )
 
     # -- batch step ---------------------------------------------------
@@ -236,74 +259,67 @@ class IncrementalDedup:
         output was lost with the crash. Filtering by batch id makes the
         retry reproduce the first attempt's survivors exactly
         (idempotent sink output, not just an idempotent store)."""
-        incoming = self._band_rows(batch_df).withColumn(
-            "bucket", _bucket_of(F.col("band_hash"))
-        )
-        # the batch's band rows feed the bucket probe AND the history
-        # join — cache so minhashing runs once
-        incoming = incoming.cache()
-        probe_buckets = [
-            r["bucket"] for r in incoming.select("bucket").distinct().collect()
-        ]
-        # probe path: only distinct (band, band_hash) matters, so skip
-        # the 3-column retry-dedup shuffle (dedup=False)
-        store = self._store(probe_buckets, dedup=False).filter(
-            F.col("batch_id") < F.lit(int(batch_id))
-        )
-        # history collisions: any shared band drops the incoming doc
-        hist_dupes = (
-            incoming.join(
-                store.select("band", "band_hash").dropDuplicates(),
-                ["band", "band_hash"],
-                "left_semi",
-            )
-            .select("doc_id")
-            .distinct()
-        )
-        # within-batch collisions: greedy keep-lowest-id per pair,
-        # derived straight off the CACHED band rows — the old path
-        # called lsh_candidate_pairs on the fresh docs and then
-        # _band_rows on the survivors, re-minhashing the batch twice;
-        # the banding join below is the same (band, band_hash)
-        # collision test without a second (or third) shingle+hash pass
-        fresh_bands = incoming.join(hist_dupes, "doc_id", "left_anti")
-        a = fresh_bands.select("band", "band_hash", F.col("doc_id").alias("id_a"))
-        b = fresh_bands.select("band", "band_hash", F.col("doc_id").alias("id_b"))
-        losers = (
-            a.join(b, ["band", "band_hash"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select(F.col("id_b").alias("doc_id"))
-            .distinct()
-        )
-        survivors = batch_df.join(
-            hist_dupes.withColumnRenamed("doc_id", self.id_col),
-            self.id_col,
-            "left_anti",
-        ).join(
-            losers.withColumnRenamed("doc_id", self.id_col),
-            self.id_col,
-            "left_anti",
-        )
-        out_rows = (
-            fresh_bands.join(losers, "doc_id", "left_anti")
-            .select("band", "band_hash", "doc_id")
-            .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
+        bid = int(batch_id)
+        # the batch's band rows feed the probe, the within-batch join
+        # and the append: minhash once, in one eager cut whose
+        # observation also yields the buckets the probe must read
+        touched = Observation()
+        incoming = cut_lineage(
+            self._band_rows(batch_df)
             .withColumn("bucket", _bucket_of(F.col("band_hash")))
+            .observe(touched, F.collect_set("bucket").alias("buckets")),
+            eager=True,
         )
-        # one file per touched bucket per batch (repartition on the
-        # partition key), keeping the per-bucket file count — and hence
-        # probe IO — proportional to batches, not shuffle partitions
-        out_rows.repartition(_N_BUCKETS, "bucket").write.mode("append").partitionBy(
+        fresh, dropped = incoming, None
+        if self._has_store():
+            # probe path: history hits need no retry dedup (dedup=False);
+            # the final distinct below absorbs repeated store rows
+            store = self._store(touched.get["buckets"], dedup=False).filter(
+                F.col("batch_id") < F.lit(bid)
+            )
+            # history collisions: any shared band drops the incoming doc.
+            # An inner join, not a left semi-join, so the planner may
+            # broadcast either side: the batch's band rows once the
+            # store outgrows them (a semi-join could only build the store)
+            dropped = store.select("band", "band_hash").join(
+                incoming.select("band", "band_hash", "doc_id"),
+                ["band", "band_hash"],
+            ).select("doc_id")
+            fresh = incoming.join(F.broadcast(dropped), "doc_id", "left_anti")
+        # within-batch collisions among the rest, greedy keep-lowest-id:
+        # a doc loses when a lower-id doc shares any of its bands, i.e.
+        # when it is not the minimum id of one of its band keys — one
+        # shuffle on the key, linear in the band rows even when a batch
+        # holds many copies of one document
+        first = F.min("doc_id").over(Window.partitionBy("band", "band_hash"))
+        losers = (
+            fresh.select("doc_id", first.alias("_first"))
+            .filter(F.col("doc_id") > F.col("_first"))
+            .select("doc_id")
+        )
+        dropped = losers if dropped is None else dropped.unionByName(losers)
+        # decide once: both the append and the survivors anti-join this
+        # materialized set, so neither re-runs the minhash or the probe
+        dropped = cut_lineage(dropped.distinct(), eager=True)
+        out_rows = incoming.join(F.broadcast(dropped), "doc_id", "left_anti").select(
+            "band", "band_hash", "doc_id", F.lit(bid).cast("long").alias("batch_id"), "bucket"
+        )
+        # one file per touched bucket per batch: hash-partitioning on
+        # the partition key puts each bucket in exactly one task at the
+        # session's partition count, keeping the per-bucket file count
+        # — and hence probe IO — proportional to batches
+        out_rows.repartition("bucket").write.mode("append").partitionBy(
             "bucket"
         ).parquet(self.store_dir)
-        incoming.unpersist(blocking=False)
-        if self.compact_every and (int(batch_id) + 1) % self.compact_every == 0:
-            # survivors' lazy plan reads the PRE-compaction store files
-            # (via the history probe) — materialize before the rewrite
-            # deletes them
-            survivors = survivors.localCheckpoint(eager=True)
+        if self.compact_every and (bid + 1) % self.compact_every == 0:
             self.compact()
-        return survivors
+        # lazy, but reads only the batch and the materialized dropped
+        # set — never the store files a compaction may delete
+        return batch_df.join(
+            F.broadcast(dropped.withColumnRenamed("doc_id", self.id_col)),
+            self.id_col,
+            "left_anti",
+        )
 
     def run_stream(self, stream_df: DataFrame, checkpoint_dir: str, sink_fn=None):
         """Wire as a foreachBatch sink; ``sink_fn(survivors, batch_id)``
