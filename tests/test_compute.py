@@ -311,6 +311,25 @@ def test_feature_propagation_closed_forms(spark):
     assert n[1]["f1"] == 8.0 and n[9]["f1"] is None
 
 
+def test_feature_propagation_ignores_shuffle_partitions(spark, sf_dir):
+    """The cent-rounded hop means do not depend on the shuffle's
+    partition count. On sf0.001 one nation's hop-1 mean sits on a
+    half-cent, so a sum whose order follows the partitioning moves it
+    (and its customers' hop-2 values) by a cent."""
+    from titan_spark.plans.catalog import QUERIES
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    got = {}
+    try:
+        for n in ("1", "4"):
+            spark.conf.set(key, n)
+            got[n] = sorted(QUERIES["feature_smooth"](spark, sf_dir).collect())
+    finally:
+        spark.conf.set(key, old)
+    assert got["1"] == got["4"]
+
+
 def test_hits_closed_form(spark):
     """HITS on a 2-hub/1-authority star: hubs split, authority 1."""
     import pytest
@@ -588,3 +607,45 @@ def test_node2vec_return_bias_oscillates(spark):
 
     assert returns(99, 1) >= n * 0.9
     assert returns(1, 99) <= n * 0.2
+
+
+def test_loop_operators_leave_shuffle_partitions_to_aqe(
+    spark, gods, sssp_tree, monkeypatch
+):
+    """Loop operators never change ``spark.sql.shuffle.partitions``:
+    every lineage cut they take runs under the session's value. AQE's
+    partition coalescing is what sizes each round's shuffle to the
+    round's data, and the last block pins that premise."""
+    import sys
+
+    from titan_spark.compute import algorithms
+    from titan_spark.compute.algorithms import connected_components, k_core, louvain
+    from titan_spark.compute.checkpointing import cut_lineage
+
+    key = "spark.sql.shuffle.partitions"
+    session_value = spark.conf.get(key)
+    seen = []
+
+    def recording_cut(df, *args, **kwargs):
+        seen.append(spark.conf.get(key))
+        return cut_lineage(df, *args, **kwargs)
+
+    monkeypatch.setattr(algorithms, "cut_lineage", recording_cut)
+    monkeypatch.setattr(
+        sys.modules["titan_spark.compute.pregel"], "cut_lineage", recording_cut
+    )
+    tree, expected = sssp_tree
+    assert {r["component"] for r in connected_components(gods).collect()} == {1}
+    got = {r["id"]: r["distance"] for r in shortest_distance(tree, seed_id=0).collect()}
+    assert got.keys() == expected.keys()
+    k_core(gods, k=2).collect()
+    louvain(gods).collect()
+    assert seen and set(seen) == {session_value}
+
+    tiny = (
+        spark.range(100)
+        .groupBy((F.col("id") % 3).alias("k"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    assert session_value == "8"
+    assert cut_lineage(tiny, eager=True).rdd.getNumPartitions() == 1

@@ -21,7 +21,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from titan_spark.compute.pregel import pregel, run_iterations
+from titan_spark.compute.pregel import pregel
 from titan_spark.graph import PropertyGraph
 from titan_spark.compute.checkpointing import cut_lineage
 
@@ -47,7 +47,6 @@ def pagerank(
     alpha: float = 0.85,
     iterations: int = 10,
     edge_labels: tuple[str, ...] = (),
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Returns DataFrame(id, pagerank).
 
@@ -55,7 +54,7 @@ def pagerank(
     iteration 0) is a plain aggregation here. Edges+degrees are
     computed once and cached; each round is one shuffle on dst.
 
-    ``checkpoint_every=1`` because each round references the state
+    Lineage is cut every round because each round references the state
     twice (message join + rank join): an unmaterialized state doubles
     the physical plan per round (2^N base scans), while materializing
     one row per vertex per round is cheap at any scale.
@@ -72,7 +71,7 @@ def pagerank(
     ranks = graph.vertices.select("id").withColumn("pagerank", F.lit(1.0 / n))
     base = (1.0 - alpha) / n
 
-    def step(state: DataFrame, i: int) -> DataFrame:
+    def step(state: DataFrame) -> DataFrame:
         msgs = (
             contrib_e.join(state, contrib_e["src"] == state["id"])
             .select(F.col("dst").alias("id"), (F.col("pagerank") / F.col("outdeg")).alias("c"))
@@ -91,9 +90,10 @@ def pagerank(
         )
 
     try:
-        out = run_iterations(ranks, step, iterations, checkpoint_every)
+        for i in range(iterations):
+            ranks = cut_lineage(step(ranks), eager=True, round_idx=i)
         # materialize before releasing the cached contribution edges
-        return cut_lineage(out, eager=True)
+        return cut_lineage(ranks, eager=True)
     finally:
         contrib_e.unpersist(blocking=False)
 
@@ -179,18 +179,10 @@ def connected_components(
     # edges only linearly inflate the one contraction join they pass
     # through.
     de = e.select(F.col("src").alias("u"), F.col("dst").alias("v")).cache()
-    n_de = de.count()  # materializes the cache; sizes the loop below
     state = graph.vertices.select("id", F.col("id").alias("component"))
     state = cut_lineage(state, eager=True)
-    from titan_spark.compute.checkpointing import scoped_shuffle_partitions
-
     try:
-        # the per-round relations are edge-sized, not corpus-sized:
-        # shrink shuffle parallelism to match (dedup pair graphs are
-        # tiny even when the corpus is 100 TB; empty-task launch
-        # overhead otherwise dominates every round)
-        with scoped_shuffle_partitions(de.sparkSession, 2 * n_de):
-            state = _cc_loop(state, de, max_iterations)
+        state = _cc_loop(state, de, max_iterations)
     finally:
         de.unpersist(blocking=False)
     return state
@@ -542,29 +534,25 @@ def label_propagation(
         .dropDuplicates(["u", "v"])
         .cache()
     )
-    n_und = und.count()  # materializes the cache; sizes the loop below
     state = graph.vertices.select("id", F.col("id").alias("community"))
     state = cut_lineage(state, eager=True)
     w = Window.partitionBy("id").orderBy(F.col("n").desc(), F.col("community").asc())
-    from titan_spark.compute.checkpointing import scoped_shuffle_partitions
-
-    with scoped_shuffle_partitions(und.sparkSession, n_und):
-        for i in range(iterations):
-            msgs = und.join(state.withColumnRenamed("id", "u"), "u").select(
-                F.col("v").alias("id"), "community"
-            )
-            modal = (
-                msgs.groupBy("id", "community")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .select("id", F.col("community").alias("_new"))
-            )
-            state = (
-                state.join(modal, "id", "left")
-                .select("id", F.coalesce("_new", "community").alias("community"))
-            )
-            state = cut_lineage(state, eager=True, round_idx=i)
+    for i in range(iterations):
+        msgs = und.join(state.withColumnRenamed("id", "u"), "u").select(
+            F.col("v").alias("id"), "community"
+        )
+        modal = (
+            msgs.groupBy("id", "community")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .select("id", F.col("community").alias("_new"))
+        )
+        state = (
+            state.join(modal, "id", "left")
+            .select("id", F.coalesce("_new", "community").alias("community"))
+        )
+        state = cut_lineage(state, eager=True, round_idx=i)
     und.unpersist(blocking=False)
     return state
 
@@ -591,7 +579,7 @@ def k_core(
     Scale shape: the loop holds the NORMALIZED (a < b) undirected edge
     set — half the rows of the symmetric form it previously carried, so
     the build dedup shuffles half the pairs (sf10 A/B,
-    tools/prof_kcore2.py: build 32.6 → 20.5 s). Degrees come from ONE
+    933fa73:tools/prof_kcore2.py: build 32.6 → 20.5 s). Degrees come from ONE
     endpoint-union aggregation at build time (each undirected edge
     credits both ends exactly once — identical to the symmetric
     groupBy) and are then maintained INCREMENTALLY (r12, guide §2.1):
@@ -604,7 +592,7 @@ def k_core(
     subtraction is exact (d_new(v) = d_old(v) − #removed edges
     incident to v; vertices reaching d=0 leave the table exactly as
     the endpoint-union form forgets them), so drops, rounds and output
-    replay identically — sf10 A/B (tools/prof_kcore3.py): 53.1 →
+    replay identically — sf10 A/B (374d0e5:tools/prof_kcore3.py): 53.1 →
     35.5 s with 0 row mismatches. An adversarial k whose drop set
     outgrows the broadcast cap falls back to the r11 shuffle
     semi-join peel + full re-aggregation, which stays correct at any
@@ -621,101 +609,95 @@ def k_core(
     # the edge relation spills to storage once at build; rounds only
     # SCAN it (broadcast-filtered), never rewrite it
     und = cut_lineage(und, eager=True, round_idx=0, spill_period=1)
-    n_und = und.count()
-    from titan_spark.compute.checkpointing import scoped_shuffle_partitions
-
-    # scope to endpoint rows (2 per edge) — the build aggregation's
-    # widest shuffle; steady-state rounds are vertex- or drop-sized
-    with scoped_shuffle_partitions(und.sparkSession, 2 * n_und):
-        deg = (
-            und.select(F.col("a").alias("id"))
-            .unionAll(und.select(F.col("b").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        deg = cut_lineage(deg, eager=False)
-        dropped_all: DataFrame | None = None
-        for i in range(rounds):
-            # Convergence is decided on the DROPPED-vertex set (tiny)
-            # BEFORE any edge work: "no vertex below k" ⇔ "no edge
-            # removed" — every id in deg has d ≥ 1, so a drop always
-            # removes edges and an unchanged edge set means an empty
-            # drop set; the fixed-round oracle prefix replays
-            # identically. On the convergence round deg IS the answer.
-            dropped = deg.filter(F.col("d") < k).select("id")
-            n_drop = dropped.count()
-            if n_drop == 0:
-                break
-            small = n_drop <= _PEEL_BROADCAST_MAX_ROWS
-            if small and dropped_all is not None:
-                dropped_all = cut_lineage(
-                    dropped_all.unionByName(dropped),
-                    eager=True,
-                    round_idx=i,
-                    spill_period=1,
+    deg = (
+        und.select(F.col("a").alias("id"))
+        .unionAll(und.select(F.col("b").alias("id")))
+        .groupBy("id")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+    deg = cut_lineage(deg, eager=False)
+    dropped_all: DataFrame | None = None
+    for i in range(rounds):
+        # Convergence is decided on the DROPPED-vertex set (tiny)
+        # BEFORE any edge work: "no vertex below k" ⇔ "no edge
+        # removed" — every id in deg has d ≥ 1, so a drop always
+        # removes edges and an unchanged edge set means an empty
+        # drop set; the fixed-round oracle prefix replays
+        # identically. On the convergence round deg IS the answer.
+        dropped = deg.filter(F.col("d") < k).select("id")
+        n_drop = dropped.count()
+        if n_drop == 0:
+            break
+        small = n_drop <= _PEEL_BROADCAST_MAX_ROWS
+        if small and dropped_all is not None:
+            dropped_all = cut_lineage(
+                dropped_all.unionByName(dropped),
+                eager=True,
+                round_idx=i,
+                spill_period=1,
+            )
+            small = dropped_all.count() <= _PEEL_BROADCAST_MAX_ROWS
+        elif small:
+            dropped_all = dropped
+        if small:
+            # incremental degree update: each removed edge had at
+            # least one endpoint in this round's drop set; credit
+            # the loss to the OTHER endpoint when it survives.
+            # und still holds long-dead edges, but an edge with a
+            # previously-dropped endpoint was already subtracted —
+            # the cumulative anti-join excludes it (its other end
+            # is in dropped_all)
+            d = F.broadcast(dropped)
+            dall = F.broadcast(dropped_all)
+            gone_a = d.withColumnRenamed("id", "a")
+            gone_b = d.withColumnRenamed("id", "b")
+            all_a = dall.withColumnRenamed("id", "a")
+            all_b = dall.withColumnRenamed("id", "b")
+            loss = (
+                und.join(gone_a, "a", "left_semi")
+                .join(all_b, "b", "left_anti")
+                .select(F.col("b").alias("id"))
+                .unionAll(
+                    und.join(gone_b, "b", "left_semi")
+                    .join(all_a, "a", "left_anti")
+                    .select(F.col("a").alias("id"))
                 )
-                small = dropped_all.count() <= _PEEL_BROADCAST_MAX_ROWS
-            elif small:
-                dropped_all = dropped
-            if small:
-                # incremental degree update: each removed edge had at
-                # least one endpoint in this round's drop set; credit
-                # the loss to the OTHER endpoint when it survives.
-                # und still holds long-dead edges, but an edge with a
-                # previously-dropped endpoint was already subtracted —
-                # the cumulative anti-join excludes it (its other end
-                # is in dropped_all)
-                d = F.broadcast(dropped)
-                dall = F.broadcast(dropped_all)
-                gone_a = d.withColumnRenamed("id", "a")
-                gone_b = d.withColumnRenamed("id", "b")
-                all_a = dall.withColumnRenamed("id", "a")
-                all_b = dall.withColumnRenamed("id", "b")
-                loss = (
-                    und.join(gone_a, "a", "left_semi")
-                    .join(all_b, "b", "left_anti")
-                    .select(F.col("b").alias("id"))
-                    .unionAll(
-                        und.join(gone_b, "b", "left_semi")
-                        .join(all_a, "a", "left_anti")
-                        .select(F.col("a").alias("id"))
-                    )
-                    .groupBy("id")
-                    .agg(F.count(F.lit(1)).alias("_l"))
+                .groupBy("id")
+                .agg(F.count(F.lit(1)).alias("_l"))
+            )
+            new_deg = (
+                deg.filter(F.col("d") >= k)
+                .join(F.broadcast(loss), "id", "left")
+                .select(
+                    "id",
+                    (F.col("d") - F.coalesce("_l", F.lit(0))).alias("d"),
                 )
-                new_deg = (
-                    deg.filter(F.col("d") >= k)
-                    .join(F.broadcast(loss), "id", "left")
-                    .select(
-                        "id",
-                        (F.col("d") - F.coalesce("_l", F.lit(0))).alias("d"),
-                    )
-                    .filter(F.col("d") > 0)
-                )
-                deg = cut_lineage(new_deg, eager=False, round_idx=i)
-            else:
-                # drop set outgrew the broadcast budget (adversarial
-                # k): materialize the restricted edge set with the old
-                # shuffle semi-join peel and re-aggregate degrees in
-                # full — correct at any size; later rounds resume the
-                # incremental path against the rewritten relation
-                keep = deg.filter(F.col("d") >= k).select("id")
-                und = cut_lineage(
-                    und.join(keep.withColumnRenamed("id", "a"), "a", "left_semi")
-                    .join(keep.withColumnRenamed("id", "b"), "b", "left_semi")
-                    .select("a", "b"),
-                    eager=True,
-                    round_idx=i,
-                    spill_period=1,
-                )
-                deg = cut_lineage(
-                    und.select(F.col("a").alias("id"))
-                    .unionAll(und.select(F.col("b").alias("id")))
-                    .groupBy("id")
-                    .agg(F.count(F.lit(1)).alias("d")),
-                    eager=False,
-                )
-                dropped_all = None
+                .filter(F.col("d") > 0)
+            )
+            deg = cut_lineage(new_deg, eager=False, round_idx=i)
+        else:
+            # drop set outgrew the broadcast budget (adversarial
+            # k): materialize the restricted edge set with the old
+            # shuffle semi-join peel and re-aggregate degrees in
+            # full — correct at any size; later rounds resume the
+            # incremental path against the rewritten relation
+            keep = deg.filter(F.col("d") >= k).select("id")
+            und = cut_lineage(
+                und.join(keep.withColumnRenamed("id", "a"), "a", "left_semi")
+                .join(keep.withColumnRenamed("id", "b"), "b", "left_semi")
+                .select("a", "b"),
+                eager=True,
+                round_idx=i,
+                spill_period=1,
+            )
+            deg = cut_lineage(
+                und.select(F.col("a").alias("id"))
+                .unionAll(und.select(F.col("b").alias("id")))
+                .groupBy("id")
+                .agg(F.count(F.lit(1)).alias("d")),
+                eager=False,
+            )
+            dropped_all = None
     return deg.filter(F.col("d") >= k).select(
         "id", F.col("d").alias("core_degree")
     )
@@ -832,42 +814,38 @@ def k_truss(
         .dropDuplicates(["a", "b"])
     )
     und = cut_lineage(und, eager=True, round_idx=0, spill_period=1)
-    n_edges = und.count()
-    from titan_spark.compute.checkpointing import scoped_shuffle_partitions
-
-    with scoped_shuffle_partitions(und.sparkSession, n_edges):
-        # The triangle pass (_edge_support) dominates every round, so
-        # (a) each round's support relation is materialized once (the
-        # parquet spill keeps executor memory flat, same rationale as
-        # the edge-set spill) and probed twice cheaply — once for the
-        # drop count, once for the rewrite; (b) convergence is decided
-        # on the dropped-EDGE count BEFORE rewriting the edge set (the
-        # old form wrote the unchanged full edge set to parquet first);
-        # (c) when the loop converges, the final support IS the last
-        # round's materialized support ("no edge dropped" means the
-        # edge set, hence every triangle, is unchanged), so the old
-        # post-loop _edge_support(und) — a third full triangle pass on
-        # the bench fixture — is skipped. Unconverged (rounds
-        # exhausted with drops) still recounts, as before.
-        final: DataFrame | None = None
-        for i in range(rounds):
-            sup = cut_lineage(_edge_support(und), round_idx=i, spill_period=1)
-            n_drop = (
-                und.join(sup, ["a", "b"], "left")
-                .filter(F.coalesce("support", F.lit(0)) < k - 2)
-                .count()
-            )
-            if n_drop == 0:
-                final = sup
-                break
-            new_und = (
-                und.join(sup, ["a", "b"], "left")
-                .filter(F.coalesce("support", F.lit(0)) >= k - 2)
-                .select("a", "b")
-            )
-            und = cut_lineage(new_und, eager=True, round_idx=i, spill_period=1)
-        if final is None:
-            final = _edge_support(und)
+    # The triangle pass (_edge_support) dominates every round, so
+    # (a) each round's support relation is materialized once (the
+    # parquet spill keeps executor memory flat, same rationale as
+    # the edge-set spill) and probed twice cheaply — once for the
+    # drop count, once for the rewrite; (b) convergence is decided
+    # on the dropped-EDGE count BEFORE rewriting the edge set (the
+    # old form wrote the unchanged full edge set to parquet first);
+    # (c) when the loop converges, the final support IS the last
+    # round's materialized support ("no edge dropped" means the
+    # edge set, hence every triangle, is unchanged), so the old
+    # post-loop _edge_support(und) — a third full triangle pass on
+    # the bench fixture — is skipped. Unconverged (rounds
+    # exhausted with drops) still recounts, as before.
+    final: DataFrame | None = None
+    for i in range(rounds):
+        sup = cut_lineage(_edge_support(und), round_idx=i, spill_period=1)
+        n_drop = (
+            und.join(sup, ["a", "b"], "left")
+            .filter(F.coalesce("support", F.lit(0)) < k - 2)
+            .count()
+        )
+        if n_drop == 0:
+            final = sup
+            break
+        new_und = (
+            und.join(sup, ["a", "b"], "left")
+            .filter(F.coalesce("support", F.lit(0)) >= k - 2)
+            .select("a", "b")
+        )
+        und = cut_lineage(new_und, eager=True, round_idx=i, spill_period=1)
+    if final is None:
+        final = _edge_support(und)
     return (
         und.join(final, ["a", "b"], "left")
         .select("a", "b", F.coalesce("support", F.lit(0)).alias("support"))
@@ -880,7 +858,6 @@ def personalized_pagerank(
     alpha: float = 0.85,
     iterations: int = 10,
     edge_labels: tuple[str, ...] = (),
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Personalized PageRank → DataFrame(id, ppr): the random walk
     restarts into the seed set instead of the uniform vector —
@@ -908,7 +885,7 @@ def personalized_pagerank(
         "ppr", F.when(is_seed, F.lit(seed_mass)).otherwise(F.lit(0.0))
     )
 
-    def step(state: DataFrame, i: int) -> DataFrame:
+    def step(state: DataFrame) -> DataFrame:
         msgs = (
             contrib_e.join(state, contrib_e["src"] == state["id"])
             .select(F.col("dst").alias("id"), (F.col("ppr") / F.col("outdeg")).alias("c"))
@@ -925,8 +902,9 @@ def personalized_pagerank(
         )
 
     try:
-        out = run_iterations(ranks, step, iterations, checkpoint_every)
-        return cut_lineage(out, eager=True)
+        for i in range(iterations):
+            ranks = cut_lineage(step(ranks), eager=True, round_idx=i)
+        return cut_lineage(ranks, eager=True)
     finally:
         contrib_e.unpersist(blocking=False)
 
@@ -977,36 +955,30 @@ def _landmark_distances(
         .dropDuplicates(["u", "v"])
         .cache()
     )
-    n_ue = ue.count()
     state = (
         graph.vertices.filter(F.col("id").isin([int(x) for x in landmark_ids]))
         .select(F.col("id"), F.col("id").alias("lm"), F.lit(0).cast("long").alias("d"))
     )
     state = cut_lineage(state, eager=True)
     frontier = state
-    from titan_spark.compute.checkpointing import scoped_shuffle_partitions
-
-    # frontier/state relations are landmark-pair-sized; size shuffle
-    # parallelism to the cached edge set for the loop's duration
-    with scoped_shuffle_partitions(ue.sparkSession, n_ue):
-        for _i in range(max_iterations):
-            cand = (
-                frontier.join(ue, frontier["id"] == ue["u"])
-                .select(F.col("v").alias("id"), "lm", (F.col("d") + 1).alias("d"))
-                .groupBy("id", "lm")
-                .agg(F.min("d").alias("d"))
-            )
-            # lazy cut + full count: one job materializes the checkpoint
-            # and answers the frontier-empty test
-            new = cut_lineage(
-                cand.join(state, ["id", "lm"], "left_anti"),
-                eager=False,
-                round_idx=_i,
-            )
-            if new.count() == 0:
-                break
-            state = cut_lineage(state.unionByName(new), eager=False)
-            frontier = new
+    for _i in range(max_iterations):
+        cand = (
+            frontier.join(ue, frontier["id"] == ue["u"])
+            .select(F.col("v").alias("id"), "lm", (F.col("d") + 1).alias("d"))
+            .groupBy("id", "lm")
+            .agg(F.min("d").alias("d"))
+        )
+        # lazy cut + full count: one job materializes the checkpoint
+        # and answers the frontier-empty test
+        new = cut_lineage(
+            cand.join(state, ["id", "lm"], "left_anti"),
+            eager=False,
+            round_idx=_i,
+        )
+        if new.count() == 0:
+            break
+        state = cut_lineage(state.unionByName(new), eager=False)
+        frontier = new
     ue.unpersist()
     return state
 
@@ -1095,54 +1067,48 @@ def maximal_independent_set(
         .dropDuplicates(["u", "v"])
         .cache()
     )
-    n_ue = ue.count()
     remaining = cut_lineage(graph.vertices.select("id"), eager=True)
     n_rem = remaining.count()
     winners_acc: DataFrame | None = None
-    from titan_spark.compute.checkpointing import scoped_shuffle_partitions
-
-    # active-set relations only shrink; size shuffle parallelism to the
-    # cached symmetric edge set for the loop's duration
-    with scoped_shuffle_partitions(ue.sparkSession, n_ue):
-        for r in range(max_iterations):
-            if n_rem == 0:
-                break
-            pr = portable_hash64(
-                F.concat(F.lit(f"mis{seed}:{r}:"), F.col("id").cast("string"))
-            )
-            ap = remaining.select("id", pr.alias("p"))
-            nbr_max = (
-                ue.join(ap.select(F.col("id").alias("v"), F.struct("p", "id").alias("vs")), "v")
-                .join(ap.select(F.col("id").alias("u")), "u")
-                .groupBy("u")
-                .agg(F.max("vs").alias("mx"))
-                .withColumnRenamed("u", "id")
-            )
-            winners = (
-                ap.join(nbr_max, "id", "left")
-                .filter(F.col("mx").isNull() | (F.struct("p", "id") > F.col("mx")))
-                .select("id")
-            )
-            winners = cut_lineage(winners, eager=True)
-            losers = (
-                ue.join(winners.withColumnRenamed("id", "u"), "u")
-                .select(F.col("v").alias("id"))
-                .distinct()
-                .join(remaining, "id", "left_semi")
-            )
-            retired = winners.unionByName(losers)
-            # lazy cut + full count: one job materializes the next
-            # active set and answers the loop's emptiness test
-            remaining = cut_lineage(
-                remaining.join(retired, "id", "left_anti"),
-                eager=False,
-                round_idx=r,
-            )
-            n_rem = remaining.count()
-            winners_acc = (
-                winners if winners_acc is None else winners_acc.unionByName(winners)
-            )
-            winners_acc = cut_lineage(winners_acc, eager=False)
+    for r in range(max_iterations):
+        if n_rem == 0:
+            break
+        pr = portable_hash64(
+            F.concat(F.lit(f"mis{seed}:{r}:"), F.col("id").cast("string"))
+        )
+        ap = remaining.select("id", pr.alias("p"))
+        nbr_max = (
+            ue.join(ap.select(F.col("id").alias("v"), F.struct("p", "id").alias("vs")), "v")
+            .join(ap.select(F.col("id").alias("u")), "u")
+            .groupBy("u")
+            .agg(F.max("vs").alias("mx"))
+            .withColumnRenamed("u", "id")
+        )
+        winners = (
+            ap.join(nbr_max, "id", "left")
+            .filter(F.col("mx").isNull() | (F.struct("p", "id") > F.col("mx")))
+            .select("id")
+        )
+        winners = cut_lineage(winners, eager=True)
+        losers = (
+            ue.join(winners.withColumnRenamed("id", "u"), "u")
+            .select(F.col("v").alias("id"))
+            .distinct()
+            .join(remaining, "id", "left_semi")
+        )
+        retired = winners.unionByName(losers)
+        # lazy cut + full count: one job materializes the next
+        # active set and answers the loop's emptiness test
+        remaining = cut_lineage(
+            remaining.join(retired, "id", "left_anti"),
+            eager=False,
+            round_idx=r,
+        )
+        n_rem = remaining.count()
+        winners_acc = (
+            winners if winners_acc is None else winners_acc.unionByName(winners)
+        )
+        winners_acc = cut_lineage(winners_acc, eager=False)
     ue.unpersist()
     mis = winners_acc if winners_acc is not None else remaining.limit(0)
     return graph.vertices.select("id").join(
@@ -1172,35 +1138,31 @@ def topological_levels(
     if edge_labels:
         e = e.filter(F.col("label").isin(list(edge_labels)))
     ed = e.select(F.col("src").alias("u"), F.col("dst").alias("v")).dropDuplicates().cache()
-    n_ed = ed.count()
     lvl = cut_lineage(
         graph.vertices.select("id", F.lit(0).cast("long").alias("level")), eager=True
     )
     frontier = lvl
-    from titan_spark.compute.checkpointing import scoped_shuffle_partitions
-
-    with scoped_shuffle_partitions(ed.sparkSession, n_ed):
-        for i in range(max_iterations):
-            cand = (
-                ed.join(frontier.withColumnRenamed("id", "u"), "u")
-                .groupBy(F.col("v").alias("id"))
-                .agg((F.max("level") + 1).alias("_nl"))
-            )
-            bumped = (
-                cand.join(lvl, "id")
-                .filter(F.col("_nl") > F.col("level"))
-                .select("id", F.col("_nl").alias("level"))
-            )
-            # lazy cut + full count: one job per round instead of two
-            bumped = cut_lineage(bumped, eager=False, round_idx=i)
-            if bumped.count() == 0:
-                ed.unpersist()
-                return lvl
-            lvl = cut_lineage(
-                lvl.join(bumped, "id", "left_anti").unionByName(bumped),
-                eager=False,
-            )
-            frontier = bumped
+    for i in range(max_iterations):
+        cand = (
+            ed.join(frontier.withColumnRenamed("id", "u"), "u")
+            .groupBy(F.col("v").alias("id"))
+            .agg((F.max("level") + 1).alias("_nl"))
+        )
+        bumped = (
+            cand.join(lvl, "id")
+            .filter(F.col("_nl") > F.col("level"))
+            .select("id", F.col("_nl").alias("level"))
+        )
+        # lazy cut + full count: one job per round instead of two
+        bumped = cut_lineage(bumped, eager=False, round_idx=i)
+        if bumped.count() == 0:
+            ed.unpersist()
+            return lvl
+        lvl = cut_lineage(
+            lvl.join(bumped, "id", "left_anti").unionByName(bumped),
+            eager=False,
+        )
+        frontier = bumped
     ed.unpersist()
     raise ValueError(
         f"topological_levels did not converge in {max_iterations} rounds — "
@@ -1258,7 +1220,6 @@ def betweenness_centrality(
         .dropDuplicates(["u", "v"])
         .cache()
     )
-    n_ue = ue.count()
     sources = [int(x) for x in source_ids]
     visited = cut_lineage(
         graph.vertices.filter(F.col("id").isin(sources)).select(
@@ -1271,80 +1232,75 @@ def betweenness_centrality(
     )
     frontier = visited
     depth = 0
-    from titan_spark.compute.checkpointing import scoped_shuffle_partitions
-
-    # (vertex, source) state is sample-pair-sized; size shuffle
-    # parallelism to the cached symmetric edge set for both phases
-    with scoped_shuffle_partitions(ue.sparkSession, n_ue):
-        for r in range(max_iterations):
-            cand = (
-                frontier.join(ue, frontier["id"] == ue["u"])
-                .groupBy(F.col("v").alias("id"), "lm")
-                .agg(F.sum("sigma").alias("sigma"))
-            )
-            # lazy cut + full count: one job per round instead of two
-            new = cut_lineage(
-                cand.join(visited.select("id", "lm"), ["id", "lm"], "left_anti")
-                .withColumn("dist", F.lit(r + 1).cast("long")),
-                eager=False,
-                round_idx=r,
-            )
-            if new.count() == 0:
-                break
-            depth = r + 1
-            visited = cut_lineage(
-                visited.unionByName(new.select("id", "lm", "dist", "sigma")), eager=False
-            )
-            frontier = new.select("id", "lm", "dist", "sigma")
-        # backward: delta per (id, lm), accumulated from depth down to 1.
-        # In the level-synchronous BFS DAG every (vertex, source) pair's
-        # dependency is finalized in exactly ONE round — the round that
-        # processes its depth+1 successors — so each round touches only
-        # the two adjacent LEVELS instead of rewriting the full
-        # O(|V|·k) delta state (the old loop eagerly re-materialized
-        # every pair every round; at sf10 that was depth × 8 M-row
-        # rewrites for the same arithmetic). Finalized levels stack up
-        # in ``parts`` and union once at the end — same additions, same
-        # values, depth× less rewrite volume.
-        dprev = visited.filter(F.col("dist") == depth).select(
-            "id", "lm", "sigma", F.lit(0.0).alias("delta")
+    for r in range(max_iterations):
+        cand = (
+            frontier.join(ue, frontier["id"] == ue["u"])
+            .groupBy(F.col("v").alias("id"), "lm")
+            .agg(F.sum("sigma").alias("sigma"))
         )
-        dprev = cut_lineage(dprev, eager=True)
-        parts = [dprev.select("id", "lm", "delta")]
-        for d in range(depth, 0, -1):
-            w_nodes = dprev.select(
-                F.col("id").alias("_w"), "lm",
-                F.col("sigma").alias("_sw"), F.col("delta").alias("_dw"),
+        # lazy cut + full count: one job per round instead of two
+        new = cut_lineage(
+            cand.join(visited.select("id", "lm"), ["id", "lm"], "left_anti")
+            .withColumn("dist", F.lit(r + 1).cast("long")),
+            eager=False,
+            round_idx=r,
+        )
+        if new.count() == 0:
+            break
+        depth = r + 1
+        visited = cut_lineage(
+            visited.unionByName(new.select("id", "lm", "dist", "sigma")), eager=False
+        )
+        frontier = new.select("id", "lm", "dist", "sigma")
+    # backward: delta per (id, lm), accumulated from depth down to 1.
+    # In the level-synchronous BFS DAG every (vertex, source) pair's
+    # dependency is finalized in exactly ONE round — the round that
+    # processes its depth+1 successors — so each round touches only
+    # the two adjacent LEVELS instead of rewriting the full
+    # O(|V|·k) delta state (the old loop eagerly re-materialized
+    # every pair every round; at sf10 that was depth × 8 M-row
+    # rewrites for the same arithmetic). Finalized levels stack up
+    # in ``parts`` and union once at the end — same additions, same
+    # values, depth× less rewrite volume.
+    dprev = visited.filter(F.col("dist") == depth).select(
+        "id", "lm", "sigma", F.lit(0.0).alias("delta")
+    )
+    dprev = cut_lineage(dprev, eager=True)
+    parts = [dprev.select("id", "lm", "delta")]
+    for d in range(depth, 0, -1):
+        w_nodes = dprev.select(
+            F.col("id").alias("_w"), "lm",
+            F.col("sigma").alias("_sw"), F.col("delta").alias("_dw"),
+        )
+        preds = visited.filter(F.col("dist") == d - 1).select(
+            F.col("id").alias("_u"), "lm", F.col("sigma").alias("_su")
+        )
+        contrib = (
+            ue.join(w_nodes, ue["v"] == w_nodes["_w"])
+            .join(preds, (F.col("u") == F.col("_u")) & (w_nodes["lm"] == preds["lm"]))
+            .select(
+                F.col("_u").alias("id"),
+                w_nodes["lm"].alias("lm"),
+                (F.col("_su") / F.col("_sw") * (1.0 + F.col("_dw"))).alias("_c"),
             )
-            preds = visited.filter(F.col("dist") == d - 1).select(
-                F.col("id").alias("_u"), "lm", F.col("sigma").alias("_su")
-            )
-            contrib = (
-                ue.join(w_nodes, ue["v"] == w_nodes["_w"])
-                .join(preds, (F.col("u") == F.col("_u")) & (w_nodes["lm"] == preds["lm"]))
-                .select(
-                    F.col("_u").alias("id"),
-                    w_nodes["lm"].alias("lm"),
-                    (F.col("_su") / F.col("_sw") * (1.0 + F.col("_dw"))).alias("_c"),
-                )
-                .groupBy("id", "lm")
-                .agg(F.sum("_c").alias("_add"))
-            )
-            dprev = cut_lineage(
-                visited.filter(F.col("dist") == d - 1)
-                .select("id", "lm", "sigma")
-                .join(contrib, ["id", "lm"], "left")
-                .select(
-                    "id", "lm", "sigma",
-                    F.coalesce(F.col("_add"), F.lit(0.0)).alias("delta"),
-                ),
-                eager=True,
-                round_idx=d,
-            )
-            parts.append(dprev.select("id", "lm", "delta"))
-        delta = parts[0]
-        for p in parts[1:]:
-            delta = delta.unionByName(p)
+            .groupBy("id", "lm")
+            .agg(F.sum("_c").alias("_add"))
+        )
+        dprev = cut_lineage(
+            visited.filter(F.col("dist") == d - 1)
+            .select("id", "lm", "sigma")
+            .join(contrib, ["id", "lm"], "left")
+            .select(
+                "id", "lm", "sigma",
+                F.coalesce(F.col("_add"), F.lit(0.0)).alias("delta"),
+            ),
+            eager=True,
+            round_idx=d,
+        )
+        parts.append(dprev.select("id", "lm", "delta"))
+    delta = parts[0]
+    for p in parts[1:]:
+        delta = delta.unionByName(p)
     ue.unpersist()
     bc = (
         delta.filter(F.col("id") != F.col("lm"))  # a source's own BFS contributes no self-dependency
@@ -1488,7 +1444,6 @@ def random_walks(
             .drop("_rn")
         )
     nbrs = ad.groupBy("u").agg(F.sort_array(F.collect_list("v")).alias("_ns")).cache()
-    n_nbrs = nbrs.count()
 
     starts = graph.vertices.select("id")
     if start_ids is not None:
@@ -1504,33 +1459,28 @@ def random_walks(
     acc = frontier.select(
         "walk_id", F.lit(0).cast("int").alias("step"), F.col("cur").alias("id")
     )
-    from titan_spark.compute.checkpointing import scoped_shuffle_partitions
-
-    # per-step shuffles move walk-frontier-sized relations; size
-    # shuffle parallelism to the cached neighbor table for the loop
-    with scoped_shuffle_partitions(nbrs.sparkSession, n_nbrs):
-        for t in range(length):
-            draw = portable_hash64(
-                F.concat(F.lit(f"rw{seed}:"), F.col("walk_id").cast("string"), F.lit(f":{t}"))
+    for t in range(length):
+        draw = portable_hash64(
+            F.concat(F.lit(f"rw{seed}:"), F.col("walk_id").cast("string"), F.lit(f":{t}"))
+        )
+        idx = (F.pmod(draw, F.size("_ns")) + F.lit(1)).cast("int")
+        nxt = frontier.join(nbrs, frontier["cur"] == nbrs["u"]).select(
+            "walk_id", F.element_at("_ns", idx).alias("cur")
+        )
+        # periodic cut, not per-step: a short walk's plan is a bounded
+        # join chain over the cached neighbor table, and each eager cut
+        # is a full job — cutting every step made fixed overhead, not
+        # data, the dominant cost (measured ~2.5x on the sf0.1 row)
+        if (t + 1) % cut_every == 0:
+            frontier = cut_lineage(nxt, eager=True, round_idx=t)
+        else:
+            frontier = nxt
+        acc = acc.unionByName(
+            frontier.select(
+                "walk_id", F.lit(t + 1).cast("int").alias("step"), F.col("cur").alias("id")
             )
-            idx = (F.pmod(draw, F.size("_ns")) + F.lit(1)).cast("int")
-            nxt = frontier.join(nbrs, frontier["cur"] == nbrs["u"]).select(
-                "walk_id", F.element_at("_ns", idx).alias("cur")
-            )
-            # periodic cut, not per-step: a short walk's plan is a bounded
-            # join chain over the cached neighbor table, and each eager cut
-            # is a full job — cutting every step made fixed overhead, not
-            # data, the dominant cost (measured ~2.5x on the sf0.1 row)
-            if (t + 1) % cut_every == 0:
-                frontier = cut_lineage(nxt, eager=True, round_idx=t)
-            else:
-                frontier = nxt
-            acc = acc.unionByName(
-                frontier.select(
-                    "walk_id", F.lit(t + 1).cast("int").alias("step"), F.col("cur").alias("id")
-                )
-            )
-        acc = cut_lineage(acc, eager=True)
+        )
+    acc = cut_lineage(acc, eager=True)
     nbrs.unpersist()
     return acc
 
@@ -1583,7 +1533,7 @@ def strongly_connected_components(
     is left of it at convergence IS the next outer round's remaining
     set — no |V|-sized retire anti-join. Measured on the 960k-block
     sf10 bench fixture: 67.9 s (r11 form, same JVM/protocol) → 36.2 s
-    warm, bit-identical assignments (tools/prof_scc2.py).
+    warm, bit-identical assignments (374d0e5:tools/prof_scc2.py).
 
     ``strict=True`` (default) raises ``ValueError`` if ``max_outer``
     rounds run out before every vertex is assigned — a partial
@@ -1614,12 +1564,6 @@ def strongly_connected_components(
             .cache()
         )
         n_sub = sub_e.count()
-        # inner fixpoints shuffle frontier/remaining-subgraph-sized
-        # relations dozens of rounds; size shuffle parallelism to the
-        # materialized subgraph (guide SS2.2/2.4 - never raises above
-        # the session setting)
-        from titan_spark.compute.checkpointing import scoped_shuffle_partitions
-
         # r11: big-state rounds route EVERY lineage cut through the
         # parquet spill. The per-round localCheckpoint blocks of the two
         # fixpoints are reclaimed only after driver GC (ContextCleaner),
@@ -1641,129 +1585,128 @@ def strongly_connected_components(
         # threshold boundary, and a missed broadcast re-shuffles the
         # cached edge relation every round
         bcast_cap = 4_000_000
-        with scoped_shuffle_partitions(graph.vertices.sparkSession, n_sub):
-            # 1. forward max-color fixpoint (changed-frontier
-            # expansion), delta state only. Pointer jumping on colors
-            # (the WCC loop's O(log diameter) doubling) was tried here
-            # and measured SLOWER on the bench fixture (13.1 s vs
-            # 9.0 s warm): on cycle blocks most vertices re-color
-            # every round, so the two extra frontier-sized joins per
-            # round cost more than the saved rounds — reverted, noted
-            # so it is not re-tried.
-            parts: list[DataFrame] = []
-            cmap_u: DataFrame | None = None
-            frontier = remaining.select("id", F.col("id").alias("color"))
-            n_front: int | None = None
-            for _i in range(max_inner):
-                fr = frontier.select(F.col("id").alias("u"), "color")
-                if n_front is not None and n_front <= bcast_cap:
-                    fr = F.broadcast(fr)
-                cand = (
-                    sub_e.join(fr, "u")
-                    .groupBy(F.col("v").alias("id"))
-                    .agg(F.max("color").alias("_nc"))
-                )
-                if cmap_u is None:
-                    # round 0: every color is still the implicit id
-                    bumped = cand.filter(F.col("_nc") > F.col("id")).select(
-                        "id", F.col("_nc").alias("color")
-                    )
-                else:
-                    # current color = max over accepted bumps (colors
-                    # only increase), default id — the union of
-                    # checkpointed bump parts needs no per-round
-                    # dedup/rewrite
-                    bumped = (
-                        cand.join(cmap_u, "id", "left")
-                        .groupBy("id", "_nc")
-                        .agg(F.max("color").alias("_cur"))
-                        .filter(
-                            F.col("_nc") > F.coalesce(F.col("_cur"), F.col("id"))
-                        )
-                        .select("id", F.col("_nc").alias("color"))
-                    )
-                # lazy cut + full count: ONE job materializes the
-                # checkpoint and answers the empty-frontier test
-                # (limit(1).count() after an eager cut was a second
-                # job per round — ~2 jobs x rounds saved)
-                bumped = cut_lineage(
-                    bumped, eager=False, round_idx=_i, spill_period=spill
-                )
-                n_front = bumped.count()
-                if n_front == 0:
-                    break
-                parts.append(bumped)
-                cmap_u = bumped if cmap_u is None else cmap_u.unionByName(bumped)
-                frontier = bumped
-            # converged colors, resolved ONCE: cmap holds only vertices
-            # whose color exceeds their id; everyone else's color is
-            # their id (those are the roots and the singletons)
+        # 1. forward max-color fixpoint (changed-frontier
+        # expansion), delta state only. Pointer jumping on colors
+        # (the WCC loop's O(log diameter) doubling) was tried here
+        # and measured SLOWER on the bench fixture (13.1 s vs
+        # 9.0 s warm): on cycle blocks most vertices re-color
+        # every round, so the two extra frontier-sized joins per
+        # round cost more than the saved rounds — reverted, noted
+        # so it is not re-tried.
+        parts: list[DataFrame] = []
+        cmap_u: DataFrame | None = None
+        frontier = remaining.select("id", F.col("id").alias("color"))
+        n_front: int | None = None
+        for _i in range(max_inner):
+            fr = frontier.select(F.col("id").alias("u"), "color")
+            if n_front is not None and n_front <= bcast_cap:
+                fr = F.broadcast(fr)
+            cand = (
+                sub_e.join(fr, "u")
+                .groupBy(F.col("v").alias("id"))
+                .agg(F.max("color").alias("_nc"))
+            )
             if cmap_u is None:
-                cmap = remaining.select("id", F.col("id").alias("color")).limit(0)
+                # round 0: every color is still the implicit id
+                bumped = cand.filter(F.col("_nc") > F.col("id")).select(
+                    "id", F.col("_nc").alias("color")
+                )
             else:
-                cmap = cmap_u.groupBy("id").agg(F.max("color").alias("color"))
-            cmap = cut_lineage(cmap, eager=True, round_idx=ridx0, spill_period=spill)
-            # 2. backward collection from roots within each color
-            # class. members starts as every vertex whose color == id
-            # (root of its class or trivial class); the uncollected
-            # rest is exactly cmap, carried as the shrinking uncolmap
-            members0 = cut_lineage(
-                remaining.join(cmap, "id", "left_anti").select(
-                    "id", F.col("id").alias("color")
-                ),
-                eager=True,
-                round_idx=ridx0,
+                # current color = max over accepted bumps (colors
+                # only increase), default id — the union of
+                # checkpointed bump parts needs no per-round
+                # dedup/rewrite
+                bumped = (
+                    cand.join(cmap_u, "id", "left")
+                    .groupBy("id", "_nc")
+                    .agg(F.max("color").alias("_cur"))
+                    .filter(
+                        F.col("_nc") > F.coalesce(F.col("_cur"), F.col("id"))
+                    )
+                    .select("id", F.col("_nc").alias("color"))
+                )
+            # lazy cut + full count: ONE job materializes the
+            # checkpoint and answers the empty-frontier test
+            # (limit(1).count() after an eager cut was a second
+            # job per round — ~2 jobs x rounds saved)
+            bumped = cut_lineage(
+                bumped, eager=False, round_idx=_i, spill_period=spill
+            )
+            n_front = bumped.count()
+            if n_front == 0:
+                break
+            parts.append(bumped)
+            cmap_u = bumped if cmap_u is None else cmap_u.unionByName(bumped)
+            frontier = bumped
+        # converged colors, resolved ONCE: cmap holds only vertices
+        # whose color exceeds their id; everyone else's color is
+        # their id (those are the roots and the singletons)
+        if cmap_u is None:
+            cmap = remaining.select("id", F.col("id").alias("color")).limit(0)
+        else:
+            cmap = cmap_u.groupBy("id").agg(F.max("color").alias("color"))
+        cmap = cut_lineage(cmap, eager=True, round_idx=ridx0, spill_period=spill)
+        # 2. backward collection from roots within each color
+        # class. members starts as every vertex whose color == id
+        # (root of its class or trivial class); the uncollected
+        # rest is exactly cmap, carried as the shrinking uncolmap
+        members0 = cut_lineage(
+            remaining.join(cmap, "id", "left_anti").select(
+                "id", F.col("id").alias("color")
+            ),
+            eager=True,
+            round_idx=ridx0,
+            spill_period=spill,
+        )
+        uncolmap = cmap
+        bparts: list[DataFrame] = [members0]
+        bfront = members0
+        n_new: int | None = None
+        for _i in range(max_inner):
+            # predecessors u of collected v, same color class, not
+            # yet collected — "u uncollected AND color(u) == class"
+            # is ONE inner join against uncolmap
+            cand = (
+                sub_e.join(bfront.select(F.col("id").alias("v"), "color"), "v")
+                .select(F.col("u").alias("id"), "color")
+                .join(uncolmap.withColumnRenamed("color", "_uc"), "id")
+                .filter(F.col("_uc") == F.col("color"))
+                .select("id", "color")
+                .dropDuplicates(["id"])
+            )
+            new = cut_lineage(
+                cand, eager=False, round_idx=_i, spill_period=spill
+            )
+            n_new = new.count()
+            if n_new == 0:
+                break
+            bparts.append(new)
+            gone = new.select("id")
+            if n_new <= bcast_cap:
+                gone = F.broadcast(gone)
+            uncolmap = cut_lineage(
+                uncolmap.join(gone, "id", "left_anti"),
+                eager=False,
+                round_idx=(_i if big_state else None),
                 spill_period=spill,
             )
-            uncolmap = cmap
-            bparts: list[DataFrame] = [members0]
-            bfront = members0
-            n_new: int | None = None
-            for _i in range(max_inner):
-                # predecessors u of collected v, same color class, not
-                # yet collected — "u uncollected AND color(u) == class"
-                # is ONE inner join against uncolmap
-                cand = (
-                    sub_e.join(bfront.select(F.col("id").alias("v"), "color"), "v")
-                    .select(F.col("u").alias("id"), "color")
-                    .join(uncolmap.withColumnRenamed("color", "_uc"), "id")
-                    .filter(F.col("_uc") == F.col("color"))
-                    .select("id", "color")
-                    .dropDuplicates(["id"])
-                )
-                new = cut_lineage(
-                    cand, eager=False, round_idx=_i, spill_period=spill
-                )
-                n_new = new.count()
-                if n_new == 0:
-                    break
-                bparts.append(new)
-                gone = new.select("id")
-                if n_new <= bcast_cap:
-                    gone = F.broadcast(gone)
-                uncolmap = cut_lineage(
-                    uncolmap.join(gone, "id", "left_anti"),
-                    eager=False,
-                    round_idx=(_i if big_state else None),
-                    spill_period=spill,
-                )
-                bfront = new
-            members = bparts[0]
-            for p in bparts[1:]:
-                members = members.unionByName(p)
-            # 3. retire: rep = min id of each collected SCC; the
-            # still-uncollected leftover of uncolmap IS the next
-            # round's remaining set (remaining = members ⊎ uncolmap)
-            rep = members.groupBy("color").agg(F.min("id").alias("component"))
-            assigned = members.join(rep, "color").select("id", "component")
-            done = assigned if done is None else done.unionByName(assigned)
-            done = cut_lineage(done, eager=True, round_idx=ridx0, spill_period=spill)
-            remaining = cut_lineage(
-                uncolmap.select("id"),
-                eager=True,
-                round_idx=ridx0,
-                spill_period=spill,
-            )
+            bfront = new
+        members = bparts[0]
+        for p in bparts[1:]:
+            members = members.unionByName(p)
+        # 3. retire: rep = min id of each collected SCC; the
+        # still-uncollected leftover of uncolmap IS the next
+        # round's remaining set (remaining = members ⊎ uncolmap)
+        rep = members.groupBy("color").agg(F.min("id").alias("component"))
+        assigned = members.join(rep, "color").select("id", "component")
+        done = assigned if done is None else done.unionByName(assigned)
+        done = cut_lineage(done, eager=True, round_idx=ridx0, spill_period=spill)
+        remaining = cut_lineage(
+            uncolmap.select("id"),
+            eager=True,
+            round_idx=ridx0,
+            spill_period=spill,
+        )
         sub_e.unpersist()
     else:
         if remaining.limit(1).count() > 0:
@@ -1858,42 +1801,36 @@ def bidirectional_distance(
         s["frontier_n"] = 1
     best: int | None = None
     converged = False
-    from titan_spark.compute.checkpointing import scoped_shuffle_partitions
-
-    # frontier relations are ball-sized; size shuffle parallelism to
-    # the cached directed edge set for the loop's duration
-    n_fb = fwd_e.count() + (0 if bwd_e is fwd_e else bwd_e.count())
-    with scoped_shuffle_partitions(spark, n_fb):
-        for _i in range(max_iterations):
-            lf, lb = sides["f"]["level"], sides["b"]["level"]
-            if best is not None and lf + lb >= best:
-                converged = True
-                break
-            side = sides["f"] if sides["f"]["frontier_n"] <= sides["b"]["frontier_n"] else sides["b"]
-            other = sides["b"] if side is sides["f"] else sides["f"]
-            nxt = (
-                side["frontier"].join(side["edges"], side["frontier"]["id"] == side["edges"]["u"])
-                .select(F.col("v").alias("id"), (F.col("d") + 1).alias("d"))
-                .groupBy("id").agg(F.min("d").alias("d"))
-                .join(side["visited"].select("id"), "id", "left_anti")
-            )
-            # lazy cut + full count: one job materializes the frontier
-            # and answers the exhaustion test
-            nxt = cut_lineage(nxt, eager=False, round_idx=_i)
-            n = nxt.count()
-            side["level"] += 1
-            side["frontier"], side["frontier_n"] = nxt, n
-            if n == 0:
-                converged = True
-                break  # side exhausted: no shorter path remains
-            side["visited"] = cut_lineage(side["visited"].unionByName(nxt), eager=False)
-            meet = (
-                nxt.join(other["visited"].withColumnRenamed("d", "d2"), "id")
-                .agg(F.min(F.col("d") + F.col("d2")).alias("m"))
-                .collect()[0]["m"]
-            )
-            if meet is not None:
-                best = int(meet) if best is None else min(best, int(meet))
+    for _i in range(max_iterations):
+        lf, lb = sides["f"]["level"], sides["b"]["level"]
+        if best is not None and lf + lb >= best:
+            converged = True
+            break
+        side = sides["f"] if sides["f"]["frontier_n"] <= sides["b"]["frontier_n"] else sides["b"]
+        other = sides["b"] if side is sides["f"] else sides["f"]
+        nxt = (
+            side["frontier"].join(side["edges"], side["frontier"]["id"] == side["edges"]["u"])
+            .select(F.col("v").alias("id"), (F.col("d") + 1).alias("d"))
+            .groupBy("id").agg(F.min("d").alias("d"))
+            .join(side["visited"].select("id"), "id", "left_anti")
+        )
+        # lazy cut + full count: one job materializes the frontier
+        # and answers the exhaustion test
+        nxt = cut_lineage(nxt, eager=False, round_idx=_i)
+        n = nxt.count()
+        side["level"] += 1
+        side["frontier"], side["frontier_n"] = nxt, n
+        if n == 0:
+            converged = True
+            break  # side exhausted: no shorter path remains
+        side["visited"] = cut_lineage(side["visited"].unionByName(nxt), eager=False)
+        meet = (
+            nxt.join(other["visited"].withColumnRenamed("d", "d2"), "id")
+            .agg(F.min(F.col("d") + F.col("d2")).alias("m"))
+            .collect()[0]["m"]
+        )
+        if meet is not None:
+            best = int(meet) if best is None else min(best, int(meet))
     if not converged and not (
         best is not None
         and sides["f"]["level"] + sides["b"]["level"] >= best
@@ -1952,57 +1889,57 @@ def feature_propagation(
         ad = ad.unionByName(p)
     # message flows v -> u (u aggregates its neighbors' values)
     ad = ad.filter(F.col("u") != F.col("v")).dropDuplicates(["u", "v"]).cache()
-    n_ad = ad.count()
     state = graph.vertices.select(
         "id", F.col(feature_col).cast("double").alias("f0")
     )
     state = cut_lineage(state, eager=True)
-    from titan_spark.compute.checkpointing import scoped_shuffle_partitions
-
-    # hop shuffles move vertex-feature/edge-sized relations; scope
-    # shuffle parallelism to the cached adjacency (fixed-round loop)
-    with scoped_shuffle_partitions(ad.sparkSession, n_ad):
-        for t in range(hops):
-            prev, nxt = f"f{t}", f"f{t + 1}"
-            msgs = (
-                ad.join(state.select(F.col("id").alias("v"), F.col(prev).alias("_x")), "v")
-                .groupBy(F.col("u").alias("id"))
-                .agg(aggs[agg]("_x").alias("_agg"), F.count("_x").alias("_n"))
+    for t in range(hops):
+        prev, nxt = f"f{t}", f"f{t + 1}"
+        msgs = (
+            ad.join(state.select(F.col("id").alias("v"), F.col(prev).alias("_x")), "v")
+            # a double sum depends on its order, and the cent rounding
+            # below turns a 1-ulp difference into a 1-cent one: each
+            # vertex sums its neighbors in v order inside one partition,
+            # whatever the shuffle's partition count
+            .repartition("u")
+            .sortWithinPartitions("u", "v")
+            .groupBy(F.col("u").alias("id"))
+            .agg(aggs[agg]("_x").alias("_agg"), F.count("_x").alias("_n"))
+        )
+        if not include_self:
+            with_self = F.col("_agg")
+        elif agg == "mean":
+            with_self = (F.col("_agg") * F.col("_n") + F.col(prev)) / (F.col("_n") + 1)
+        elif agg == "sum":
+            with_self = F.col("_agg") + F.col(prev)
+        elif agg == "min":
+            with_self = F.least("_agg", prev)
+        else:
+            with_self = F.greatest("_agg", prev)
+        # NULL handling: no neighbor signal carries the own value
+        # forward; a NULL own value (e.g. a label without the feature)
+        # takes the neighbor aggregate alone instead of poisoning it
+        mixed = (
+            F.when(F.col("_agg").isNull(), F.col(prev))
+            .when(F.col(prev).isNull(), F.col("_agg"))
+            .otherwise(with_self)
+        )
+        state = cut_lineage(
+            state.join(msgs, "id", "left")
+            .select(
+                "id",
+                *[f"f{j}" for j in range(t + 1)],
+                # floor-based cent rounding, NOT F.round: Spark rounds
+                # via the decimal string (HALF_UP) while SQL engines
+                # round the binary double, and self-mix averages land
+                # exactly on half-cents — floor(x*100+0.5)/100 is pure
+                # double arithmetic, bit-identical on identical inputs
+                (F.floor(mixed * 100.0 + F.lit(0.5)) / 100.0).alias(nxt),
             )
-            if not include_self:
-                with_self = F.col("_agg")
-            elif agg == "mean":
-                with_self = (F.col("_agg") * F.col("_n") + F.col(prev)) / (F.col("_n") + 1)
-            elif agg == "sum":
-                with_self = F.col("_agg") + F.col(prev)
-            elif agg == "min":
-                with_self = F.least("_agg", prev)
-            else:
-                with_self = F.greatest("_agg", prev)
-            # NULL handling: no neighbor signal carries the own value
-            # forward; a NULL own value (e.g. a label without the feature)
-            # takes the neighbor aggregate alone instead of poisoning it
-            mixed = (
-                F.when(F.col("_agg").isNull(), F.col(prev))
-                .when(F.col(prev).isNull(), F.col("_agg"))
-                .otherwise(with_self)
-            )
-            state = cut_lineage(
-                state.join(msgs, "id", "left")
-                .select(
-                    "id",
-                    *[f"f{j}" for j in range(t + 1)],
-                    # floor-based cent rounding, NOT F.round: Spark rounds
-                    # via the decimal string (HALF_UP) while SQL engines
-                    # round the binary double, and self-mix averages land
-                    # exactly on half-cents — floor(x*100+0.5)/100 is pure
-                    # double arithmetic, bit-identical on identical inputs
-                    (F.floor(mixed * 100.0 + F.lit(0.5)) / 100.0).alias(nxt),
-                )
-                ,
-                eager=True,
-                round_idx=t,
-            )
+            ,
+            eager=True,
+            round_idx=t,
+        )
     ad.unpersist()
     return state
 
@@ -2193,28 +2130,24 @@ def k_hop_subgraph(
     for p in parts[1:]:
         ad = ad.unionByName(p)
     ad = ad.dropDuplicates(["u", "v"]).cache()
-    n_ad = ad.count()
     spark = graph.vertices.sparkSession
     seen = cut_lineage(
         spark.createDataFrame([(int(s),) for s in seed_ids], "id bigint"), eager=True
     )
     frontier = seen
-    from titan_spark.compute.checkpointing import scoped_shuffle_partitions
-
-    with scoped_shuffle_partitions(spark, n_ad):
-        for i in range(k):
-            nxt = (
-                frontier.join(ad, frontier["id"] == ad["u"])
-                .select(F.col("v").alias("id"))
-                .dropDuplicates()
-                .join(seen, "id", "left_anti")
-            )
-            # lazy cut + full count: one job per round instead of two
-            nxt = cut_lineage(nxt, eager=False, round_idx=i)
-            if nxt.count() == 0:
-                break
-            seen = cut_lineage(seen.unionByName(nxt), eager=False)
-            frontier = nxt
+    for i in range(k):
+        nxt = (
+            frontier.join(ad, frontier["id"] == ad["u"])
+            .select(F.col("v").alias("id"))
+            .dropDuplicates()
+            .join(seen, "id", "left_anti")
+        )
+        # lazy cut + full count: one job per round instead of two
+        nxt = cut_lineage(nxt, eager=False, round_idx=i)
+        if nxt.count() == 0:
+            break
+        seen = cut_lineage(seen.unionByName(nxt), eager=False)
+        frontier = nxt
     ad.unpersist()
     v = graph.vertices.join(seen, "id", "left_semi")
     ee = graph.edges.join(
@@ -2252,7 +2185,6 @@ def hits(
     if edge_labels:
         e = e.filter(F.col("label").isin(list(edge_labels)))
     ed = e.select("src", "dst").dropDuplicates().cache()
-    n_ed = ed.count()
 
     def _l2_normalize(raw: DataFrame, col: str) -> DataFrame:
         norm = raw.agg(
@@ -2270,26 +2202,23 @@ def hits(
     hub = graph.vertices.select("id", F.lit(1.0).alias("h"))
     hub = cut_lineage(hub, eager=True)
     auth = None
-    from titan_spark.compute.checkpointing import scoped_shuffle_partitions
-
-    with scoped_shuffle_partitions(ed.sparkSession, n_ed):
-        for t in range(iterations):
-            araw = (
-                ed.join(hub.select(F.col("id").alias("src"), "h"), "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("h").alias("a"))
-            )
-            # half-step cuts are lazy: the round's single eager hub cut
-            # materializes the whole round (3 jobs/round -> 1)
-            araw = cut_lineage(araw, eager=False, round_idx=t)
-            auth = _l2_normalize(araw, "a")
-            hraw = (
-                ed.join(auth.select(F.col("id").alias("dst"), "a"), "dst")
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.sum("a").alias("h"))
-            )
-            hraw = cut_lineage(hraw, eager=False, round_idx=t)
-            hub = cut_lineage(_l2_normalize(hraw, "h"), eager=True)
+    for t in range(iterations):
+        araw = (
+            ed.join(hub.select(F.col("id").alias("src"), "h"), "src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum("h").alias("a"))
+        )
+        # half-step cuts are lazy: the round's single eager hub cut
+        # materializes the whole round (3 jobs/round -> 1)
+        araw = cut_lineage(araw, eager=False, round_idx=t)
+        auth = _l2_normalize(araw, "a")
+        hraw = (
+            ed.join(auth.select(F.col("id").alias("dst"), "a"), "dst")
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.sum("a").alias("h"))
+        )
+        hraw = cut_lineage(hraw, eager=False, round_idx=t)
+        hub = cut_lineage(_l2_normalize(hraw, "h"), eager=True)
     ed.unpersist()
     return (
         graph.vertices.select("id")
@@ -2620,156 +2549,150 @@ def louvain(
     # mapping from original vertex id to current-level supervertex
     mapping = graph.vertices.select(F.col("id"), F.col("id").alias("node"))
 
-    from titan_spark.compute.checkpointing import scoped_shuffle_partitions
-
     for _level in range(levels):
         cur = cut_lineage(cur, eager=True)
-        # one combined scalar pass: total weight for m2 plus the edge
-        # count that sizes the level's shuffle parallelism
-        m_row = cur.agg(F.sum("w"), F.count(F.lit(1))).first()
-        if not m_row[0]:
+        total_w = cur.agg(F.sum("w")).first()[0]
+        if not total_w:
             break
-        m2 = 2.0 * float(m_row[0])
-        n_cur = int(m_row[1])
+        m2 = 2.0 * float(total_w)
 
-        with scoped_shuffle_partitions(cur.sparkSession, n_cur):
-            nodes = (
-                cur.select(F.col("a").alias("node"))
-                .unionByName(cur.select(F.col("b").alias("node")))
-                .dropDuplicates(["node"])
-            )
-            # weighted degree: proper edges count at both ends; a self-loop
-            # (the contracted intra-community weight) counts TWICE, so a
-            # supervertex's k equals the d_c of the community it replaced
-            # and Q is preserved across levels
-            proper = cur.filter(F.col("a") != F.col("b"))
-            loops = cur.filter(F.col("a") == F.col("b"))
-            k = (
-                proper.select(F.col("a").alias("node"), "w")
-                .unionAll(proper.select(F.col("b").alias("node"), "w"))
-                .unionAll(loops.select(F.col("a").alias("node"), (2.0 * F.col("w")).alias("w")))
-                .groupBy("node")
-                .agg(F.sum("w").alias("k"))
-            )
-            comm = nodes.select("node", F.col("node").alias("community"))
+        nodes = (
+            cur.select(F.col("a").alias("node"))
+            .unionByName(cur.select(F.col("b").alias("node")))
+            .dropDuplicates(["node"])
+        )
+        # weighted degree: proper edges count at both ends; a self-loop
+        # (the contracted intra-community weight) counts TWICE, so a
+        # supervertex's k equals the d_c of the community it replaced
+        # and Q is preserved across levels
+        proper = cur.filter(F.col("a") != F.col("b"))
+        loops = cur.filter(F.col("a") == F.col("b"))
+        k = (
+            proper.select(F.col("a").alias("node"), "w")
+            .unionAll(proper.select(F.col("b").alias("node"), "w"))
+            .unionAll(loops.select(F.col("a").alias("node"), (2.0 * F.col("w")).alias("w")))
+            .groupBy("node")
+            .agg(F.sum("w").alias("k"))
+        )
+        comm = nodes.select("node", F.col("node").alias("community"))
 
-            for _round in range(rounds_per_level):
-                comm = cut_lineage(comm, eager=True)
-                sig_tot = (
-                    k.join(comm, "node")
-                    .groupBy("community")
-                    .agg(F.sum("k").alias("sig"))
-                )
-                # k_in(v, c): weight from v to neighbors currently in c
-                half = proper.select("a", "b", "w").unionAll(
-                    proper.select(F.col("b").alias("a"), F.col("a").alias("b"), "w")
-                )
-                kin = (
-                    half.join(
-                        comm.select(F.col("node").alias("b"), F.col("community").alias("c")),
-                        "b",
-                    )
-                    .groupBy(F.col("a").alias("node"), "c")
-                    .agg(F.sum("w").alias("kin"))
-                )
-                # every vertex must have its OWN community as a candidate
-                # even when it has no intra-community edges (kin 0) —
-                # without the explicit stay row a vertex with only
-                # cross-community neighbors is forced into its best
-                # neighbor at NEGATIVE gain (observed: contracted
-                # supervertices pairwise-merging across bridges)
-                stay = comm.select(
-                    "node", F.col("community").alias("c"), F.lit(0.0).alias("kin")
-                )
-                kin = (
-                    kin.unionByName(stay)
-                    .groupBy("node", "c")
-                    .agg(F.max("kin").alias("kin"))
-                )
-                csize = comm.groupBy("community").agg(
-                    F.count(F.lit(1)).alias("csize")
-                )
-                cand = (
-                    kin.join(comm, "node")
-                    .join(k, "node")
-                    .join(sig_tot.select(F.col("community").alias("c"), "sig"), "c")
-                    .join(csize.select(F.col("community").alias("c"), F.col("csize").alias("size_c")), "c")
-                    .join(csize.withColumnRenamed("csize", "size_own"), "community")
-                    .select(
-                        "node",
-                        "community",
-                        "c",
-                        # gain of v sitting in c, with v's own mass removed
-                        (
-                            F.col("kin")
-                            - F.col("k")
-                            * (F.col("sig") - F.when(F.col("c") == F.col("community"), F.col("k")).otherwise(F.lit(0.0)))
-                            / F.lit(m2)
-                        ).alias("gain"),
-                        "size_c",
-                        "size_own",
-                    )
-                    # Grappolo's singleton minimum-label heuristic: two
-                    # singleton vertices whose best moves target each other
-                    # would swap communities every synchronous round forever;
-                    # allowing only the smaller-id direction breaks the
-                    # symmetry (the larger id joins, the smaller stays)
-                    .filter(
-                        (F.col("c") == F.col("community"))
-                        | ~(
-                            (F.col("size_own") == 1)
-                            & (F.col("size_c") == 1)
-                            & (F.col("c") > F.col("community"))
-                        )
-                    )
-                )
-                # ties: prefer staying put (damps synchronous churn), then
-                # the smaller community id for determinism
-                wnd = Window.partitionBy("node").orderBy(
-                    F.col("gain").desc(),
-                    (F.col("c") != F.col("community")).asc(),
-                    F.col("c").asc(),
-                )
-                best = (
-                    cand.withColumn("rn", F.row_number().over(wnd))
-                    .filter(F.col("rn") == 1)
-                    .select("node", F.col("c").alias("new_community"))
-                )
-                comm = (
-                    comm.join(best, "node", "left")
-                    .select(
-                        "node",
-                        F.coalesce("new_community", "community").alias("community"),
-                    )
-                )
-
-            # canonical community id = min member node id at this level
-            canon = comm.groupBy("community").agg(F.min("node").alias("canon"))
-            comm = comm.join(canon, "community").select("node", F.col("canon").alias("community"))
-            # LEFT join: comm only covers edge endpoints, so a vertex with
-            # no (label-filtered) edges would vanish under an inner join —
-            # isolated vertices stay as their own singleton community,
-            # matching standard community-detection output contracts
-            mapping = (
-                mapping.join(
-                    comm.withColumnRenamed("node", "_n"),
-                    mapping.node == F.col("_n"),
-                    "left",
-                )
-                .select("id", F.coalesce("community", "node").alias("node"))
+        for _round in range(rounds_per_level):
+            comm = cut_lineage(comm, eager=True)
+            sig_tot = (
+                k.join(comm, "node")
+                .groupBy("community")
+                .agg(F.sum("k").alias("sig"))
             )
-            # contract: communities become vertices, edge weights sum
-            cur = (
-                cur.join(comm.select(F.col("node").alias("a"), F.col("community").alias("ca")), "a")
-                .join(comm.select(F.col("node").alias("b"), F.col("community").alias("cb")), "b")
+            # k_in(v, c): weight from v to neighbors currently in c
+            half = proper.select("a", "b", "w").unionAll(
+                proper.select(F.col("b").alias("a"), F.col("a").alias("b"), "w")
+            )
+            kin = (
+                half.join(
+                    comm.select(F.col("node").alias("b"), F.col("community").alias("c")),
+                    "b",
+                )
+                .groupBy(F.col("a").alias("node"), "c")
+                .agg(F.sum("w").alias("kin"))
+            )
+            # every vertex must have its OWN community as a candidate
+            # even when it has no intra-community edges (kin 0) —
+            # without the explicit stay row a vertex with only
+            # cross-community neighbors is forced into its best
+            # neighbor at NEGATIVE gain (observed: contracted
+            # supervertices pairwise-merging across bridges)
+            stay = comm.select(
+                "node", F.col("community").alias("c"), F.lit(0.0).alias("kin")
+            )
+            kin = (
+                kin.unionByName(stay)
+                .groupBy("node", "c")
+                .agg(F.max("kin").alias("kin"))
+            )
+            csize = comm.groupBy("community").agg(
+                F.count(F.lit(1)).alias("csize")
+            )
+            cand = (
+                kin.join(comm, "node")
+                .join(k, "node")
+                .join(sig_tot.select(F.col("community").alias("c"), "sig"), "c")
+                .join(csize.select(F.col("community").alias("c"), F.col("csize").alias("size_c")), "c")
+                .join(csize.withColumnRenamed("csize", "size_own"), "community")
                 .select(
-                    F.least("ca", "cb").alias("a"),
-                    F.greatest("ca", "cb").alias("b"),
-                    "w",
+                    "node",
+                    "community",
+                    "c",
+                    # gain of v sitting in c, with v's own mass removed
+                    (
+                        F.col("kin")
+                        - F.col("k")
+                        * (F.col("sig") - F.when(F.col("c") == F.col("community"), F.col("k")).otherwise(F.lit(0.0)))
+                        / F.lit(m2)
+                    ).alias("gain"),
+                    "size_c",
+                    "size_own",
                 )
-                .groupBy("a", "b")
-                .agg(F.sum("w").alias("w"))
+                # Grappolo's singleton minimum-label heuristic: two
+                # singleton vertices whose best moves target each other
+                # would swap communities every synchronous round forever;
+                # allowing only the smaller-id direction breaks the
+                # symmetry (the larger id joins, the smaller stays)
+                .filter(
+                    (F.col("c") == F.col("community"))
+                    | ~(
+                        (F.col("size_own") == 1)
+                        & (F.col("size_c") == 1)
+                        & (F.col("c") > F.col("community"))
+                    )
+                )
             )
+            # ties: prefer staying put (damps synchronous churn), then
+            # the smaller community id for determinism
+            wnd = Window.partitionBy("node").orderBy(
+                F.col("gain").desc(),
+                (F.col("c") != F.col("community")).asc(),
+                F.col("c").asc(),
+            )
+            best = (
+                cand.withColumn("rn", F.row_number().over(wnd))
+                .filter(F.col("rn") == 1)
+                .select("node", F.col("c").alias("new_community"))
+            )
+            comm = (
+                comm.join(best, "node", "left")
+                .select(
+                    "node",
+                    F.coalesce("new_community", "community").alias("community"),
+                )
+            )
+
+        # canonical community id = min member node id at this level
+        canon = comm.groupBy("community").agg(F.min("node").alias("canon"))
+        comm = comm.join(canon, "community").select("node", F.col("canon").alias("community"))
+        # LEFT join: comm only covers edge endpoints, so a vertex with
+        # no (label-filtered) edges would vanish under an inner join —
+        # isolated vertices stay as their own singleton community,
+        # matching standard community-detection output contracts
+        mapping = (
+            mapping.join(
+                comm.withColumnRenamed("node", "_n"),
+                mapping.node == F.col("_n"),
+                "left",
+            )
+            .select("id", F.coalesce("community", "node").alias("node"))
+        )
+        # contract: communities become vertices, edge weights sum
+        cur = (
+            cur.join(comm.select(F.col("node").alias("a"), F.col("community").alias("ca")), "a")
+            .join(comm.select(F.col("node").alias("b"), F.col("community").alias("cb")), "b")
+            .select(
+                F.least("ca", "cb").alias("a"),
+                F.greatest("ca", "cb").alias("b"),
+                "w",
+            )
+            .groupBy("a", "b")
+            .agg(F.sum("w").alias("w"))
+        )
 
     return mapping.select("id", F.col("node").alias("community"))
 
@@ -2820,11 +2743,6 @@ def minimum_spanning_forest(
     elected relations, each already lineage-cut), never on the
     driver.
     """
-    from titan_spark.compute.checkpointing import (
-        cut_lineage,
-        scoped_shuffle_partitions,
-    )
-
     e0 = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
@@ -2860,116 +2778,115 @@ def minimum_spanning_forest(
         )
 
     forest_rounds = []
-    with scoped_shuffle_partitions(spark, n_live):
-        rounds = 0
-        while n_live > 0 and rounds < max_iterations:
-            rounds += 1
-            # (1) election: min (w, oa, ob) incident edge per component,
-            # remembering the component on the far side for contraction
-            pick = F.struct("w", "oa", "ob", F.col("other").alias("other"))
-            inc = live.select(
-                F.col("ca").alias("c"), "w", "oa", "ob",
-                F.col("cb").alias("other"),
-            ).unionByName(
-                live.select(
-                    F.col("cb").alias("c"), "w", "oa", "ob",
-                    F.col("ca").alias("other"),
-                )
+    rounds = 0
+    while n_live > 0 and rounds < max_iterations:
+        rounds += 1
+        # (1) election: min (w, oa, ob) incident edge per component,
+        # remembering the component on the far side for contraction
+        pick = F.struct("w", "oa", "ob", F.col("other").alias("other"))
+        inc = live.select(
+            F.col("ca").alias("c"), "w", "oa", "ob",
+            F.col("cb").alias("other"),
+        ).unionByName(
+            live.select(
+                F.col("cb").alias("c"), "w", "oa", "ob",
+                F.col("ca").alias("other"),
             )
-            elected = (
-                inc.groupBy("c")
-                .agg(F.min(pick).alias("e"))
-                .select(
-                    "c",
-                    F.col("e.w").alias("w"),
-                    F.col("e.oa").alias("oa"),
-                    F.col("e.ob").alias("ob"),
-                    F.col("e.other").alias("parent"),
-                )
-            )
-            # lazy cut: the rooting pass's first jump-probe count
-            # materializes it — one fewer job per Borůvka round
-            # (Change-1 pattern; the spill path stays eager by nature)
-            elected = cut_lineage(elected, eager=False, round_idx=rounds)
-            forest_rounds.append(
-                elected.select("oa", "ob", "w").dropDuplicates(["oa", "ob"])
-            )
-            # (2) break mutual-choice 2-cycles: the smaller label roots
-            par = elected.select("c", "parent")
-            pp = par.select(
-                F.col("c").alias("parent"), F.col("parent").alias("gp")
-            )
-            par = par.join(pp, "parent", "left").select(
+        )
+        elected = (
+            inc.groupBy("c")
+            .agg(F.min(pick).alias("e"))
+            .select(
                 "c",
-                F.when(
-                    (F.col("gp") == F.col("c"))
-                    & (F.col("c") < F.col("parent")),
-                    F.col("c"),
-                )
-                .otherwise(F.col("parent"))
-                .alias("parent"),
+                F.col("e.w").alias("w"),
+                F.col("e.oa").alias("oa"),
+                F.col("e.ob").alias("ob"),
+                F.col("e.other").alias("parent"),
             )
-            # pointer-jump to the roots: four chained jumps per
-            # materialization (parent⁴), exponential across passes
-            for _ in range(max_iterations):
-                j = par
-                for _k in range(4):
-                    j = _jump(j, par)
-                # lazy cut + one count that BOTH materializes the
-                # jumped table and answers the convergence probe —
-                # the old eager cut + separate limit(1).count() was
-                # two jobs per pass (Change-1 pattern)
-                j = cut_lineage(j, eager=False, round_idx=rounds)
-                moved = (
-                    j.alias("x")
-                    .join(
-                        j.alias("y"), F.col("x.parent") == F.col("y.c")
-                    )
-                    .filter(F.col("y.parent") != F.col("y.c"))
-                    .limit(1)
-                    .count()
-                )
-                par = j
-                if moved == 0:
-                    break
-            # (3) relabel live edges to the new roots and contract
-            ra = par.select(F.col("c").alias("ca"), F.col("parent").alias("na"))
-            rb = par.select(F.col("c").alias("cb"), F.col("parent").alias("nb"))
-            live = (
-                live.join(ra, "ca", "left")
-                .join(rb, "cb", "left")
-                .select(
-                    F.coalesce("na", "ca").alias("ca"),
-                    F.coalesce("nb", "cb").alias("cb"),
-                    "w",
-                    "oa",
-                    "ob",
-                )
-                .filter(F.col("ca") != F.col("cb"))
+        )
+        # lazy cut: the rooting pass's first jump-probe count
+        # materializes it — one fewer job per Borůvka round
+        # (Change-1 pattern; the spill path stays eager by nature)
+        elected = cut_lineage(elected, eager=False, round_idx=rounds)
+        forest_rounds.append(
+            elected.select("oa", "ob", "w").dropDuplicates(["oa", "ob"])
+        )
+        # (2) break mutual-choice 2-cycles: the smaller label roots
+        par = elected.select("c", "parent")
+        pp = par.select(
+            F.col("c").alias("parent"), F.col("parent").alias("gp")
+        )
+        par = par.join(pp, "parent", "left").select(
+            "c",
+            F.when(
+                (F.col("gp") == F.col("c"))
+                & (F.col("c") < F.col("parent")),
+                F.col("c"),
             )
-            # spill_period=1: live is the one CROSS-ROUND carrier, and
-            # localCheckpoint PRESERVES Catalyst sizeInBytes stats, which
-            # the size-only join estimator multiplies across the round's
-            # ~10-join tree (cartesian worst case) — carried stats grow
-            # ~20x in BIT LENGTH per round, and by round 5 the driver
-            # spends minutes in BigInteger multiplies inside stats
-            # estimation (measured: 385 -> 8052 bits in one round).
-            # Routing live through parquet resets its stats to the real
-            # file size every round, bounding every plan's stats for
-            # good. Same escape valve as k-core's every-round spill,
-            # different reason (memory there, driver-side stats here).
-            live = cut_lineage(
-                live, eager=True, round_idx=rounds, spill_period=1
+            .otherwise(F.col("parent"))
+            .alias("parent"),
+        )
+        # pointer-jump to the roots: four chained jumps per
+        # materialization (parent⁴), exponential across passes
+        for _ in range(max_iterations):
+            j = par
+            for _k in range(4):
+                j = _jump(j, par)
+            # lazy cut + one count that BOTH materializes the
+            # jumped table and answers the convergence probe —
+            # the old eager cut + separate limit(1).count() was
+            # two jobs per pass (Change-1 pattern)
+            j = cut_lineage(j, eager=False, round_idx=rounds)
+            moved = (
+                j.alias("x")
+                .join(
+                    j.alias("y"), F.col("x.parent") == F.col("y.c")
+                )
+                .filter(F.col("y.parent") != F.col("y.c"))
+                .limit(1)
+                .count()
             )
-            n_live = live.count()
-        if n_live > 0:
-            import warnings
+            par = j
+            if moved == 0:
+                break
+        # (3) relabel live edges to the new roots and contract
+        ra = par.select(F.col("c").alias("ca"), F.col("parent").alias("na"))
+        rb = par.select(F.col("c").alias("cb"), F.col("parent").alias("nb"))
+        live = (
+            live.join(ra, "ca", "left")
+            .join(rb, "cb", "left")
+            .select(
+                F.coalesce("na", "ca").alias("ca"),
+                F.coalesce("nb", "cb").alias("cb"),
+                "w",
+                "oa",
+                "ob",
+            )
+            .filter(F.col("ca") != F.col("cb"))
+        )
+        # spill_period=1: live is the one CROSS-ROUND carrier, and
+        # localCheckpoint PRESERVES Catalyst sizeInBytes stats, which
+        # the size-only join estimator multiplies across the round's
+        # ~10-join tree (cartesian worst case) — carried stats grow
+        # ~20x in BIT LENGTH per round, and by round 5 the driver
+        # spends minutes in BigInteger multiplies inside stats
+        # estimation (measured: 385 -> 8052 bits in one round).
+        # Routing live through parquet resets its stats to the real
+        # file size every round, bounding every plan's stats for
+        # good. Same escape valve as k-core's every-round spill,
+        # different reason (memory there, driver-side stats here).
+        live = cut_lineage(
+            live, eager=True, round_idx=rounds, spill_period=1
+        )
+        n_live = live.count()
+    if n_live > 0:
+        import warnings
 
-            warnings.warn(
-                f"minimum_spanning_forest did not converge within "
-                f"{max_iterations} rounds; the forest may be incomplete.",
-                RuntimeWarning,
-            )
+        warnings.warn(
+            f"minimum_spanning_forest did not converge within "
+            f"{max_iterations} rounds; the forest may be incomplete.",
+            RuntimeWarning,
+        )
     if not forest_rounds:
         # zero-partition frame: a createDataFrame([]) list would be a
         # Python RDD whose first query starts Python workers
@@ -3104,7 +3021,6 @@ def node2vec_walks(
         "rn",
         F.row_number().over(Window.partitionBy("u").orderBy(F.col("v").asc())),
     ).cache()
-    n_adj = adr.count()
     degs = adr.groupBy("u").agg(F.max("rn").cast("long").alias("_deg")).cache()
 
     starts = graph.vertices.select("id")
@@ -3117,215 +3033,207 @@ def node2vec_walks(
     acc = frontier.select(
         "walk_id", F.lit(0).cast("int").alias("step"), F.col("cur").alias("id")
     )
-    from titan_spark.compute.checkpointing import scoped_shuffle_partitions
-
-    # per-step shuffles move walk-frontier/adjacency-sized relations;
-    # size shuffle parallelism to the materialized adjacency instead of
-    # paying rounds x session-partitions near-empty task launches
-    # (guide SS2.2/2.4 - never raises above the session setting, so
-    # corpus-scale graphs keep full parallelism)
-    with scoped_shuffle_partitions(graph.vertices.sparkSession, n_adj):
-        for t in range(length):
-            adx = adr.select(
-                F.col("u").alias("_xu"),
-                F.col("rn").alias("_xrn"),
-                F.col("v").alias("_xv"),
+    for t in range(length):
+        adx = adr.select(
+            F.col("u").alias("_xu"),
+            F.col("rn").alias("_xrn"),
+            F.col("v").alias("_xv"),
+        )
+        prs = adr.select(F.col("u").alias("_pu"), F.col("v").alias("_pv"))
+        base_draw = portable_hash64(
+            F.concat(
+                F.lit(f"n2v{seed}:"),
+                F.col("walk_id").cast("string"),
+                F.lit(f":{t}"),
             )
-            prs = adr.select(F.col("u").alias("_pu"), F.col("v").alias("_pv"))
-            base_draw = portable_hash64(
-                F.concat(
-                    F.lit(f"n2v{seed}:"),
-                    F.col("walk_id").cast("string"),
-                    F.lit(f":{t}"),
-                )
+        )
+        if t == 0:
+            # uniform first step: one indexed lookup, no arrays
+            f1 = frontier.join(degs, frontier["cur"] == degs["u"]).select(
+                "walk_id", "cur", "_deg"
             )
-            if t == 0:
-                # uniform first step: one indexed lookup, no arrays
-                f1 = frontier.join(degs, frontier["cur"] == degs["u"]).select(
-                    "walk_id", "cur", "_deg"
-                )
-                idx = (F.pmod(base_draw, F.col("_deg")) + F.lit(1)).cast("int")
-                nxt = (
-                    f1.withColumn("_idx", idx)
-                    .join(
-                        adx,
-                        (F.col("cur") == F.col("_xu"))
-                        & (F.col("_idx") == F.col("_xrn")),
-                    )
-                    .select(
-                        "walk_id",
-                        F.col("cur").alias("_p"),
-                        F.col("_xv").alias("_c"),
-                    )
-                    .select(
-                        "walk_id",
-                        F.col("_p").alias("prev"),
-                        F.col("_c").alias("cur"),
-                    )
-                )
-            else:
-                f1 = frontier.join(degs, frontier["cur"] == degs["u"]).select(
-                    "walk_id", "prev", "cur", "_deg"
-                )
-                # --- rejection trials: constant-width rows per walk;
-                # candidate by composite-key (u, rn) lookup, acceptance
-                # by an independent hash vs the weight class. r11 prune:
-                # a trial whose acceptance draw falls under wmin accepts
-                # ANY candidate class (every class weight is >= wmin), so
-                # the first such trial j0 — computable from hashes alone,
-                # before any join — always wins over later trials in the
-                # min-j pick. Explode only j <= j0: expected wmax/wmin
-                # rows per walk (2 at the 2:2:1 defaults) instead of
-                # `trials` (16), an 8x cut in both per-step join volumes.
-                # Picks are bit-identical: discarded trials provably
-                # cannot win; walks with no auto-accepting trial keep all
-                # `trials` rows, so the fallback arm is reached exactly
-                # as before.
-                wmin = min(wr, wi, wo)
-                acc_mods = F.array(
-                    *[
-                        F.pmod(
-                            portable_hash64(
-                                F.concat(
-                                    F.lit(f"n2va{seed}:"),
-                                    F.col("walk_id").cast("string"),
-                                    F.lit(f":{t}:{j}"),
-                                )
-                            ),
-                            F.lit(wmax).cast("long"),
-                        )
-                        for j in range(int(trials))
-                    ]
-                )
-                j0 = F.array_position(
-                    F.transform(acc_mods, lambda x: x < F.lit(wmin).cast("long")),
-                    True,
-                )
-                j_hi = F.when(j0 > 0, (j0 - 1).cast("int")).otherwise(
-                    F.lit(int(trials) - 1)
-                )
-                tr = f1.withColumn("_jhi", j_hi).select(
-                    "walk_id",
-                    "prev",
-                    "cur",
-                    "_deg",
-                    F.explode(F.sequence(F.lit(0), F.col("_jhi"))).alias("_j"),
-                )
-                h_pick = portable_hash64(
-                    F.concat(
-                        F.lit(f"n2v{seed}:"),
-                        F.col("walk_id").cast("string"),
-                        F.lit(f":{t}:"),
-                        F.col("_j").cast("string"),
-                    )
-                )
-                h_acc = portable_hash64(
-                    F.concat(
-                        F.lit(f"n2va{seed}:"),
-                        F.col("walk_id").cast("string"),
-                        F.lit(f":{t}:"),
-                        F.col("_j").cast("string"),
-                    )
-                )
-                tr = tr.withColumn(
-                    "_idx", (F.pmod(h_pick, F.col("_deg")) + F.lit(1)).cast("int")
-                ).withColumn("_u", F.pmod(h_acc, F.lit(wmax).cast("long")))
-                cand = tr.join(
+            idx = (F.pmod(base_draw, F.col("_deg")) + F.lit(1)).cast("int")
+            nxt = (
+                f1.withColumn("_idx", idx)
+                .join(
                     adx,
-                    (tr["cur"] == adx["_xu"]) & (tr["_idx"] == adx["_xrn"]),
-                ).select(
-                    "walk_id", "prev", "cur", "_j", "_u",
-                    F.col("_xv").alias("_x"),
+                    (F.col("cur") == F.col("_xu"))
+                    & (F.col("_idx") == F.col("_xrn")),
                 )
-                cand = cand.join(
-                    prs,
-                    (cand["prev"] == prs["_pu"]) & (cand["_x"] == prs["_pv"]),
-                    "left",
-                ).select(
-                    "walk_id", "prev", "cur", "_j", "_u", "_x",
-                    F.col("_pv").isNotNull().alias("_inp"),
-                )
-                w_x = (
-                    F.when(F.col("_x") == F.col("prev"), wr_l)
-                    .when(F.col("_inp"), wi_l)
-                    .otherwise(wo_l)
-                )
-                accepted = (
-                    cand.filter(F.col("_u") < w_x)
-                    .groupBy("walk_id", "cur")
-                    .agg(F.min(F.struct("_j", "_x")).alias("_w"))
-                    .select(
-                        "walk_id",
-                        F.col("cur").alias("_p"),
-                        F.col("_w._x").alias("_c"),
-                    )
-                )
-                # --- exact bounded escape for walks whose every trial
-                # rejected (probability ≤ (1 − wmin/wmax)^trials per
-                # step): class-ordered cumulative pick, replayed as ROWS
-                # (explode N(cur), classify each candidate by one pair
-                # join, rank by (class, id), take the candidate whose
-                # cumulative-weight window brackets r) — exact ∝ w(x), no
-                # neighbor arrays anywhere.
-                fb = f1.join(
-                    accepted.select("walk_id"), "walk_id", "left_anti"
-                )
-                fbc = fb.join(adx, fb["cur"] == adx["_xu"]).select(
-                    "walk_id", "prev", "cur",
-                    F.col("_xv").alias("_x"),
-                )
-                fbc = fbc.join(
-                    prs,
-                    (fbc["prev"] == prs["_pu"]) & (fbc["_x"] == prs["_pv"]),
-                    "left",
-                ).select(
-                    "walk_id", "prev", "cur", "_x",
-                    F.col("_pv").isNotNull().alias("_inp"),
-                )
-                fbc = fbc.withColumn(
-                    "_cls",
-                    F.when(F.col("_x") == F.col("prev"), F.lit(0))
-                    .when(F.col("_inp"), F.lit(1))
-                    .otherwise(F.lit(2)),
-                ).withColumn(
-                    "_w",
-                    F.when(F.col("_cls") == 0, wr_l)
-                    .when(F.col("_cls") == 1, wi_l)
-                    .otherwise(wo_l),
-                )
-                w_ord = Window.partitionBy("walk_id").orderBy("_cls", "_x")
-                w_all = Window.partitionBy("walk_id")
-                fbc = fbc.withColumn(
-                    "_cum",
-                    F.sum("_w").over(
-                        w_ord.rowsBetween(Window.unboundedPreceding, 0)
-                    ),
-                ).withColumn("_tot", F.sum("_w").over(w_all))
-                r = F.pmod(base_draw, F.col("_tot"))
-                fallback = fbc.filter(
-                    (r >= F.col("_cum") - F.col("_w")) & (r < F.col("_cum"))
-                ).select(
+                .select(
                     "walk_id",
                     F.col("cur").alias("_p"),
-                    F.col("_x").alias("_c"),
+                    F.col("_xv").alias("_c"),
                 )
-                nxt = accepted.unionByName(fallback).select(
+                .select(
                     "walk_id",
                     F.col("_p").alias("prev"),
                     F.col("_c").alias("cur"),
                 )
-            if (t + 1) % cut_every == 0:
-                frontier = cut_lineage(nxt, eager=True, round_idx=t)
-            else:
-                frontier = nxt
-            acc = acc.unionByName(
-                frontier.select(
-                    "walk_id",
-                    F.lit(t + 1).cast("int").alias("step"),
-                    F.col("cur").alias("id"),
+            )
+        else:
+            f1 = frontier.join(degs, frontier["cur"] == degs["u"]).select(
+                "walk_id", "prev", "cur", "_deg"
+            )
+            # --- rejection trials: constant-width rows per walk;
+            # candidate by composite-key (u, rn) lookup, acceptance
+            # by an independent hash vs the weight class. r11 prune:
+            # a trial whose acceptance draw falls under wmin accepts
+            # ANY candidate class (every class weight is >= wmin), so
+            # the first such trial j0 — computable from hashes alone,
+            # before any join — always wins over later trials in the
+            # min-j pick. Explode only j <= j0: expected wmax/wmin
+            # rows per walk (2 at the 2:2:1 defaults) instead of
+            # `trials` (16), an 8x cut in both per-step join volumes.
+            # Picks are bit-identical: discarded trials provably
+            # cannot win; walks with no auto-accepting trial keep all
+            # `trials` rows, so the fallback arm is reached exactly
+            # as before.
+            wmin = min(wr, wi, wo)
+            acc_mods = F.array(
+                *[
+                    F.pmod(
+                        portable_hash64(
+                            F.concat(
+                                F.lit(f"n2va{seed}:"),
+                                F.col("walk_id").cast("string"),
+                                F.lit(f":{t}:{j}"),
+                            )
+                        ),
+                        F.lit(wmax).cast("long"),
+                    )
+                    for j in range(int(trials))
+                ]
+            )
+            j0 = F.array_position(
+                F.transform(acc_mods, lambda x: x < F.lit(wmin).cast("long")),
+                True,
+            )
+            j_hi = F.when(j0 > 0, (j0 - 1).cast("int")).otherwise(
+                F.lit(int(trials) - 1)
+            )
+            tr = f1.withColumn("_jhi", j_hi).select(
+                "walk_id",
+                "prev",
+                "cur",
+                "_deg",
+                F.explode(F.sequence(F.lit(0), F.col("_jhi"))).alias("_j"),
+            )
+            h_pick = portable_hash64(
+                F.concat(
+                    F.lit(f"n2v{seed}:"),
+                    F.col("walk_id").cast("string"),
+                    F.lit(f":{t}:"),
+                    F.col("_j").cast("string"),
                 )
             )
-        acc = cut_lineage(acc, eager=True)
+            h_acc = portable_hash64(
+                F.concat(
+                    F.lit(f"n2va{seed}:"),
+                    F.col("walk_id").cast("string"),
+                    F.lit(f":{t}:"),
+                    F.col("_j").cast("string"),
+                )
+            )
+            tr = tr.withColumn(
+                "_idx", (F.pmod(h_pick, F.col("_deg")) + F.lit(1)).cast("int")
+            ).withColumn("_u", F.pmod(h_acc, F.lit(wmax).cast("long")))
+            cand = tr.join(
+                adx,
+                (tr["cur"] == adx["_xu"]) & (tr["_idx"] == adx["_xrn"]),
+            ).select(
+                "walk_id", "prev", "cur", "_j", "_u",
+                F.col("_xv").alias("_x"),
+            )
+            cand = cand.join(
+                prs,
+                (cand["prev"] == prs["_pu"]) & (cand["_x"] == prs["_pv"]),
+                "left",
+            ).select(
+                "walk_id", "prev", "cur", "_j", "_u", "_x",
+                F.col("_pv").isNotNull().alias("_inp"),
+            )
+            w_x = (
+                F.when(F.col("_x") == F.col("prev"), wr_l)
+                .when(F.col("_inp"), wi_l)
+                .otherwise(wo_l)
+            )
+            accepted = (
+                cand.filter(F.col("_u") < w_x)
+                .groupBy("walk_id", "cur")
+                .agg(F.min(F.struct("_j", "_x")).alias("_w"))
+                .select(
+                    "walk_id",
+                    F.col("cur").alias("_p"),
+                    F.col("_w._x").alias("_c"),
+                )
+            )
+            # --- exact bounded escape for walks whose every trial
+            # rejected (probability ≤ (1 − wmin/wmax)^trials per
+            # step): class-ordered cumulative pick, replayed as ROWS
+            # (explode N(cur), classify each candidate by one pair
+            # join, rank by (class, id), take the candidate whose
+            # cumulative-weight window brackets r) — exact ∝ w(x), no
+            # neighbor arrays anywhere.
+            fb = f1.join(
+                accepted.select("walk_id"), "walk_id", "left_anti"
+            )
+            fbc = fb.join(adx, fb["cur"] == adx["_xu"]).select(
+                "walk_id", "prev", "cur",
+                F.col("_xv").alias("_x"),
+            )
+            fbc = fbc.join(
+                prs,
+                (fbc["prev"] == prs["_pu"]) & (fbc["_x"] == prs["_pv"]),
+                "left",
+            ).select(
+                "walk_id", "prev", "cur", "_x",
+                F.col("_pv").isNotNull().alias("_inp"),
+            )
+            fbc = fbc.withColumn(
+                "_cls",
+                F.when(F.col("_x") == F.col("prev"), F.lit(0))
+                .when(F.col("_inp"), F.lit(1))
+                .otherwise(F.lit(2)),
+            ).withColumn(
+                "_w",
+                F.when(F.col("_cls") == 0, wr_l)
+                .when(F.col("_cls") == 1, wi_l)
+                .otherwise(wo_l),
+            )
+            w_ord = Window.partitionBy("walk_id").orderBy("_cls", "_x")
+            w_all = Window.partitionBy("walk_id")
+            fbc = fbc.withColumn(
+                "_cum",
+                F.sum("_w").over(
+                    w_ord.rowsBetween(Window.unboundedPreceding, 0)
+                ),
+            ).withColumn("_tot", F.sum("_w").over(w_all))
+            r = F.pmod(base_draw, F.col("_tot"))
+            fallback = fbc.filter(
+                (r >= F.col("_cum") - F.col("_w")) & (r < F.col("_cum"))
+            ).select(
+                "walk_id",
+                F.col("cur").alias("_p"),
+                F.col("_x").alias("_c"),
+            )
+            nxt = accepted.unionByName(fallback).select(
+                "walk_id",
+                F.col("_p").alias("prev"),
+                F.col("_c").alias("cur"),
+            )
+        if (t + 1) % cut_every == 0:
+            frontier = cut_lineage(nxt, eager=True, round_idx=t)
+        else:
+            frontier = nxt
+        acc = acc.unionByName(
+            frontier.select(
+                "walk_id",
+                F.lit(t + 1).cast("int").alias("step"),
+                F.col("cur").alias("id"),
+            )
+        )
+    acc = cut_lineage(acc, eager=True)
     adr.unpersist()
     degs.unpersist()
     return acc

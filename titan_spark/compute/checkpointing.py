@@ -23,7 +23,6 @@ import os
 import shutil
 import tempfile
 import warnings
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -124,48 +123,3 @@ def cut_lineage(
     if sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
-
-
-@contextmanager
-def scoped_shuffle_partitions(spark, rows: int, rows_per_partition: int = 50_000):
-    """Size shuffle parallelism to the loop's data for the duration of
-    an iterative loop, then restore the session default.
-
-    Iterated joins re-shuffle a SMALL state relation every round (a
-    near-dup pair graph is orders of magnitude smaller than its
-    corpus); at the session's corpus-sized partition count each round
-    pays rounds × partitions near-empty task launches. On local[*]
-    task launch is cheap enough that this is noise, but on a cluster
-    each empty task is a scheduler round-trip — a 20-round loop at
-    10k corpus-sized partitions is 200k wasted launches. AQE cannot
-    help here: the per-round eager lineage cut materializes through
-    the RDD boundary before AQE's final-stage coalescing applies. The
-    override never RAISES parallelism past the session setting, so
-    corpus-scale loops (PageRank over every edge) keep their full
-    partition count.
-
-    Concurrency contract: this mutates the session-global
-    ``spark.sql.shuffle.partitions`` for the loop's duration, so
-    another query planned concurrently ON THE SAME SparkSession would
-    see the reduced value. That matches the engine's current
-    single-tenant batch model (one driver program per session, as in
-    every test/bench/catalog path). If a multi-tenant server mode is
-    added, scope the setting per plan instead: replace the conf
-    override with explicit ``.repartition(target, key)`` on the loop's
-    state relation, which is plan-local by construction.
-    """
-    conf = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(conf)
-    target = max(1, min(int(old), rows // rows_per_partition + 1))
-    spark.conf.set(conf, str(target))
-    try:
-        yield target
-    finally:
-        spark.conf.set(conf, old)
-
-
-# scoped_range (a generator wrapping scoped_shuffle_partitions around
-# range(n)) was removed in r12: a caller breaking or raising inside the
-# loop would leave the session-global shuffle-partition override in
-# place until generator finalization. Every loop now uses the explicit
-# context manager, whose conf restore is guaranteed by `finally`.

@@ -13,7 +13,7 @@ Spark mapping (SURVEY §2.9 C2): one round =
 The per-round full scan becomes a cached DataFrame; the message
 combiner is the ``agg`` (partial aggregation runs map-side); ``Memory``
 counters are driver-side aggs. Lineage is truncated with
-``localCheckpoint`` every few rounds — without it the iterated plan
+``localCheckpoint`` every round — without it the iterated plan
 grows without bound and the driver stack-overflows (SURVEY §7,
 correctness-adjacent).
 
@@ -26,8 +26,6 @@ recipients — the analog of Titan's PartitionedVertexProgramExecutor
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -133,7 +131,6 @@ def pregel(
     msg_to_dst: Column | None = None,
     msg_to_src: Column | None = None,
     max_iterations: int = 10,
-    checkpoint_every: int = 1,
     active_col: str | None = None,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -155,67 +152,30 @@ def pregel(
     """
     v = vertices.select("id", *keep_cols, *[e.alias(n) for n, e in initial.items()])
     edges.cache()
-    n_e = edges.count()  # materializes the cache; sizes the loop shuffles
     v = cut_lineage(v, eager=True)
-    n_v = v.count()  # cheap: v was just eagerly checkpointed
-
-    from titan_spark.compute.checkpointing import scoped_shuffle_partitions
-
-    # per-round shuffles move vertex-state/edge-sized relations many
-    # rounds; size shuffle parallelism to the LARGER of the cached edge
-    # set and the vertex state (r12, ADVICE r11: on sparse or
-    # label-filtered graphs |V| can far exceed |E|, and an edge-only
-    # scope would run every vertex-state join at a handful of
-    # partitions) instead of paying rounds x session-partitions
-    # near-empty task launches (never raises above the session setting,
-    # so corpus-scale graphs keep full parallelism)
-    with scoped_shuffle_partitions(edges.sparkSession, max(n_e, n_v)):
-        for i in range(max_iterations):
-            sender_ids = None
-            if active_col is not None:
-                sender_ids = v.filter(F.col(active_col)).select("id")
-            msgs = aggregate_messages(
-                v, edges, agg, msg_to_dst=msg_to_dst, msg_to_src=msg_to_src
-            ) if sender_ids is None else _messages(
-                v, edges, msg_to_dst, msg_to_src, sender_ids
-            ).groupBy("id").agg(agg)
-            joined = v.join(msgs, "id", "left")
-            v = joined.select(
-                "id",
-                *keep_cols,
-                *[update.get(n, F.col(n)).alias(n) for n in initial.keys()],
-            )
-            if active_col is not None:
-                # lazy cut + one full count: a single job materializes
-                # the checkpoint AND answers the frontier-empty test
-                # (eager cut + limit(1).count() was two jobs per round)
-                v = cut_lineage(v, eager=False, round_idx=i)
-                if v.filter(F.col(active_col)).count() == 0:
-                    break
-            elif (i + 1) % checkpoint_every == 0:
-                v = cut_lineage(v, eager=True, round_idx=i)
-    if active_col is None and max_iterations % checkpoint_every != 0:
-        v = cut_lineage(v, eager=True)
+    for i in range(max_iterations):
+        sender_ids = None
+        if active_col is not None:
+            sender_ids = v.filter(F.col(active_col)).select("id")
+        msgs = aggregate_messages(
+            v, edges, agg, msg_to_dst=msg_to_dst, msg_to_src=msg_to_src
+        ) if sender_ids is None else _messages(
+            v, edges, msg_to_dst, msg_to_src, sender_ids
+        ).groupBy("id").agg(agg)
+        joined = v.join(msgs, "id", "left")
+        v = joined.select(
+            "id",
+            *keep_cols,
+            *[update.get(n, F.col(n)).alias(n) for n in initial.keys()],
+        )
+        if active_col is not None:
+            # lazy cut + one full count: a single job materializes
+            # the checkpoint AND answers the frontier-empty test
+            # (eager cut + limit(1).count() was two jobs per round)
+            v = cut_lineage(v, eager=False, round_idx=i)
+            if v.filter(F.col(active_col)).count() == 0:
+                break
+        else:
+            v = cut_lineage(v, eager=True, round_idx=i)
     edges.unpersist(blocking=False)
     return v
-
-
-def run_iterations(
-    state: DataFrame,
-    step: Callable[[DataFrame, int], DataFrame],
-    max_iterations: int,
-    checkpoint_every: int = 1,
-) -> DataFrame:
-    """Generic iteration driver with lineage checkpointing, for vertex
-    programs whose round is not a single message/update pair.
-
-    Default is checkpoint-per-round: a step that references ``state``
-    more than once doubles the unmaterialized plan every round, so
-    deferring checkpoints trades a cheap per-vertex materialization
-    for exponential plan growth. Raise ``checkpoint_every`` only for
-    steps that reference state exactly once."""
-    for i in range(max_iterations):
-        state = step(state, i)
-        if (i + 1) % checkpoint_every == 0:
-            state = cut_lineage(state, eager=True, round_idx=i)
-    return state

@@ -41,6 +41,9 @@ from titan_spark.compute.checkpointing import cut_lineage
 
 _NOTSET = object()
 
+# repeat_until cuts lineage every round; every this-many-th cut is eager
+_REPEAT_EAGER_CUT_EVERY = 5
+
 _META_COLS = ("_origin", "_other", "_dir")
 
 
@@ -631,7 +634,6 @@ class GraphTraversal:
         until: Callable[["GraphTraversal"], Column],
         max_times: int = 20,
         emit: bool = False,
-        checkpoint_every: int = 5,
     ) -> "GraphTraversal":
         """``repeat(...).until(pred)`` with a dynamic termination check.
 
@@ -665,7 +667,9 @@ class GraphTraversal:
             # still the (id, tags) projection when the step ended lazily
             act = act._with(
                 cut_lineage(
-                    act._df, eager=(i + 1) % checkpoint_every == 0, round_idx=i
+                    act._df,
+                    eager=(i + 1) % _REPEAT_EAGER_CUT_EVERY == 0,
+                    round_idx=i,
                 ),
                 lazy_v=act._lazy_v,
             )

@@ -211,24 +211,24 @@ def adaptive_planes(n_rows: int, target_occupancy: int = 16, floor: int = 8) -> 
     return max(floor, math.ceil(math.log2(n_rows / target_occupancy)))
 
 
-def _resolve_planes(df: DataFrame, n_planes: int | None) -> int:
+def _resolve_planes(n_rows: int, n_planes: int | None) -> int:
     if n_planes is not None:
         return n_planes
-    # one count job; scalar result. At the driver's correctness scales
-    # (2k vectors) this resolves to the historical 8, so pinned oracles
-    # stay bit-identical; growth only kicks in where it matters.
-    return adaptive_planes(df.count())
+    # At the oracle-checked scales (2k vectors) this resolves to the
+    # historical 8, so pinned oracles stay bit-identical; growth only
+    # kicks in where it matters.
+    return adaptive_planes(n_rows)
 
 
 def _pair_vector_join(
     cand: DataFrame,
     va: DataFrame,
     vb: DataFrame,
-    df: DataFrame,
-    vec_col: str,
+    n_rows: int,
     dim: int,
 ) -> DataFrame:
-    """Attach both endpoints' vectors to candidate pairs.
+    """Attach both endpoints' vectors to candidate pairs; ``n_rows`` is
+    the vector frame's row count, counted once by the caller.
 
     Same join-strategy choice as the Jaccard verify
     (pipeline/dedup.py::jaccard_pairs, guide §3): the per-vector
@@ -241,7 +241,7 @@ def _pair_vector_join(
     shuffle vs 8.8 s broadcast, identical rows). Above the budget the
     shuffle form is kept — the 100 TB path.
     """
-    est_mb = df.count() * (dim * 8 + 24) / 1e6
+    est_mb = n_rows * (dim * 8 + 24) / 1e6
     if verify_broadcast_fits(cand.sparkSession, est_mb):
         return cand.join(F.broadcast(va), "id_a").join(F.broadcast(vb), "id_b")
     return cand.join(va, "id_a").join(vb, "id_b")
@@ -270,7 +270,8 @@ def lsh_topk_pairs(
     the SQL oracle (plane-literal generation, same pattern as
     lsh_ann/ivf_ann).
     """
-    n_planes = _resolve_planes(df, n_planes)
+    n_rows = df.count()
+    n_planes = _resolve_planes(n_rows, n_planes)
     if dim is None:
         dim = df.select(F.size(vec_col)).first()[0]
     cand = _lsh_candidates(df, n_tables, n_planes, vec_col, id_col, dim)
@@ -287,7 +288,7 @@ def lsh_topk_pairs(
         _norm(F.col(vec_col)).alias("_nb"),
     )
     scored = (
-        _pair_vector_join(cand, va, vb, df, vec_col, dim)
+        _pair_vector_join(cand, va, vb, n_rows, dim)
         .select(
             "id_a",
             "id_b",
@@ -373,7 +374,8 @@ def semantic_dedup_clusters(
     nothing O(n²) — the default hash width grows with log₂(corpus)
     (:func:`adaptive_planes`) so candidate volume stays linear.
     """
-    n_planes = _resolve_planes(df, n_planes)
+    n_rows = df.count()
+    n_planes = _resolve_planes(n_rows, n_planes)
     if dim is None:
         dim = df.select(F.size(vec_col)).first()[0]
     cand = _lsh_candidates(df, n_tables, n_planes, vec_col, id_col, dim)
@@ -384,7 +386,7 @@ def semantic_dedup_clusters(
         F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), _norm(F.col(vec_col)).alias("_nb")
     )
     pairs = (
-        _pair_vector_join(cand, va, vb, df, vec_col, dim)
+        _pair_vector_join(cand, va, vb, n_rows, dim)
         .select(
             "id_a",
             "id_b",

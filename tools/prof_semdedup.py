@@ -36,7 +36,7 @@ def main() -> None:
     df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     threshold = 0.35
     t0 = time.time()
-    n_planes = _resolve_planes(df, None)
+    n_planes = _resolve_planes(df.count(), None)
     print("resolve_planes:", round(time.time() - t0, 1), "n_planes:", n_planes)
 
     t0 = time.time()
