@@ -1,5 +1,7 @@
 """Connected components, triangle counting, near-dup clustering."""
 
+from contextlib import contextmanager
+
 from pyspark.sql import functions as F
 
 from titan_spark.compute import connected_components, triangle_count
@@ -119,7 +121,8 @@ def test_label_propagation_modal_beats_min(spark):
 
 def test_connected_components_warns_when_capped(spark):
     # a 12-node path needs several rounds; capping at 1 must not return
-    # silently under-merged components without saying so
+    # silently under-merged components without saying so. Only the
+    # distributed loop has a round cap, so force it.
     import warnings as w
 
     from pyspark.sql import functions as F
@@ -132,10 +135,127 @@ def test_connected_components_warns_when_capped(spark):
         [(i, i, i + 1, "l") for i in range(11)],
         "edge_id long, src long, dst long, label string",
     )
-    with w.catch_warnings(record=True) as caught:
+    with w.catch_warnings(record=True) as caught, _broadcast_threshold(spark, "-1"):
         w.simplefilter("always")
         connected_components(PropertyGraph(v, e), max_iterations=1).collect()
     assert any("did not converge" in str(c.message) for c in caught)
+
+
+@contextmanager
+def _broadcast_threshold(spark, value):
+    """Set ``spark.sql.autoBroadcastJoinThreshold`` for the block; ``-1``
+    forces connected_components' distributed arm."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _random_graph(spark, rng):
+    """A small random graph with isolated vertices, duplicate vertex
+    rows, self-loops, parallel edges, ghost and null endpoints, and two
+    edge labels. Arrow-built, so both frames are local relations."""
+    import pyarrow as pa
+
+    ids = rng.sample(range(-20, 200), rng.randint(0, 30))
+    vids = ids + rng.sample(ids, min(len(ids), rng.randint(0, 3)))
+    pool = ids + [rng.randint(-30, 250) for _ in range(3)] + [None]
+    edges = []
+    for k in range(rng.randint(0, 40)):
+        if ids and rng.random() < 0.05:
+            src = dst = rng.choice(ids)
+        elif edges and rng.random() < 0.05:
+            src, dst = edges[-1][1:3]
+        else:
+            src, dst = rng.choice(pool), rng.choice(pool)
+        edges.append((k, src, dst, rng.choice("ab")))
+    v = spark.createDataFrame(
+        pa.table({"id": pa.array(vids, pa.int64()), "label": ["n"] * len(vids)})
+    )
+    cols = list(zip(*edges)) or [(), (), (), ()]
+    e = spark.createDataFrame(
+        pa.table(
+            {
+                "edge_id": pa.array(cols[0], pa.int64()),
+                "src": pa.array(cols[1], pa.int64()),
+                "dst": pa.array(cols[2], pa.int64()),
+                "label": pa.array(cols[3], pa.string()),
+            }
+        )
+    )
+    return PropertyGraph(v, e)
+
+
+def test_connected_components_driver_arm_matches_distributed(spark, monkeypatch):
+    import random
+
+    from titan_spark.compute import algorithms
+
+    arms = []
+    driver_arm = algorithms._cc_on_driver
+
+    def recording(*args):
+        out = driver_arm(*args)
+        arms.append(out is not None)
+        return out
+
+    monkeypatch.setattr(algorithms, "_cc_on_driver", recording)
+
+    def rows(g, labels):
+        out = connected_components(g, edge_labels=labels).collect()
+        return sorted((tuple(r) for r in out), key=repr)
+
+    rng = random.Random(20261017)
+    for _ in range(50):
+        g = _random_graph(spark, rng)
+        labels = rng.choice([(), ("a",)])
+        driver = rows(g, labels)
+        with _broadcast_threshold(spark, "-1"):
+            distributed = rows(g, labels)
+        assert driver == distributed
+    assert arms == [True, False] * 50
+
+
+def test_connected_components_driver_arm_capped_whatever_the_threshold(spark, gods, monkeypatch):
+    # a broadcast threshold raised for joins must not pull a graph over
+    # the driver arm's own ceiling onto the driver
+    from titan_spark.compute import algorithms
+
+    arms = []
+    driver_arm = algorithms._cc_on_driver
+
+    def recording(*args):
+        out = driver_arm(*args)
+        arms.append(out is not None)
+        return out
+
+    monkeypatch.setattr(algorithms, "_cc_on_driver", recording)
+    # gods: 12 vertex rows + 2 x 17 edge endpoints = 46 ids
+    monkeypatch.setattr(algorithms, "_CC_DRIVER_MAX_IDS", 45)
+    with _broadcast_threshold(spark, "1g"):
+        over = {r["component"] for r in connected_components(gods).collect()}
+    monkeypatch.setattr(algorithms, "_CC_DRIVER_MAX_IDS", 46)
+    with _broadcast_threshold(spark, "1g"):
+        under = {r["component"] for r in connected_components(gods).collect()}
+    assert over == under == {1}
+    assert arms == [False, True]
+
+
+def test_connected_components_driver_arm_job_count(spark, gods):
+    # the distributed loop made 42-48 jobs on this graph
+    sc = spark.sparkContext
+    group = "cc-driver-arm-job-count"
+    sc.setJobGroup(group, group)
+    try:
+        got = {r["component"] for r in connected_components(gods).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert got == {1}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
 
 
 def test_k_core_cascading_peel(spark):

@@ -87,6 +87,46 @@ def test_dml_add_remove(spark, gods):
     assert g3.E().count_value() == 17  # incident edge cascaded
 
 
+def test_dml_id_lists_are_literal_relations(spark):
+    # an id list must not become a Python-RDD scan: its size is unknown
+    # to the planner (no broadcast into the anti-joins) and every later
+    # action re-runs the Python tasks
+    v = spark.range(10).select("id", F.lit("n").alias("label"))
+    e = spark.range(9).select(
+        F.col("id").alias("edge_id"),
+        F.col("id").alias("src"),
+        (F.col("id") + 1).alias("dst"),
+        F.lit("x").alias("label"),
+    )
+    g = PropertyGraph(v, e)
+
+    def plan(df):
+        return df._jdf.queryExecution().toString()
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    for ids in ([3, None, 7], [None], []):
+        by_list = g.remove_vertices(ids)
+        by_frame = g.remove_vertices(spark.createDataFrame([(i,) for i in ids], "id long"))
+        for got, want in ((by_list.vertices, by_frame.vertices), (by_list.edges, by_frame.edges)):
+            assert "ExistingRDD" not in plan(got)
+            assert rows(got) == rows(want)
+        by_list = g.remove_edges(ids).edges
+        by_frame = g.remove_edges(spark.createDataFrame([(i,) for i in ids], "edge_id long")).edges
+        assert "ExistingRDD" not in plan(by_list)
+        assert rows(by_list) == rows(by_frame)
+    assert rows(g.remove_vertices([3, None, 7]).vertices) == [
+        (i, "n") for i in range(10) if i not in (3, 7)
+    ]
+    # a long list stays one local relation (a literal array would plan
+    # one expression per id)
+    many = g.remove_vertices(list(range(5, 100_000)))
+    assert "ExistingRDD" not in plan(many.edges)
+    assert rows(many.vertices) == [(i, "n") for i in range(5)]
+    assert rows(many.edges) == [(i, i, i + 1, "x") for i in range(4)]
+
+
 def test_dml_multiplicity_rejected(spark, gods):
     # second father edge for hercules violates MANY2ONE
     bad = spark.createDataFrame(

@@ -143,11 +143,22 @@ class PropertyGraph:
                 raise ValueError(f"SchemaViolation: multiplicity violated: {rows}")
         return PropertyGraph(self.vertices, edges, self.vertex_properties, self.schema)
 
+    def _id_relation(self, ids: list[int]) -> DataFrame:
+        """A DML id list as an Arrow-built local relation (one bigint
+        column), not a Python RDD: the planner sees its real size and
+        broadcasts it into the anti-joins, and a later ``write`` re-runs
+        no Python tasks. ``None`` entries are dropped; they matched
+        nothing anyway."""
+        import pyarrow as pa
+
+        ids = [i for i in ids if i is not None]
+        return self.spark.createDataFrame(pa.table({"id": pa.array(ids, pa.int64())}))
+
     def remove_vertices(self, ids: DataFrame | list[int]) -> "PropertyGraph":
         """Remove vertices and their incident edges (anti-join; Titan
         remove() cascades to incident relations)."""
         if isinstance(ids, list):
-            ids = self.spark.createDataFrame([(i,) for i in ids], "id long")
+            ids = self._id_relation(ids)
         ids = ids.select(F.col(ids.columns[0]).alias("id"))
         vertices = self.vertices.join(ids, "id", "left_anti")
         edges = (
@@ -162,7 +173,7 @@ class PropertyGraph:
 
     def remove_edges(self, edge_ids: DataFrame | list[int]) -> "PropertyGraph":
         if isinstance(edge_ids, list):
-            edge_ids = self.spark.createDataFrame([(i,) for i in edge_ids], "edge_id long")
+            edge_ids = self._id_relation(edge_ids)
         edge_ids = edge_ids.select(F.col(edge_ids.columns[0]).alias("edge_id"))
         return PropertyGraph(
             self.vertices,

@@ -485,8 +485,13 @@ def dedup_clusters(pairs: DataFrame, out_id: str = "doc_id") -> DataFrame:
 
     The canonical dedup finish: LSH/jaccard emits pairwise matches;
     transitive closure groups them so one representative survives per
-    cluster. Runs as min-label propagation (connected components) over
-    the pair graph — scales with pair volume, not corpus size.
+    cluster. Runs as connected components over the pair graph — scales
+    with pair volume, not corpus size. A pair graph whose ids and
+    endpoints fit Spark's ``autoBroadcastJoinThreshold`` (8 B per id,
+    capped at ~1.3 M ids) is finished on the driver with union-find in
+    a few jobs; above it,
+    min-label propagation runs on the cluster (see
+    compute.algorithms.connected_components).
     """
     from titan_spark.compute.algorithms import connected_components
     from titan_spark.graph import PropertyGraph

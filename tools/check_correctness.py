@@ -6,6 +6,13 @@ and an order-insensitive value hash (columns sorted by name, rows
 sorted, floats rendered with repr). Exit code 1 on any mismatch.
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
+
+Operators with a broadcast-sized arm (connected_components' driver arm,
+and through it dedup_clusters, dedup_weights and semantic_dedup) take
+their large-data arm when Spark's broadcast threshold is off:
+
+    PYSPARK_SUBMIT_ARGS="--conf spark.sql.autoBroadcastJoinThreshold=-1 pyspark-shell" \
+        python tools/check_correctness.py <sf_dir> dedup_clusters
 """
 
 from __future__ import annotations
