@@ -75,7 +75,7 @@ HEADLINE = [
     "weighted_distance",
     # round 5: supernode hop skew (AQE split proof at bench scale),
     # corpus line dedup, token-budget mixture sampling, graph
-    # decompositions (peeling loops exercise the checkpoint spill),
+    # decompositions (peeling loops exercise the disk-only cuts),
     # seeded PageRank
     "skew_two_hop",
     "line_dedup",

@@ -164,16 +164,18 @@ def test_aggregate_messages_weighted_sum(degree_graph):
     assert got == exp
 
 
-def test_cut_lineage_periodic_spill_keeps_long_loops_flat(spark):
+def test_cut_lineage_keeps_long_loops_flat(spark):
     # Regression for the chained-checkpoint blowup (r5): a loop whose
     # round references the previous checkpointed state twice shows
     # per-round cost DOUBLING from ~the 17th chained localCheckpoint
     # (measured: 0.4s rounds hit 100s+ by round 23) with flat plans,
-    # flat RDD lineage, flat rows, and flat heap. cut_lineage resets
-    # the chain through parquet every SPILL_PERIOD rounds; this runs 26
-    # chained rounds and asserts the tail rounds stay in the same cost
-    # regime as the warm early rounds (the broken behavior is ~50-200x,
-    # so a 10x bound is a wide margin, not a flaky timing assert).
+    # flat RDD lineage, flat rows, and flat heap. The cause is the
+    # carried Catalyst size estimate, which the joins multiply;
+    # cut_lineage clamps it to defaultSizeInBytes every round. This
+    # runs 26 chained rounds, checks the clamp each round, and asserts
+    # the tail rounds stay in the same cost regime as the warm early
+    # rounds (the broken behavior is ~50-200x, so a 10x bound is a wide
+    # margin, not a flaky timing assert).
     import time
 
     from pyspark.sql import functions as F
@@ -189,6 +191,7 @@ def test_cut_lineage_periodic_spill_keeps_long_loops_flat(spark):
         "component", F.col("id")
     )
     state = cut_lineage(state, eager=True)
+    default = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
     times = []
     for i in range(26):
         t0 = time.perf_counter()
@@ -210,9 +213,10 @@ def test_cut_lineage_periodic_spill_keeps_long_loops_flat(spark):
                 ).alias("component"),
             ),
             eager=True,
-            round_idx=i,
         )
         times.append(time.perf_counter() - t0)
+        size = state._jdf.queryExecution().logical().stats().sizeInBytes()
+        assert size <= default, f"round {i}: carried estimate of {size.bit_length()} bits"
     warm = sorted(times[2:8])[len(times[2:8]) // 2]
     assert max(times[-4:]) < 10 * warm, f"late rounds blew up: {times}"
     # and the loop still computes the right thing: one 50-node chain

@@ -127,6 +127,69 @@ def test_dml_id_lists_are_literal_relations(spark):
     assert rows(many.edges) == [(i, i, i + 1, "x") for i in range(4)]
 
 
+
+def test_driver_side_lists_are_local_relations(spark, monkeypatch):
+    # seeds, single result rows, injected values and the mix rates table
+    # are driver-side lists too: none may become a Python-RDD relation
+    # (unknown size, Python tasks on every action). Rows are the ones
+    # the Python-list form gave.
+    from titan_spark.compute.algorithms import bidirectional_distance, k_hop_subgraph
+    from titan_spark.operators.traversal import inject_values
+    from titan_spark.pipeline.sampling import mix_corpus
+
+    cls = type(spark)
+    create = cls.createDataFrame
+
+    def no_lists(self, data, *args, **kwargs):
+        assert not isinstance(data, (list, tuple)), "Python-list relation"
+        return create(self, data, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "createDataFrame", no_lists)
+    v = spark.range(10).select("id", F.lit("n").alias("label"))
+    e = spark.range(9).select(
+        F.col("id").alias("edge_id"),
+        F.col("id").alias("src"),
+        (F.col("id") + 1).alias("dst"),
+        F.lit("x").alias("label"),
+    )
+    g = PropertyGraph(v, e)
+
+    def plan(df):
+        return df._jdf.queryExecution().toString()
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    sub = k_hop_subgraph(g, [0], k=2)
+    assert rows(sub.vertices) == [(0, "n"), (1, "n"), (2, "n")]
+    assert rows(sub.edges) == [(0, 0, 1, "x"), (1, 1, 2, "x")]
+
+    for (a, b, direction), want in (
+        ((1, 6, "both"), 5),
+        ((4, 4, "both"), 0),
+        ((6, 1, "out"), None),
+    ):
+        got = bidirectional_distance(g, a, b, direction=direction)
+        assert "ExistingRDD" not in plan(got)
+        assert rows(got) == [(a, b, want)]
+
+    names = spark.range(3).select(
+        F.concat(F.lit("v"), F.col("id").cast("string")).alias("name")
+    )
+    got = inject_values(names, "zeus")
+    assert "ExistingRDD" not in plan(got)
+    assert rows(got) == [("v0",), ("v1",), ("v2",), ("zeus",)]
+
+    docs = spark.range(20).select(
+        F.col("id").alias("doc_id"),
+        F.when(F.col("id") < 5, "s_up").otherwise("s_down").alias("source"),
+    )
+    mixed = mix_corpus(docs, {"s_up": 3.0, "s_down": 1.0}, 200, F.lit(10))
+    assert "ExistingRDD" not in plan(mixed)
+    assert rows(mixed.select("doc_id", "epoch")) == [
+        (i, ep) for i in range(5) for ep in range(3)
+    ] + [(5, 0), (6, 0), (19, 0)]
+
 def test_dml_multiplicity_rejected(spark, gods):
     # second father edge for hercules violates MANY2ONE
     bad = spark.createDataFrame(

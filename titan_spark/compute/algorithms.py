@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from titan_spark.compute.pregel import pregel
 from titan_spark.graph import PropertyGraph
 from titan_spark.compute.checkpointing import cut_lineage
+from titan_spark.session import local_relation
 
 # Peeling loops (k_core) broadcast the per-round dropped-vertex set into
 # an anti-join when it fits: 8 M ids ≈ 64 MB serialized — well inside
@@ -91,7 +92,7 @@ def pagerank(
 
     try:
         for i in range(iterations):
-            ranks = cut_lineage(step(ranks), eager=True, round_idx=i)
+            ranks = cut_lineage(step(ranks), eager=True)
         # materialize before releasing the cached contribution edges
         return cut_lineage(ranks, eager=True)
     finally:
@@ -375,7 +376,7 @@ def _cc_loop(state, und, max_iterations):
     # lazy cut + FULL count: one job both materializes the checkpoint
     # and answers the convergence test (the Change-1 pattern; the old
     # eager cut + limit(1) probe paid two jobs per round)
-    state0 = cut_lineage(state0, eager=False, round_idx=0)
+    state0 = cut_lineage(state0, eager=False)
     changed = state0.filter(F.col("component") < F.col("_old")).count()
     state = state0.select("id", "component")
     if changed == 0:
@@ -405,7 +406,7 @@ def _cc_loop(state, und, max_iterations):
         .select("p.u", "p.v")
         .dropDuplicates(["u", "v"])
     )
-    live = cut_lineage(live, eager=False, round_idx=1)
+    live = cut_lineage(live, eager=False)
     lmap = cut_lineage(
         state.select(F.col("component").alias("id"))
         .dropDuplicates(["id"])
@@ -425,7 +426,7 @@ def _cc_loop(state, und, max_iterations):
                 .select(F.col("cu").alias("u"), F.col("cv").alias("v"))
                 .dropDuplicates(["u", "v"])
             )
-            live = cut_lineage(live, eager=False, round_idx=i)
+            live = cut_lineage(live, eager=False)
         # neighbor min on the quotient graph, keyed by LABEL (live is
         # symmetric in label space from round 1 on, so grouping on u
         # covers both directions)
@@ -458,7 +459,7 @@ def _cc_loop(state, und, max_iterations):
                 F.col("component").alias("_old"),
             )
         )
-        new_lmap = cut_lineage(new_lmap, eager=False, round_idx=i)
+        new_lmap = cut_lineage(new_lmap, eager=False)
         changed = new_lmap.filter(F.col("component") < F.col("_old")).count()
         lmap = new_lmap.select("id", "component")
         if changed == 0:
@@ -669,7 +670,7 @@ def label_propagation(
             state.join(modal, "id", "left")
             .select("id", F.coalesce("_new", "community").alias("community"))
         )
-        state = cut_lineage(state, eager=True, round_idx=i)
+        state = cut_lineage(state, eager=True)
     und.unpersist(blocking=False)
     return state
 
@@ -723,9 +724,10 @@ def k_core(
         .filter(F.col("a") != F.col("b"))
         .dropDuplicates(["a", "b"])
     )
-    # the edge relation spills to storage once at build; rounds only
-    # SCAN it (broadcast-filtered), never rewrite it
-    und = cut_lineage(und, eager=True, round_idx=0, spill_period=1)
+    # the edge relation is cut once at build, on disk: it is
+    # edge-set-sized and held for the whole loop; rounds only SCAN it
+    # (broadcast-filtered), never rewrite it
+    und = cut_lineage(und, eager=True, disk=True)
     deg = (
         und.select(F.col("a").alias("id"))
         .unionAll(und.select(F.col("b").alias("id")))
@@ -747,12 +749,7 @@ def k_core(
             break
         small = n_drop <= _PEEL_BROADCAST_MAX_ROWS
         if small and dropped_all is not None:
-            dropped_all = cut_lineage(
-                dropped_all.unionByName(dropped),
-                eager=True,
-                round_idx=i,
-                spill_period=1,
-            )
+            dropped_all = cut_lineage(dropped_all.unionByName(dropped), eager=True)
             small = dropped_all.count() <= _PEEL_BROADCAST_MAX_ROWS
         elif small:
             dropped_all = dropped
@@ -791,7 +788,7 @@ def k_core(
                 )
                 .filter(F.col("d") > 0)
             )
-            deg = cut_lineage(new_deg, eager=False, round_idx=i)
+            deg = cut_lineage(new_deg, eager=False)
         else:
             # drop set outgrew the broadcast budget (adversarial
             # k): materialize the restricted edge set with the old
@@ -804,8 +801,7 @@ def k_core(
                 .join(keep.withColumnRenamed("id", "b"), "b", "left_semi")
                 .select("a", "b"),
                 eager=True,
-                round_idx=i,
-                spill_period=1,
+                disk=True,
             )
             deg = cut_lineage(
                 und.select(F.col("a").alias("id"))
@@ -930,14 +926,14 @@ def k_truss(
         .filter(F.col("a") != F.col("b"))
         .dropDuplicates(["a", "b"])
     )
-    und = cut_lineage(und, eager=True, round_idx=0, spill_period=1)
+    und = cut_lineage(und, eager=True, disk=True)
     # The triangle pass (_edge_support) dominates every round, so
-    # (a) each round's support relation is materialized once (the
-    # parquet spill keeps executor memory flat, same rationale as
-    # the edge-set spill) and probed twice cheaply — once for the
+    # (a) each round's support relation is materialized once (on
+    # disk, which keeps executor memory flat, same rationale as the
+    # edge-set cut) and probed twice cheaply — once for the
     # drop count, once for the rewrite; (b) convergence is decided
     # on the dropped-EDGE count BEFORE rewriting the edge set (the
-    # old form wrote the unchanged full edge set to parquet first);
+    # old form rewrote the unchanged full edge set first);
     # (c) when the loop converges, the final support IS the last
     # round's materialized support ("no edge dropped" means the
     # edge set, hence every triangle, is unchanged), so the old
@@ -946,7 +942,7 @@ def k_truss(
     # exhausted with drops) still recounts, as before.
     final: DataFrame | None = None
     for i in range(rounds):
-        sup = cut_lineage(_edge_support(und), round_idx=i, spill_period=1)
+        sup = cut_lineage(_edge_support(und), disk=True)
         n_drop = (
             und.join(sup, ["a", "b"], "left")
             .filter(F.coalesce("support", F.lit(0)) < k - 2)
@@ -960,7 +956,7 @@ def k_truss(
             .filter(F.coalesce("support", F.lit(0)) >= k - 2)
             .select("a", "b")
         )
-        und = cut_lineage(new_und, eager=True, round_idx=i, spill_period=1)
+        und = cut_lineage(new_und, eager=True, disk=True)
     if final is None:
         final = _edge_support(und)
     return (
@@ -1020,7 +1016,7 @@ def personalized_pagerank(
 
     try:
         for i in range(iterations):
-            ranks = cut_lineage(step(ranks), eager=True, round_idx=i)
+            ranks = cut_lineage(step(ranks), eager=True)
         return cut_lineage(ranks, eager=True)
     finally:
         contrib_e.unpersist(blocking=False)
@@ -1060,8 +1056,7 @@ def _landmark_distances(
     O(|V|·k) and exact all-pairs closeness (k = |V|) is quadratic by
     definition; k in the hundreds is the published accuracy/cost
     tradeoff, and shuffles stay proportional to frontier × degree. Each
-    round cuts lineage (the same spill discipline as the other BSP
-    loops).
+    round cuts lineage, like the other BSP loops.
     """
     e = graph.edges
     if edge_labels:
@@ -1090,7 +1085,6 @@ def _landmark_distances(
         new = cut_lineage(
             cand.join(state, ["id", "lm"], "left_anti"),
             eager=False,
-            round_idx=_i,
         )
         if new.count() == 0:
             break
@@ -1168,7 +1162,7 @@ def maximal_independent_set(
     Per round: one join of active vertices with the cached symmetric
     edge list + one max-combiner agg + two anti-joins — all
     frontier-proportional; the active set only shrinks. Per-round
-    lineage cut (the standard loop spill discipline). MIS at scale is
+    lineage cut, as in every BSP loop. MIS at scale is
     the classic building block for graph coloring / parallel
     scheduling / diversity sampling over near-dup graphs.
     """
@@ -1219,7 +1213,6 @@ def maximal_independent_set(
         remaining = cut_lineage(
             remaining.join(retired, "id", "left_anti"),
             eager=False,
-            round_idx=r,
         )
         n_rem = remaining.count()
         winners_acc = (
@@ -1271,7 +1264,7 @@ def topological_levels(
             .select("id", F.col("_nl").alias("level"))
         )
         # lazy cut + full count: one job per round instead of two
-        bumped = cut_lineage(bumped, eager=False, round_idx=i)
+        bumped = cut_lineage(bumped, eager=False)
         if bumped.count() == 0:
             ed.unpersist()
             return lvl
@@ -1360,7 +1353,6 @@ def betweenness_centrality(
             cand.join(visited.select("id", "lm"), ["id", "lm"], "left_anti")
             .withColumn("dist", F.lit(r + 1).cast("long")),
             eager=False,
-            round_idx=r,
         )
         if new.count() == 0:
             break
@@ -1412,7 +1404,6 @@ def betweenness_centrality(
                 F.coalesce(F.col("_add"), F.lit(0.0)).alias("delta"),
             ),
             eager=True,
-            round_idx=d,
         )
         parts.append(dprev.select("id", "lm", "delta"))
     delta = parts[0]
@@ -1589,7 +1580,7 @@ def random_walks(
         # is a full job — cutting every step made fixed overhead, not
         # data, the dominant cost (measured ~2.5x on the sf0.1 row)
         if (t + 1) % cut_every == 0:
-            frontier = cut_lineage(nxt, eager=True, round_idx=t)
+            frontier = cut_lineage(nxt, eager=True)
         else:
             frontier = nxt
         acc = acc.unionByName(
@@ -1681,20 +1672,16 @@ def strongly_connected_components(
             .cache()
         )
         n_sub = sub_e.count()
-        # r11: big-state rounds route EVERY lineage cut through the
-        # parquet spill. The per-round localCheckpoint blocks of the two
-        # fixpoints are reclaimed only after driver GC (ContextCleaner),
-        # so at the sf10 960k-block fixture one SCC run leaves ~26
-        # persistent RDDs (~GBs) in the block manager and a SECOND
-        # SCC-family query in the same JVM measured +36% from the
-        # residue alone (67.7 s fresh -> 92.3 s following; clearing the
-        # leaked blocks restored 60.9 s). Same executor-memory reasoning
-        # as the k_core/Boruvka spill_period=1. Small graphs keep the
-        # historical localCheckpoint cadence (the spill write is an
-        # extra eager job per round that tiny rounds should not pay).
+        # r11: big-state rounds keep EVERY lineage cut on disk. The
+        # per-round localCheckpoint blocks of the two fixpoints are
+        # reclaimed only after driver GC (ContextCleaner), so at the
+        # sf10 960k-block fixture one SCC run leaves ~26 persistent
+        # RDDs (~GBs) in the block manager and a SECOND SCC-family
+        # query in the same JVM measured +36% from the residue alone
+        # (67.7 s fresh -> 92.3 s following; clearing the leaked blocks
+        # restored 60.9 s). Same executor-memory reasoning as k_core's
+        # disk cut. Small graphs keep memory-backed cuts.
         big_state = n_sub > 2_000_000
-        spill = 1 if big_state else 5
-        ridx0 = 0 if big_state else None
 
         # count-known relations at or under this many rows get an
         # explicit broadcast hint: the steady frontier (640 k rows ×
@@ -1746,9 +1733,7 @@ def strongly_connected_components(
             # checkpoint and answers the empty-frontier test
             # (limit(1).count() after an eager cut was a second
             # job per round — ~2 jobs x rounds saved)
-            bumped = cut_lineage(
-                bumped, eager=False, round_idx=_i, spill_period=spill
-            )
+            bumped = cut_lineage(bumped, eager=False, disk=big_state)
             n_front = bumped.count()
             if n_front == 0:
                 break
@@ -1762,7 +1747,7 @@ def strongly_connected_components(
             cmap = remaining.select("id", F.col("id").alias("color")).limit(0)
         else:
             cmap = cmap_u.groupBy("id").agg(F.max("color").alias("color"))
-        cmap = cut_lineage(cmap, eager=True, round_idx=ridx0, spill_period=spill)
+        cmap = cut_lineage(cmap, eager=True, disk=big_state)
         # 2. backward collection from roots within each color
         # class. members starts as every vertex whose color == id
         # (root of its class or trivial class); the uncollected
@@ -1772,8 +1757,7 @@ def strongly_connected_components(
                 "id", F.col("id").alias("color")
             ),
             eager=True,
-            round_idx=ridx0,
-            spill_period=spill,
+            disk=big_state,
         )
         uncolmap = cmap
         bparts: list[DataFrame] = [members0]
@@ -1791,9 +1775,7 @@ def strongly_connected_components(
                 .select("id", "color")
                 .dropDuplicates(["id"])
             )
-            new = cut_lineage(
-                cand, eager=False, round_idx=_i, spill_period=spill
-            )
+            new = cut_lineage(cand, eager=False, disk=big_state)
             n_new = new.count()
             if n_new == 0:
                 break
@@ -1804,8 +1786,7 @@ def strongly_connected_components(
             uncolmap = cut_lineage(
                 uncolmap.join(gone, "id", "left_anti"),
                 eager=False,
-                round_idx=(_i if big_state else None),
-                spill_period=spill,
+                disk=big_state,
             )
             bfront = new
         members = bparts[0]
@@ -1817,13 +1798,8 @@ def strongly_connected_components(
         rep = members.groupBy("color").agg(F.min("id").alias("component"))
         assigned = members.join(rep, "color").select("id", "component")
         done = assigned if done is None else done.unionByName(assigned)
-        done = cut_lineage(done, eager=True, round_idx=ridx0, spill_period=spill)
-        remaining = cut_lineage(
-            uncolmap.select("id"),
-            eager=True,
-            round_idx=ridx0,
-            spill_period=spill,
-        )
+        done = cut_lineage(done, eager=True, disk=big_state)
+        remaining = cut_lineage(uncolmap.select("id"), eager=True, disk=big_state)
         sub_e.unpersist()
     else:
         if remaining.limit(1).count() > 0:
@@ -1896,7 +1872,8 @@ def bidirectional_distance(
         bwd_e = bwd_e.filter(F.col("u") != F.col("v")).dropDuplicates(["u", "v"]).cache()
 
     def one_row(dist):
-        return spark.createDataFrame(
+        return local_relation(
+            spark,
             [(int(src_id), int(dst_id), dist)],
             "src bigint, dst bigint, distance bigint",
         )
@@ -1907,11 +1884,11 @@ def bidirectional_distance(
 
     sides = {
         "f": {"edges": fwd_e, "level": 0,
-              "visited": cut_lineage(spark.createDataFrame(
-                  [(int(src_id), 0)], "id bigint, d bigint"), eager=True)},
+              "visited": cut_lineage(local_relation(
+                  spark, [(int(src_id), 0)], "id bigint, d bigint"), eager=True)},
         "b": {"edges": bwd_e, "level": 0,
-              "visited": cut_lineage(spark.createDataFrame(
-                  [(int(dst_id), 0)], "id bigint, d bigint"), eager=True)},
+              "visited": cut_lineage(local_relation(
+                  spark, [(int(dst_id), 0)], "id bigint, d bigint"), eager=True)},
     }
     for s in sides.values():
         s["frontier"] = s["visited"]
@@ -1933,7 +1910,7 @@ def bidirectional_distance(
         )
         # lazy cut + full count: one job materializes the frontier
         # and answers the exhaustion test
-        nxt = cut_lineage(nxt, eager=False, round_idx=_i)
+        nxt = cut_lineage(nxt, eager=False)
         n = nxt.count()
         side["level"] += 1
         side["frontier"], side["frontier_n"] = nxt, n
@@ -2055,7 +2032,6 @@ def feature_propagation(
             )
             ,
             eager=True,
-            round_idx=t,
         )
     ad.unpersist()
     return state
@@ -2249,7 +2225,7 @@ def k_hop_subgraph(
     ad = ad.dropDuplicates(["u", "v"]).cache()
     spark = graph.vertices.sparkSession
     seen = cut_lineage(
-        spark.createDataFrame([(int(s),) for s in seed_ids], "id bigint"), eager=True
+        local_relation(spark, [(int(s),) for s in seed_ids], "id bigint"), eager=True
     )
     frontier = seen
     for i in range(k):
@@ -2260,7 +2236,7 @@ def k_hop_subgraph(
             .join(seen, "id", "left_anti")
         )
         # lazy cut + full count: one job per round instead of two
-        nxt = cut_lineage(nxt, eager=False, round_idx=i)
+        nxt = cut_lineage(nxt, eager=False)
         if nxt.count() == 0:
             break
         seen = cut_lineage(seen.unionByName(nxt), eager=False)
@@ -2327,14 +2303,14 @@ def hits(
         )
         # half-step cuts are lazy: the round's single eager hub cut
         # materializes the whole round (3 jobs/round -> 1)
-        araw = cut_lineage(araw, eager=False, round_idx=t)
+        araw = cut_lineage(araw, eager=False)
         auth = _l2_normalize(araw, "a")
         hraw = (
             ed.join(auth.select(F.col("id").alias("dst"), "a"), "dst")
             .groupBy(F.col("src").alias("id"))
             .agg(F.sum("a").alias("h"))
         )
-        hraw = cut_lineage(hraw, eager=False, round_idx=t)
+        hraw = cut_lineage(hraw, eager=False)
         hub = cut_lineage(_l2_normalize(hraw, "h"), eager=True)
     ed.unpersist()
     return (
@@ -2512,8 +2488,10 @@ def approximate_diameter(
     start = deg.orderBy(F.col("d").desc(), F.col("id").asc()).first()
     if start is None:  # edgeless graph
         und.unpersist(blocking=False)
-        return graph.vertices.sparkSession.createDataFrame(
-            [], "start_id long, ecc_start long, far_id long, diameter_lb long"
+        return local_relation(
+            graph.vertices.sparkSession,
+            [],
+            "start_id long, ecc_start long, far_id long, diameter_lb long",
         )
     start_id = start["id"]
     d1 = shortest_distance(
@@ -2530,7 +2508,8 @@ def approximate_diameter(
     )
     lb = d2.agg(F.max("distance").alias("m")).first()["m"]
     und.unpersist(blocking=False)
-    return graph.vertices.sparkSession.createDataFrame(
+    return local_relation(
+        graph.vertices.sparkSession,
         [(int(start_id), ecc_start, int(far_id), int(lb))],
         "start_id long, ecc_start long, far_id long, diameter_lb long",
     )
@@ -2923,8 +2902,8 @@ def minimum_spanning_forest(
         )
         # lazy cut: the rooting pass's first jump-probe count
         # materializes it — one fewer job per Borůvka round
-        # (Change-1 pattern; the spill path stays eager by nature)
-        elected = cut_lineage(elected, eager=False, round_idx=rounds)
+        # (Change-1 pattern)
+        elected = cut_lineage(elected, eager=False)
         forest_rounds.append(
             elected.select("oa", "ob", "w").dropDuplicates(["oa", "ob"])
         )
@@ -2953,7 +2932,7 @@ def minimum_spanning_forest(
             # jumped table and answers the convergence probe —
             # the old eager cut + separate limit(1).count() was
             # two jobs per pass (Change-1 pattern)
-            j = cut_lineage(j, eager=False, round_idx=rounds)
+            j = cut_lineage(j, eager=False)
             moved = (
                 j.alias("x")
                 .join(
@@ -2981,20 +2960,12 @@ def minimum_spanning_forest(
             )
             .filter(F.col("ca") != F.col("cb"))
         )
-        # spill_period=1: live is the one CROSS-ROUND carrier, and
-        # localCheckpoint PRESERVES Catalyst sizeInBytes stats, which
-        # the size-only join estimator multiplies across the round's
-        # ~10-join tree (cartesian worst case) — carried stats grow
-        # ~20x in BIT LENGTH per round, and by round 5 the driver
-        # spends minutes in BigInteger multiplies inside stats
-        # estimation (measured: 385 -> 8052 bits in one round).
-        # Routing live through parquet resets its stats to the real
-        # file size every round, bounding every plan's stats for
-        # good. Same escape valve as k-core's every-round spill,
-        # different reason (memory there, driver-side stats here).
-        live = cut_lineage(
-            live, eager=True, round_idx=rounds, spill_period=1
-        )
+        # live is the one CROSS-ROUND carrier, and the round's
+        # ~10-join tree multiplies its Catalyst size estimate (measured
+        # 385 -> 8052 bits in one round before cuts clamped it);
+        # cut_lineage clamps the carried estimate to
+        # defaultSizeInBytes, so every round plans against a flat stat
+        live = cut_lineage(live, eager=True)
         n_live = live.count()
     if n_live > 0:
         import warnings
@@ -3005,11 +2976,7 @@ def minimum_spanning_forest(
             RuntimeWarning,
         )
     if not forest_rounds:
-        # zero-partition frame: a createDataFrame([]) list would be a
-        # Python RDD whose first query starts Python workers
-        return spark.createDataFrame(
-            spark.sparkContext.emptyRDD(), "u long, v long, weight double"
-        )
+        return local_relation(spark, [], "u long, v long, weight double")
     forest = forest_rounds[0]
     for nxt in forest_rounds[1:]:
         forest = forest.unionByName(nxt)
@@ -3340,7 +3307,7 @@ def node2vec_walks(
                 F.col("_c").alias("cur"),
             )
         if (t + 1) % cut_every == 0:
-            frontier = cut_lineage(nxt, eager=True, round_idx=t)
+            frontier = cut_lineage(nxt, eager=True)
         else:
             frontier = nxt
         acc = acc.unionByName(

@@ -1,4 +1,4 @@
-"""Lineage-cut policy for iterative loops.
+"""Lineage cuts for iterative loops: one cut per round, with a bounded size.
 
 Iterated plans (Pregel rounds, repeat_until frontiers, LSH self-join
 inputs) must truncate lineage or the plan tree grows without bound.
@@ -12,114 +12,93 @@ right default on local[*], where executor loss means JVM death anyway).
 
 Reference parity: Titan's FulgoraGraphComputer persists BSP state per
 superstep into the backend for exactly this recoverability
-(olap/computer/FulgoraGraphComputer.java:142-211).
+(olap/computer/FulgoraGraphComputer.java:142-211), and GraphX cuts
+lineage the same way: one mechanism per round.
+
+Why the cut clamps its size. ``localCheckpoint`` and ``checkpoint``
+keep the plan's Catalyst ``sizeInBytes`` on the ``LogicalRDD`` they
+return, and the size-only join estimator MULTIPLIES child sizes. A
+round whose plan references the carried state J times multiplies the
+statistic's bit length by about J, so every stats query (broadcast
+choice, runtime filters, ...) does BigInteger work that grows
+exponentially in rounds. On a min-label loop with a pointer jump over
+3,000 vertices (two joins of the carried state per round; 4 cores,
+local[4], 1 GiB driver) the carried statistic went 45 → 103 → 220 →
+… → 479,267 bits by round 14, and 22 rounds did not finish in 600 s.
+``cut_lineage`` therefore rebuilds a cut whose estimate is above the
+session's ``spark.sql.defaultSizeInBytes`` with no carried statistic,
+so Spark reports that default — its own value for a relation of
+unknown size (``Long.MaxValue`` unless set). The statistic then stays
+at 63 bits every round: 14 rounds took 20.0 s and 22 rounds 29.0 s,
+against 24.5 s and 30.6 s for the periodic parquet spill this replaces
+(its spill rounds cost 2.4–2.8 s against 0.6–0.9 s for a plain one).
+In-range estimates pass through untouched, so no broadcast or join
+choice that uses them changes.
+
+Why not the real size (observed rows × row width): measured on the same
+probe, a cut that carried it stayed at 17 bits but ran 14 rounds in
+29.3–37.2 s. The row count itself cost about 1 s; the rest was lost in
+the plans the small size selects.
 """
 
 from __future__ import annotations
 
-import atexit
-import itertools
-import os
-import shutil
-import tempfile
-import warnings
-
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
-# How many CHAINED lineage cuts may elapse before a storage-layer spill.
-# Measured pathology (r5, Spark 4.1, reproduced on a 200-row fixture):
-# an iterative loop whose round references the previous checkpointed
-# state twice (min-label CC: state + the pointer-jump self-view) shows
-# per-round wall cost DOUBLING from ~the 17th chained round (0.4 s →
-# 0.6, 1.0, 2.2, 4.8, 15.7, 32.9, 104.6 s ...) even though the optimized
-# plan, the RDD debug string, row counts, partition counts, and driver
-# heap all stay flat. ROOT CAUSE identified r10: localCheckpoint (and
-# checkpoint) PRESERVE the plan's Catalyst sizeInBytes statistic, and
-# the size-only join estimator MULTIPLIES child sizes — so a round
-# with J join references to carried state multiplies the carried
-# stat's BIT LENGTH by ~J, i.e. the stat's cost (BigInteger
-# multiplies inside every stats query: broadcast decisions,
-# InjectRuntimeFilter, ...) grows exponentially in rounds. Measured
-# in the CC loop: 127 → 392 → 1829 → 8359 bits over four rounds
-# (~4.6×/round); by round 9 the stat is tens of megabits and the
-# driver burns seconds per planning pass. A parquet write+read resets
-# the stat to the real file size. Period tuning on a 3000-vertex
-# path-graph CC (13 rounds, min of reps): period 10 → 34.7 s,
-# 5 → 18.1 s, 4 → 16.5 s, 3 → 20.4 s (spill I/O overtakes the saved
-# BigInteger work below 4). 5 keeps the pre-spill stat ≤ ~40 kbits
-# (negligible multiply cost) with one fewer spill than 4 for typical
-# round counts; loops with MANY joins per round (Borůvka's ~10) still
-# pass spill_period=1 explicitly.
-SPILL_PERIOD = 5
 
-_spill_ids = itertools.count()
-_local_spill_root: str | None = None
+def _clamp_size(cut: DataFrame) -> DataFrame:
+    """``cut`` with its ``LogicalRDD`` rebuilt without a carried
+    statistic when that statistic exceeds ``defaultSizeInBytes``.
 
-
-def _spill_path(spark) -> str:
-    """A fresh directory for one lineage spill: under the session's
-    reliable checkpoint dir when configured (shared FS on a cluster),
-    else a driver-local tempdir (correct on local[*], where executors
-    share the driver's filesystem). Files live until session exit —
-    a later plan may still lazily read an earlier spill, so eager
-    deletion would be a use-after-free; the atexit hook (local) or the
-    checkpoint-dir lifecycle (cluster) reclaims them."""
-    global _local_spill_root
-    n = next(_spill_ids)
-    ckdir = spark.sparkContext.getCheckpointDir()
-    if ckdir is not None:
-        return ckdir.rstrip("/") + f"/titan-spill-{n}"
-    if _local_spill_root is None:
-        _local_spill_root = tempfile.mkdtemp(prefix="titan-spark-spill-")
-        atexit.register(shutil.rmtree, _local_spill_root, ignore_errors=True)
-    return os.path.join(_local_spill_root, str(n))
-
-
-def cut_lineage(
-    df: DataFrame,
-    eager: bool = True,
-    round_idx: int | None = None,
-    spill_period: int = SPILL_PERIOD,
-) -> DataFrame:
-    """Truncate ``df``'s lineage, reliably when the session allows it.
-
-    Iterative loops pass their ``round_idx`` so every ``spill_period``-th
-    cut routes through parquet write+read, resetting the chained-cut
-    depth that otherwise decays exponentially past ~17 rounds (see
-    SPILL_PERIOD). One-shot cuts (no ``round_idx``) never spill.
-
-    A second, sneakier reason to spill: ``localCheckpoint`` (and
-    ``checkpoint``) PRESERVE the plan's Catalyst sizeInBytes statistic
-    across the cut, and the size-only join estimator multiplies child
-    sizes (cartesian worst case). A loop whose cross-round state plan
-    contains J joins therefore multiplies its carried stat's BIT LENGTH
-    by ~J every round — minimum_spanning_forest (J≈10 per round)
-    measured 385 → 8052 bits in one round and had the driver spending
-    minutes in BigInteger multiplies inside stats estimation by round
-    5. A parquet round-trip resets the stat to the real file size.
-    Loops with many joins per round must spill their cross-round
-    carrier every round (``spill_period=1``); loops with few joins are
-    bounded by the default ``SPILL_PERIOD`` spill.
-
-    Loops whose per-round state is EDGE-SET-sized (k-core / k-truss
-    peels hold the whole surviving edge relation, not a row per vertex)
-    also pass ``spill_period=1``: localCheckpoint blocks from prior rounds
-    are only reclaimed lazily by the context cleaner, so a big state
-    checkpointed every round stacks multiple copies in executor memory;
-    the parquet spill keeps each round's state on disk instead.
+    Partitioning, ordering and constraints are kept. ``None`` is passed
+    for the statistic because py4j turns a Scala ``BigInt`` into a
+    Python int, so no ``Statistics`` can be built from Python. py4j
+    raises if the JVM call shape changed (the cut is no longer a
+    ``LogicalRDD``, or ``apply`` has another signature); nothing falls
+    back to keeping the size.
     """
-    if round_idx is not None and (round_idx + 1) % spill_period == 0:
-        try:
-            path = _spill_path(df.sparkSession)
-            df.write.mode("overwrite").parquet(path)
-            return df.sparkSession.read.parquet(path)
-        except Exception as exc:  # e.g. a NullType column parquet rejects
-            warnings.warn(
-                f"lineage spill fell back to localCheckpoint ({exc}); "
-                "loops beyond ~17 rounds may slow down",
-                RuntimeWarning,
-            )
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+    spark = cut.sparkSession
+    jspark = spark._jsparkSession
+    plan = cut._jdf.queryExecution().logical()
+    default = jspark.sessionState().conf().defaultSizeInBytes()
+    try:
+        if plan.stats().sizeInBytes() <= default:
+            return cut
+    except ValueError:
+        pass  # too many digits for py4j's int conversion: over the default
+    jvm = spark._jvm
+    module = getattr(getattr(jvm.org.apache.spark.sql.execution, "LogicalRDD$"), "MODULE$")
+    rebuilt = module.apply(
+        plan.output(),
+        plan.rdd(),
+        plan.outputPartitioning(),
+        plan.outputOrdering(),
+        plan.isStreaming(),
+        plan.stream(),
+        jspark,
+        jvm.scala.Option.empty(),
+        jvm.scala.Some(plan.constraints()),
+    )
+    return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(jspark, rebuilt), spark)
+
+
+def cut_lineage(df: DataFrame, eager: bool = True, disk: bool = False) -> DataFrame:
+    """Truncate ``df``'s lineage, reliably when the session allows it,
+    with its size estimate clamped to ``defaultSizeInBytes`` (see the
+    module docstring).
+
+    ``disk=True`` keeps a local cut's blocks out of executor memory
+    (``StorageLevel.DISK_ONLY``). Loops whose per-round state is
+    edge-set-sized use it: earlier rounds' blocks are only reclaimed
+    lazily by the context cleaner, so a big state cut every round would
+    otherwise stack several copies in memory. A reliable ``checkpoint()``
+    is on disk already.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        cut = df.checkpoint(eager=eager)
+    elif disk:
+        cut = df.localCheckpoint(eager=eager, storageLevel=StorageLevel.DISK_ONLY)
+    else:
+        cut = df.localCheckpoint(eager=eager)
+    return _clamp_size(cut)

@@ -172,10 +172,10 @@ def pregel(
             # lazy cut + one full count: a single job materializes
             # the checkpoint AND answers the frontier-empty test
             # (eager cut + limit(1).count() was two jobs per round)
-            v = cut_lineage(v, eager=False, round_idx=i)
+            v = cut_lineage(v, eager=False)
             if v.filter(F.col(active_col)).count() == 0:
                 break
         else:
-            v = cut_lineage(v, eager=True, round_idx=i)
+            v = cut_lineage(v, eager=True)
     edges.unpersist(blocking=False)
     return v

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from titan_spark.schema import GraphSchema
+from titan_spark.session import local_relation
 
 VERTEX_COLS = ("id", "label")
 EDGE_COLS = ("edge_id", "src", "dst", "label")
@@ -143,22 +144,15 @@ class PropertyGraph:
                 raise ValueError(f"SchemaViolation: multiplicity violated: {rows}")
         return PropertyGraph(self.vertices, edges, self.vertex_properties, self.schema)
 
-    def _id_relation(self, ids: list[int]) -> DataFrame:
-        """A DML id list as an Arrow-built local relation (one bigint
-        column), not a Python RDD: the planner sees its real size and
-        broadcasts it into the anti-joins, and a later ``write`` re-runs
-        no Python tasks. ``None`` entries are dropped; they matched
-        nothing anyway."""
-        import pyarrow as pa
-
-        ids = [i for i in ids if i is not None]
-        return self.spark.createDataFrame(pa.table({"id": pa.array(ids, pa.int64())}))
-
     def remove_vertices(self, ids: DataFrame | list[int]) -> "PropertyGraph":
         """Remove vertices and their incident edges (anti-join; Titan
-        remove() cascades to incident relations)."""
+        remove() cascades to incident relations). A list of ids becomes a
+        local relation the planner broadcasts into the anti-joins;
+        ``None`` entries match nothing and are dropped."""
         if isinstance(ids, list):
-            ids = self._id_relation(ids)
+            ids = local_relation(
+                self.spark, [(i,) for i in ids if i is not None], "id bigint"
+            )
         ids = ids.select(F.col(ids.columns[0]).alias("id"))
         vertices = self.vertices.join(ids, "id", "left_anti")
         edges = (
@@ -173,7 +167,9 @@ class PropertyGraph:
 
     def remove_edges(self, edge_ids: DataFrame | list[int]) -> "PropertyGraph":
         if isinstance(edge_ids, list):
-            edge_ids = self._id_relation(edge_ids)
+            edge_ids = local_relation(
+                self.spark, [(i,) for i in edge_ids if i is not None], "id bigint"
+            )
         edge_ids = edge_ids.select(F.col(edge_ids.columns[0]).alias("edge_id"))
         return PropertyGraph(
             self.vertices,

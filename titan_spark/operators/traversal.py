@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from titan_spark.functions.predicates import P, Pred, as_pred
 from titan_spark.operators.topk import _order_cols, top_k_per_group
 from titan_spark.compute.checkpointing import cut_lineage
+from titan_spark.session import local_relation
 
 _NOTSET = object()
 
@@ -669,7 +670,6 @@ class GraphTraversal:
                 cut_lineage(
                     act._df,
                     eager=(i + 1) % _REPEAT_EAGER_CUT_EVERY == 0,
-                    round_idx=i,
                 ),
                 lazy_v=act._lazy_v,
             )
@@ -1761,7 +1761,7 @@ def inject_values(df: DataFrame, *values, column: str | None = None) -> DataFram
     if len(df.columns) != 1:
         raise ValueError("inject_values needs a single-column DataFrame")
     col = column or df.columns[0]
-    extra = df.sparkSession.createDataFrame([(v,) for v in values], df.schema)
+    extra = local_relation(df.sparkSession, [(v,) for v in values], df.schema)
     return df.withColumnRenamed(df.columns[0], col).unionByName(
         extra.withColumnRenamed(extra.columns[0], col)
     )

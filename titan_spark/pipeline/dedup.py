@@ -948,9 +948,9 @@ def exact_substring_removal(
     # single most expensive stage; it feeds both the duplicate count
     # and the occurrence join, so materialize it once. It is also the
     # pipeline's WIDEST intermediate (one md5 string per token
-    # position); above ~30M positions the one-shot cut routes through
-    # the parquet spill instead of pinning gigabytes of
-    # MEMORY_AND_DISK localCheckpoint blocks in the executors (r12,
+    # position); above ~30M positions the one-shot cut goes to disk
+    # instead of pinning gigabytes of MEMORY_AND_DISK
+    # localCheckpoint blocks in the executors (r12,
     # ADVICE r11 — the count is one agg over the already-checkpointed
     # base, not a second tokenize pass)
     n_positions = base.agg(F.sum(F.size("_toks"))).first()[0] or 0
@@ -966,8 +966,7 @@ def exact_substring_removal(
             ).alias("start", "_h"),
         ),
         eager=True,
-        round_idx=(0 if big else None),
-        spill_period=1,
+        disk=big,
     )
     dup = (
         wins.groupBy("_h")

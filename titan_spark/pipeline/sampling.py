@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from titan_spark.session import local_relation
+
 _P31 = 2_147_483_647  # 2^31 - 1
 _KNUTH1 = 2_654_435_761
 _KNUTH2 = 2_246_822_519
@@ -153,8 +155,8 @@ def mix_corpus(
     ]
     if not rates:
         return df.filter(F.lit(False)).withColumn("epoch", F.lit(0))
-    rates_df = df.sparkSession.createDataFrame(
-        rates, f"{source_col} string, _k int, _th long"
+    rates_df = local_relation(
+        df.sparkSession, rates, f"{source_col} string, _k int, _th long"
     )
     b = lambda epoch: hash_bucket(  # noqa: E731
         F.col(id_col) + epoch.cast("long") * F.lit(_EPOCH_STRIDE), seed

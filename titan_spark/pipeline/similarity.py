@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 from titan_spark.compute.checkpointing import cut_lineage
 from titan_spark.pipeline.dedup import verify_broadcast_fits
+from titan_spark.session import local_relation
 
 try:  # optional fast path for plane_dots; the JVM fold needs neither
     import numpy as np
@@ -453,7 +454,7 @@ def _ivf_assign_broadcast(df: DataFrame, centroids, vec_col: str) -> DataFrame:
         for i, c in enumerate(centroids)
     ]
     cent_df = (
-        df.sparkSession.createDataFrame(rows, "cell int, c array<double>, c2 double")
+        local_relation(df.sparkSession, rows, "cell int, c array<double>, c2 double")
         .agg(F.collect_list(F.struct("cell", "c", "c2")).alias("_cents"))
     )
     scored = F.transform(

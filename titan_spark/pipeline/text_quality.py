@@ -757,12 +757,12 @@ def ngram_novelty(
     # tokenize -> n-gram explode -> hash pass (the expensive stage)
     # runs twice per query (the two consumers' exchanges differ, so
     # ReuseExchange cannot dedupe them). Above ~1M docs the gram
-    # stream (|tokens| 16-byte rows per doc) routes through the
-    # parquet spill instead of pinning multi-GB localCheckpoint
-    # blocks (r12, ADVICE r11; the doc count is a metadata-cheap
-    # count over the source table)
+    # stream (|tokens| 16-byte rows per doc) goes to disk instead of
+    # pinning multi-GB localCheckpoint blocks in memory (r12, ADVICE
+    # r11; the doc count is a metadata-cheap count over the source
+    # table)
     big = df.count() > 1_000_000
-    g = cut_lineage(g, eager=True, round_idx=(0 if big else None), spill_period=1)
+    g = cut_lineage(g, eager=True, disk=big)
     docfreq = g.groupBy("_h").agg(
         F.count(F.lit(1)).cast("long").alias("_df")
     )

@@ -44,6 +44,7 @@ from titan_spark.pipeline.multimodal import extract_features, make_media_table
 from titan_spark.pipeline.sampling import bucket_sql, hash_sample, hash_split, stratified_sample
 from titan_spark.pipeline.similarity import cosine_topk, lsh_bucketed_topk
 from titan_spark.pipeline.text_quality import doc_quality, lang_id, token_stats
+from titan_spark.session import local_relation
 from titan_spark.sources.tpch import OFF, load_tables, load_tpch_graph
 
 # ---------------------------------------------------------------------------
@@ -2869,8 +2870,8 @@ def q_pca_project(spark, sf_dir):
             ),
         )
     )
-    lam_df = spark.createDataFrame(
-        [(a, float(v)) for a, v in enumerate(lam)], "axis int, lam double"
+    lam_df = local_relation(
+        spark, [(a, float(v)) for a, v in enumerate(lam)], "axis int, lam double"
     )
     import numpy as _np
 

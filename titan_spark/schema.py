@@ -23,6 +23,8 @@ from enum import Enum
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from titan_spark.session import local_relation
+
 
 class Cardinality(Enum):
     """Vertex-property cardinality (reference core/Cardinality.java:17-28)."""
@@ -435,8 +437,10 @@ class GraphSchema:
             )
             out = part if out is None else out.unionByName(part)
         if out is None:
-            return edges.sparkSession.createDataFrame(
-                [], "label string, src long, dst long, n long, rule string"
+            return local_relation(
+                edges.sparkSession,
+                [],
+                "label string, src long, dst long, n long, rule string",
             )
         return out
 

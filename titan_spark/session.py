@@ -10,7 +10,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
 def get_spark(
@@ -70,3 +71,30 @@ def get_spark(
     if checkpoint_dir:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
     return spark
+
+
+def local_relation(
+    spark: SparkSession, rows: list[tuple], schema: str | StructType
+) -> DataFrame:
+    """Driver-side ``rows`` as an Arrow-built local relation.
+
+    ``createDataFrame`` of a Python list plans as a ``LogicalRDD`` of
+    ``Long.MaxValue`` bytes that runs Python tasks on every action, so no
+    join against it can broadcast. An Arrow table plans as a
+    ``LocalRelation`` of its real size (32 B for one row of three
+    longs). ``schema`` is a DDL string or a ``StructType``; ``rows`` may
+    be empty.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+            schema=arrow_schema,
+        )
+    )

@@ -57,7 +57,7 @@ def run(spark, g, mode: str, iterations: int = 3, alpha: float = 0.85):
                 (F.lit(base) + F.lit(alpha) * F.coalesce(F.col("s"), F.lit(0.0))).alias("pagerank"),
             )
         )
-        state = cut_lineage(state, eager=True, round_idx=i)
+        state = cut_lineage(state, eager=True)
         print(f"  [{mode}] round {i}: {time.perf_counter() - tr:.2f}s", flush=True)
     tr = time.perf_counter()
     out = cut_lineage(state, eager=True)

@@ -69,7 +69,7 @@ def run_dstpart(spark, sf_dir, iterations):
                 ),
             )
         )
-        ranks = cut_lineage(new_ranks, eager=True, round_idx=i, spill_period=1)
+        ranks = cut_lineage(new_ranks, eager=True)
         print(f"  [dstpart] iter {i}: {time.monotonic() - tr:.2f}s", flush=True)
     n_out = ranks.count()
     contrib_e.unpersist()

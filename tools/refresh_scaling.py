@@ -14,15 +14,15 @@ import sys
 
 NOTES = {
     "degree_part": "one groupBy over 10× edges; sub-second, overhead-bound",
-    "k_core": "peel rounds over a 26M-row symmetric edge set; per-round disk spill, cost tracks surviving edges",
+    "k_core": "peel rounds over a 26M-row symmetric edge set; per-round disk cut, cost tracks surviving edges",
     "events_hourly": "window agg over 10× events; overhead still dominates",
     "embed_topk_pairs": "adaptive LSH width: candidates stay linear in n",
-    "semantic_dedup": "adaptive-width LSH candidates → exact cosine → CC (spill-flat rounds)",
+    "semantic_dedup": "adaptive-width LSH candidates → exact cosine → CC (size-clamped flat rounds)",
     "tfidf_top_terms": "explode + two aggs, linear in corpus tokens",
     "lm_perplexity": "unigram agg + token⋈count join, corpus-linear",
     "two_hop_revenue": "hop joins, AQE-sized exchanges",
     "pagerank_full_graph": "one shuffle per round, linear in |E|",
-    "weighted_distance": "Pregel frontier rounds; spill keeps late rounds flat",
+    "weighted_distance": "Pregel frontier rounds; the size clamp keeps late rounds flat",
     "dedup_clusters": "prefix-filter candidates + pointer-jumping CC — candidate-bound, not n²",
     "minhash_lsh_pairs": "banded join: corpus + true-dup volume",
     "line_dedup": "hash-first winner election (~32B/line shuffled) + one text rewrite pass",
