@@ -17,11 +17,12 @@ against the same closed-form oracles:
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from titan_spark.compute.pregel import pregel
+from titan_spark.compute.pregel import Frontier, pregel
 from titan_spark.graph import PropertyGraph
 from titan_spark.compute.checkpointing import cut_lineage
 from titan_spark.session import local_relation
@@ -43,6 +44,58 @@ _PEEL_BROADCAST_MAX_ROWS = int(
 )
 
 
+def _edges(graph: PropertyGraph, edge_labels: tuple[str, ...] = ()) -> DataFrame:
+    """The graph's edges, restricted to ``edge_labels`` when any are given."""
+    if edge_labels:
+        return graph.edges.filter(F.col("label").isin(list(edge_labels)))
+    return graph.edges
+
+
+def _sym_adjacency(e: DataFrame, drop_loops: bool = True) -> DataFrame:
+    """(u, v) for both orientations of every edge, deduped; self-loops
+    are dropped unless ``drop_loops`` is False."""
+    ue = e.select(F.col("src").alias("u"), F.col("dst").alias("v")).unionByName(
+        e.select(F.col("dst").alias("u"), F.col("src").alias("v"))
+    )
+    if drop_loops:
+        ue = ue.filter(F.col("u") != F.col("v"))
+    return ue.dropDuplicates(["u", "v"])
+
+
+def _adjacency(e: DataFrame, direction: str) -> DataFrame:
+    """(u, v) for every edge followed in ``direction`` — out: src→dst,
+    in: dst→src, both: :func:`_sym_adjacency` — deduped, self-loops
+    dropped."""
+    if direction == "both":
+        return _sym_adjacency(e)
+    if direction not in ("out", "in"):
+        raise ValueError(f"direction must be out|in|both, got {direction!r}")
+    u, v = ("src", "dst") if direction == "out" else ("dst", "src")
+    return (
+        e.select(F.col(u).alias("u"), F.col(v).alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .dropDuplicates(["u", "v"])
+    )
+
+
+def _undirected_pairs(e: DataFrame) -> DataFrame:
+    """The undirected simple edge set (a, b) with a < b: orientation,
+    self-loops and parallel edges dropped."""
+    return (
+        e.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .dropDuplicates(["a", "b"])
+    )
+
+
+def _warn_unconverged(what: str, max_iterations: int, result: str) -> None:
+    warnings.warn(
+        f"{what} did not converge within {max_iterations} rounds; {result}",
+        RuntimeWarning,
+        stacklevel=3,
+    )
+
+
 def pagerank(
     graph: PropertyGraph,
     alpha: float = 0.85,
@@ -60,10 +113,7 @@ def pagerank(
     the physical plan per round (2^N base scans), while materializing
     one row per vertex per round is cheap at any scale.
     """
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
-    e = e.select("src", "dst")
+    e = _edges(graph, edge_labels).select("src", "dst")
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # contribution edges: src, dst, outdeg(src) — built once, cached
     contrib_e = e.join(outdeg, "src").cache()
@@ -114,9 +164,7 @@ def shortest_distance(
     send messages, so round cost tracks the frontier, not |V| — the
     scalable form of the reference's fixpoint-with-incr-flag loop.
     """
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
+    e = _edges(graph, edge_labels)
     w = F.col(f"edge.{weight_col}").cast("double") if weight_col else F.lit(1.0)
     msg = F.col("src.distance") + w if direction == "out" else F.col("dst.distance") + w
     kwargs = {"msg_to_dst": msg} if direction == "out" else {"msg_to_src": msg}
@@ -178,9 +226,7 @@ def connected_components(
     instead of staying |E| while preserving connectivity exactly (see
     _cc_loop).
     """
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
+    e = _edges(graph, edge_labels)
     # r11: the DIRECTED edge relation feeds the loop — the old
     # symmetrize + dropDuplicates materialized a 2|E| relation and paid
     # a full-width dedup shuffle that, on dedup pair graphs (pairs
@@ -306,6 +352,12 @@ def _min_roots(n, a, b):
             parent = grand
 
 
+_CC_UNCONVERGED = (
+    "components may be under-merged. Raise max_iterations "
+    "(rounds needed track the pair-graph diameter)."
+)
+
+
 def _cc_loop(state, und, max_iterations):
     """One round = (1) EDGE CONTRACTION into label space: every live
     edge relabels to (label(u), label(v)), same-label pairs drop, and
@@ -341,14 +393,7 @@ def _cc_loop(state, und, max_iterations):
     200 k-row state join; at corpus scale those per-round joins are
     billions of rows each."""
     if max_iterations <= 0:
-        import warnings
-
-        warnings.warn(
-            f"connected_components did not converge within {max_iterations} "
-            "rounds; components may be under-merged. Raise max_iterations "
-            "(rounds needed track the pair-graph diameter).",
-            RuntimeWarning,
-        )
+        _warn_unconverged("connected_components", max_iterations, _CC_UNCONVERGED)
         return state
     # ---- round 0 on the full graph: labels ARE vertex ids at entry,
     # so contraction is the identity and the pointer jump is a no-op —
@@ -483,14 +528,7 @@ def _cc_loop(state, und, max_iterations):
         # Silent truncation here poisons every dedup-cluster consumer
         # downstream, so say so loudly. (The sf1 near-dup pair graph
         # converged at exactly round 30 — the old default cap.)
-        import warnings
-
-        warnings.warn(
-            f"connected_components did not converge within {max_iterations} "
-            "rounds; components may be under-merged. Raise max_iterations "
-            "(rounds needed track the pair-graph diameter).",
-            RuntimeWarning,
-        )
+        _warn_unconverged("connected_components", max_iterations, _CC_UNCONVERGED)
     return state
 
 
@@ -582,14 +620,7 @@ def triangle_count(graph: PropertyGraph, edge_labels: tuple[str, ...] = ()) -> D
     Reference shape: degree-style OLAP aggregation of
     olap/OLAPTest.java:194-219.
     """
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
-    und = (
-        e.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b"])
-    )
+    und = _undirected_pairs(_edges(graph, edge_labels))
     oriented = degree_oriented_edges(und).cache()
     tri = _enumerate_triangles(oriented)
     per_vertex = (
@@ -643,15 +674,7 @@ def label_propagation(
     """
     from pyspark.sql import Window
 
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
-    und = (
-        e.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .unionByName(e.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .dropDuplicates(["u", "v"])
-        .cache()
-    )
+    und = _sym_adjacency(_edges(graph, edge_labels), drop_loops=False).cache()
     state = graph.vertices.select("id", F.col("id").alias("community"))
     state = cut_lineage(state, eager=True)
     w = Window.partitionBy("id").orderBy(F.col("n").desc(), F.col("community").asc())
@@ -716,14 +739,7 @@ def k_core(
     semi-join peel + full re-aggregation, which stays correct at any
     drop size.
     """
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
-    und = (
-        e.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b"])
-    )
+    und = _undirected_pairs(_edges(graph, edge_labels))
     # the edge relation is cut once at build, on disk: it is
     # edge-set-sized and held for the whole loop; rounds only SCAN it
     # (broadcast-filtered), never rewrite it
@@ -824,20 +840,12 @@ def clustering_coefficient(
     degree-0/1 vertices get 0.0. Composition of the degree-ordered
     triangle count and one degree aggregation — no new shuffle shape.
     """
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
     # ONE deduplicated undirected edge set and ONE degree aggregation,
     # shared between the coefficient denominator and the degree
     # orientation (the previous composition with triangle_count built
     # both a second time from the raw edges — a full scan + dedup
     # shuffle and a degree shuffle computed twice per query)
-    und = (
-        e.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b"])
-        .cache()
-    )
+    und = _undirected_pairs(_edges(graph, edge_labels)).cache()
     deg = (
         und.select(F.col("a").alias("id"))
         .unionAll(und.select(F.col("b").alias("id")))
@@ -918,14 +926,7 @@ def k_truss(
     wedge work stays arboricity-bounded on every round (the edge set
     only shrinks).
     """
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
-    und = (
-        e.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b"])
-    )
+    und = _undirected_pairs(_edges(graph, edge_labels))
     und = cut_lineage(und, eager=True, disk=True)
     # The triangle pass (_edge_support) dominates every round, so
     # (a) each round's support relation is materialized once (on
@@ -984,10 +985,7 @@ def personalized_pagerank(
     seeds = [int(s) for s in seed_ids]
     if not seeds:
         raise ValueError("personalized_pagerank requires at least one seed")
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
-    e = e.select("src", "dst")
+    e = _edges(graph, edge_labels).select("src", "dst")
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     contrib_e = e.join(outdeg, "src").cache()
 
@@ -1055,43 +1053,31 @@ def _landmark_distances(
     re-expand. At 100 TB the landmark set is the scale knob: state is
     O(|V|·k) and exact all-pairs closeness (k = |V|) is quadratic by
     definition; k in the hundreds is the published accuracy/cost
-    tradeoff, and shuffles stay proportional to frontier × degree. Each
-    round cuts lineage, like the other BSP loops.
+    tradeoff, and shuffles stay proportional to frontier × degree. Runs
+    on the frontier driver; a BFS still growing after ``max_iterations``
+    rounds warns, since pairs beyond that depth are missing.
     """
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
-    ue = (
-        e.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .unionByName(e.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .dropDuplicates(["u", "v"])
-        .cache()
+    ue = _sym_adjacency(_edges(graph, edge_labels)).cache()
+    seed = graph.vertices.filter(F.col("id").isin([int(x) for x in landmark_ids])).select(
+        F.col("id"), F.col("id").alias("lm"), F.lit(0).cast("long").alias("d")
     )
-    state = (
-        graph.vertices.filter(F.col("id").isin([int(x) for x in landmark_ids]))
-        .select(F.col("id"), F.col("id").alias("lm"), F.lit(0).cast("long").alias("d"))
-    )
-    state = cut_lineage(state, eager=True)
-    frontier = state
-    for _i in range(max_iterations):
-        cand = (
+
+    def expand(frontier: DataFrame, state: DataFrame) -> DataFrame:
+        return (
             frontier.join(ue, frontier["id"] == ue["u"])
             .select(F.col("v").alias("id"), "lm", (F.col("d") + 1).alias("d"))
             .groupBy("id", "lm")
             .agg(F.min("d").alias("d"))
+            .join(state, ["id", "lm"], "left_anti")
         )
-        # lazy cut + full count: one job materializes the checkpoint
-        # and answers the frontier-empty test
-        new = cut_lineage(
-            cand.join(state, ["id", "lm"], "left_anti"),
-            eager=False,
-        )
-        if new.count() == 0:
-            break
-        state = cut_lineage(state.unionByName(new), eager=False)
-        frontier = new
+
+    bfs = Frontier(seed, expand).run(max_iterations)
     ue.unpersist()
-    return state
+    if not bfs.converged:
+        _warn_unconverged(
+            "landmark BFS", max_iterations, "vertices beyond that depth are missing."
+        )
+    return bfs.state
 
 
 def closeness_centrality(
@@ -1168,16 +1154,8 @@ def maximal_independent_set(
     """
     from titan_spark.functions.hashing import portable_hash64
 
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
-    ue = (
-        e.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .unionByName(e.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .filter(F.col("u") != F.col("v"))  # self-loops never block MIS entry
-        .dropDuplicates(["u", "v"])
-        .cache()
-    )
+    # self-loops never block MIS entry
+    ue = _sym_adjacency(_edges(graph, edge_labels)).cache()
     remaining = cut_lineage(graph.vertices.select("id"), eager=True)
     n_rem = remaining.count()
     winners_acc: DataFrame | None = None
@@ -1244,40 +1222,37 @@ def topological_levels(
     topological layering is undefined — the reference failure mode,
     not a silent wrong answer).
     """
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
-    ed = e.select(F.col("src").alias("u"), F.col("dst").alias("v")).dropDuplicates().cache()
-    lvl = cut_lineage(
-        graph.vertices.select("id", F.lit(0).cast("long").alias("level")), eager=True
+    ed = (
+        _edges(graph, edge_labels)
+        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        .dropDuplicates()
+        .cache()
     )
-    frontier = lvl
-    for i in range(max_iterations):
+
+    def expand(frontier: DataFrame, lvl: DataFrame) -> DataFrame:
         cand = (
             ed.join(frontier.withColumnRenamed("id", "u"), "u")
             .groupBy(F.col("v").alias("id"))
             .agg((F.max("level") + 1).alias("_nl"))
         )
-        bumped = (
+        return (
             cand.join(lvl, "id")
             .filter(F.col("_nl") > F.col("level"))
             .select("id", F.col("_nl").alias("level"))
         )
-        # lazy cut + full count: one job per round instead of two
-        bumped = cut_lineage(bumped, eager=False)
-        if bumped.count() == 0:
-            ed.unpersist()
-            return lvl
-        lvl = cut_lineage(
-            lvl.join(bumped, "id", "left_anti").unionByName(bumped),
-            eager=False,
-        )
-        frontier = bumped
+
+    def upsert(lvl: DataFrame, bumped: DataFrame) -> DataFrame:
+        return lvl.join(bumped, "id", "left_anti").unionByName(bumped)
+
+    seed = graph.vertices.select("id", F.lit(0).cast("long").alias("level"))
+    layers = Frontier(seed, expand, upsert).run(max_iterations)
     ed.unpersist()
-    raise ValueError(
-        f"topological_levels did not converge in {max_iterations} rounds — "
-        "the graph has a cycle (layering undefined)"
-    )
+    if not layers.converged:
+        raise ValueError(
+            f"topological_levels did not converge in {max_iterations} rounds — "
+            "the graph has a cycle (layering undefined)"
+        )
+    return layers.state
 
 
 def betweenness_centrality(
@@ -1320,47 +1295,30 @@ def betweenness_centrality(
     ring+chord fixture: max scaled error falls ~2× from k=4 to k=16
     (tests/test_betweenness_error.py).
     """
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
-    ue = (
-        e.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .unionByName(e.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .dropDuplicates(["u", "v"])
-        .cache()
+    ue = _sym_adjacency(_edges(graph, edge_labels)).cache()
+    seed = graph.vertices.filter(F.col("id").isin([int(x) for x in source_ids])).select(
+        "id",
+        F.col("id").alias("lm"),
+        F.lit(0).cast("long").alias("dist"),
+        F.lit(1).cast("double").alias("sigma"),
     )
-    sources = [int(x) for x in source_ids]
-    visited = cut_lineage(
-        graph.vertices.filter(F.col("id").isin(sources)).select(
-            "id",
-            F.col("id").alias("lm"),
-            F.lit(0).cast("long").alias("dist"),
-            F.lit(1).cast("double").alias("sigma"),
-        ),
-        eager=True,
-    )
-    frontier = visited
-    depth = 0
-    for r in range(max_iterations):
-        cand = (
+
+    def expand(frontier: DataFrame, visited: DataFrame) -> DataFrame:
+        # every frontier row sits at the same depth, so min(dist) + 1 is
+        # the round's depth
+        return (
             frontier.join(ue, frontier["id"] == ue["u"])
             .groupBy(F.col("v").alias("id"), "lm")
-            .agg(F.sum("sigma").alias("sigma"))
+            .agg(F.sum("sigma").alias("sigma"), (F.min("dist") + 1).alias("dist"))
+            .join(visited.select("id", "lm"), ["id", "lm"], "left_anti")
         )
-        # lazy cut + full count: one job per round instead of two
-        new = cut_lineage(
-            cand.join(visited.select("id", "lm"), ["id", "lm"], "left_anti")
-            .withColumn("dist", F.lit(r + 1).cast("long")),
-            eager=False,
+
+    forward = Frontier(seed, expand).run(max_iterations)
+    if not forward.converged:
+        _warn_unconverged(
+            "betweenness_centrality", max_iterations, "paths beyond that depth are missing."
         )
-        if new.count() == 0:
-            break
-        depth = r + 1
-        visited = cut_lineage(
-            visited.unionByName(new.select("id", "lm", "dist", "sigma")), eager=False
-        )
-        frontier = new.select("id", "lm", "dist", "sigma")
+    visited, depth = forward.state, forward.rounds
     # backward: delta per (id, lm), accumulated from depth down to 1.
     # In the level-synchronous BFS DAG every (vertex, source) pair's
     # dependency is finalized in exactly ONE round — the round that
@@ -1456,11 +1414,10 @@ def greedy_coloring(
     feeds conflict-free parallel scheduling (e.g. batching DML on a
     dependency graph) and diversity batching over near-dup graphs.
     """
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
     verts = cut_lineage(graph.vertices.select("id", "label"), eager=True)
-    edges = cut_lineage(e.select("edge_id", "src", "dst", "label"), eager=True)
+    edges = cut_lineage(
+        _edges(graph, edge_labels).select("edge_id", "src", "dst", "label"), eager=True
+    )
     colored: DataFrame | None = None
     for c in range(max_colors):
         if verts.limit(1).count() == 0:
@@ -1527,18 +1484,7 @@ def random_walks(
         raise ValueError(f"direction must be out|in|both, got {direction!r}")
     from titan_spark.functions.hashing import portable_hash64
 
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
-    parts = []
-    if direction in ("out", "both"):
-        parts.append(e.select(F.col("src").alias("u"), F.col("dst").alias("v")))
-    if direction in ("in", "both"):
-        parts.append(e.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-    ad = parts[0]
-    for p in parts[1:]:
-        ad = ad.unionByName(p)
-    ad = ad.filter(F.col("u") != F.col("v")).dropDuplicates(["u", "v"])
+    ad = _adjacency(_edges(graph, edge_labels), direction)
     if max_neighbors is not None:
         from pyspark.sql import Window
 
@@ -1651,13 +1597,9 @@ def strongly_connected_components(
     contract). ``strict=False`` restores the old warn-and-return-
     partial behavior for exploratory use.
     """
-    import warnings
-
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
     ed_all = (
-        e.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+        _edges(graph, edge_labels)
+        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .dropDuplicates(["u", "v"])
     )
@@ -1853,23 +1795,13 @@ def bidirectional_distance(
     if direction not in ("out", "both"):
         raise ValueError(f"direction must be out|both, got {direction!r}")
     spark = graph.vertices.sparkSession
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
-    fwd_e = e.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+    e = _edges(graph, edge_labels)
     if direction == "both":
-        # symmetric closure built, deduped, and cached ONCE; both sides
-        # share the same cached DataFrame (the backward expansion over a
-        # symmetric edge set is identical to the forward one)
-        fwd_e = fwd_e.unionByName(
-            e.select(F.col("dst").alias("u"), F.col("src").alias("v"))
-        )
-        fwd_e = fwd_e.filter(F.col("u") != F.col("v")).dropDuplicates(["u", "v"]).cache()
-        bwd_e = fwd_e
+        # one cached symmetric closure serves both sides (the backward
+        # expansion over a symmetric edge set is the forward one)
+        fwd_e = bwd_e = _sym_adjacency(e).cache()
     else:
-        bwd_e = e.select(F.col("dst").alias("u"), F.col("src").alias("v"))
-        fwd_e = fwd_e.filter(F.col("u") != F.col("v")).dropDuplicates(["u", "v"]).cache()
-        bwd_e = bwd_e.filter(F.col("u") != F.col("v")).dropDuplicates(["u", "v"]).cache()
+        fwd_e, bwd_e = _adjacency(e, "out").cache(), _adjacency(e, "in").cache()
 
     def one_row(dist):
         return local_relation(
@@ -1882,61 +1814,42 @@ def bidirectional_distance(
         fwd_e.unpersist(), bwd_e.unpersist()
         return one_row(0)
 
-    sides = {
-        "f": {"edges": fwd_e, "level": 0,
-              "visited": cut_lineage(local_relation(
-                  spark, [(int(src_id), 0)], "id bigint, d bigint"), eager=True)},
-        "b": {"edges": bwd_e, "level": 0,
-              "visited": cut_lineage(local_relation(
-                  spark, [(int(dst_id), 0)], "id bigint, d bigint"), eager=True)},
-    }
-    for s in sides.values():
-        s["frontier"] = s["visited"]
-        s["frontier_n"] = 1
+    def search(start: int, edges: DataFrame) -> Frontier:
+        def expand(frontier: DataFrame, visited: DataFrame) -> DataFrame:
+            return (
+                frontier.join(edges, frontier["id"] == edges["u"])
+                .select(F.col("v").alias("id"), (F.col("d") + 1).alias("d"))
+                .groupBy("id").agg(F.min("d").alias("d"))
+                .join(visited.select("id"), "id", "left_anti")
+            )
+
+        seed = local_relation(spark, [(int(start), 0)], "id bigint, d bigint")
+        return Frontier(seed, expand, size=1)
+
+    fwd, bwd = search(src_id, fwd_e), search(dst_id, bwd_e)
     best: int | None = None
-    converged = False
     for _i in range(max_iterations):
-        lf, lb = sides["f"]["level"], sides["b"]["level"]
-        if best is not None and lf + lb >= best:
-            converged = True
+        if best is not None and fwd.rounds + bwd.rounds >= best:
             break
-        side = sides["f"] if sides["f"]["frontier_n"] <= sides["b"]["frontier_n"] else sides["b"]
-        other = sides["b"] if side is sides["f"] else sides["f"]
-        nxt = (
-            side["frontier"].join(side["edges"], side["frontier"]["id"] == side["edges"]["u"])
-            .select(F.col("v").alias("id"), (F.col("d") + 1).alias("d"))
-            .groupBy("id").agg(F.min("d").alias("d"))
-            .join(side["visited"].select("id"), "id", "left_anti")
-        )
-        # lazy cut + full count: one job materializes the frontier
-        # and answers the exhaustion test
-        nxt = cut_lineage(nxt, eager=False)
-        n = nxt.count()
-        side["level"] += 1
-        side["frontier"], side["frontier_n"] = nxt, n
-        if n == 0:
-            converged = True
+        side, other = (fwd, bwd) if fwd.size <= bwd.size else (bwd, fwd)
+        if not side.advance():
             break  # side exhausted: no shorter path remains
-        side["visited"] = cut_lineage(side["visited"].unionByName(nxt), eager=False)
         meet = (
-            nxt.join(other["visited"].withColumnRenamed("d", "d2"), "id")
+            side.frontier.join(other.state.withColumnRenamed("d", "d2"), "id")
             .agg(F.min(F.col("d") + F.col("d2")).alias("m"))
             .collect()[0]["m"]
         )
         if meet is not None:
             best = int(meet) if best is None else min(best, int(meet))
-    if not converged and not (
-        best is not None
-        and sides["f"]["level"] + sides["b"]["level"] >= best
-    ):
-        fwd_e.unpersist(), bwd_e.unpersist()
+    fwd_e.unpersist(), bwd_e.unpersist()
+    exhausted = fwd.converged or bwd.converged
+    if not exhausted and not (best is not None and fwd.rounds + bwd.rounds >= best):
         raise ValueError(
             f"bidirectional_distance did not converge within "
             f"{max_iterations} frontier expansions (neither side "
             f"exhausted, optimality bound not reached); raise "
             f"max_iterations for high-diameter graphs"
         )
-    fwd_e.unpersist(), bwd_e.unpersist()
     return one_row(best)
 
 
@@ -1968,21 +1881,8 @@ def feature_propagation(
     aggs = {"mean": F.avg, "sum": F.sum, "min": F.min, "max": F.max}
     if agg not in aggs:
         raise ValueError(f"agg must be one of {sorted(aggs)}, got {agg!r}")
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
-    parts = []
-    if direction in ("out", "both"):
-        parts.append(e.select(F.col("src").alias("u"), F.col("dst").alias("v")))
-    if direction in ("in", "both"):
-        parts.append(e.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-    if not parts:
-        raise ValueError(f"direction must be out|in|both, got {direction!r}")
-    ad = parts[0]
-    for p in parts[1:]:
-        ad = ad.unionByName(p)
     # message flows v -> u (u aggregates its neighbors' values)
-    ad = ad.filter(F.col("u") != F.col("v")).dropDuplicates(["u", "v"]).cache()
+    ad = _adjacency(_edges(graph, edge_labels), direction).cache()
     state = graph.vertices.select(
         "id", F.col(feature_col).cast("double").alias("f0")
     )
@@ -2058,16 +1958,7 @@ def link_prediction(
     hub-mediated similarity carries little signal — the standard cap),
     while scoring still counts every common neighbor including hubs.
     """
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
-    ad = (
-        e.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .unionByName(e.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .dropDuplicates(["u", "v"])
-        .cache()
-    )
+    ad = _sym_adjacency(_edges(graph, edge_labels)).cache()
     ad.count()
     # the degree table feeds four consumers (center cap, the common-
     # neighbor weight, and both endpoint joins) and the generated pair
@@ -2164,9 +2055,6 @@ def condensation(
     """
     if components is None:
         components = strongly_connected_components(graph, edge_labels=edge_labels)
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
     verts = (
         components.groupBy(F.col("component").alias("id"))
         .agg(F.count(F.lit(1)).cast("int").alias("n_members"))
@@ -2176,7 +2064,8 @@ def condensation(
     ca = components.select(F.col("id").alias("src"), F.col("component").alias("ca"))
     cb = components.select(F.col("id").alias("dst"), F.col("component").alias("cb"))
     ce = (
-        e.select("src", "dst")
+        _edges(graph, edge_labels)
+        .select("src", "dst")
         .join(ca, "src")
         .join(cb, "dst")
         .filter(F.col("ca") != F.col("cb"))
@@ -2209,45 +2098,26 @@ def k_hop_subgraph(
     matching ``subgraph_``'s edge-induced dual). Never materializes
     anything larger than the k-hop ball.
     """
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
-    parts = []
-    if direction in ("out", "both"):
-        parts.append(e.select(F.col("src").alias("u"), F.col("dst").alias("v")))
-    if direction in ("in", "both"):
-        parts.append(e.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-    if not parts:
-        raise ValueError(f"direction must be out|in|both, got {direction!r}")
-    ad = parts[0]
-    for p in parts[1:]:
-        ad = ad.unionByName(p)
-    ad = ad.dropDuplicates(["u", "v"]).cache()
-    spark = graph.vertices.sparkSession
-    seen = cut_lineage(
-        local_relation(spark, [(int(s),) for s in seed_ids], "id bigint"), eager=True
-    )
-    frontier = seen
-    for i in range(k):
-        nxt = (
+    e = _edges(graph, edge_labels)
+    ad = _adjacency(e, direction).cache()
+
+    def expand(frontier: DataFrame, seen: DataFrame) -> DataFrame:
+        return (
             frontier.join(ad, frontier["id"] == ad["u"])
             .select(F.col("v").alias("id"))
             .dropDuplicates()
             .join(seen, "id", "left_anti")
         )
-        # lazy cut + full count: one job per round instead of two
-        nxt = cut_lineage(nxt, eager=False)
-        if nxt.count() == 0:
-            break
-        seen = cut_lineage(seen.unionByName(nxt), eager=False)
-        frontier = nxt
+
+    seed = local_relation(
+        graph.vertices.sparkSession, [(int(s),) for s in seed_ids], "id bigint"
+    )
+    seen = Frontier(seed, expand).run(k).state
     ad.unpersist()
     v = graph.vertices.join(seen, "id", "left_semi")
-    ee = graph.edges.join(
-        seen.withColumnRenamed("id", "src"), "src", "left_semi"
-    ).join(seen.withColumnRenamed("id", "dst"), "dst", "left_semi")
-    if edge_labels:
-        ee = ee.filter(F.col("label").isin(list(edge_labels)))
+    ee = e.join(seen.withColumnRenamed("id", "src"), "src", "left_semi").join(
+        seen.withColumnRenamed("id", "dst"), "dst", "left_semi"
+    )
     vp = graph.vertex_properties
     if vp is not None:
         vp = vp.join(seen.withColumnRenamed("id", "vertex_id"), "vertex_id", "left_semi")
@@ -2274,10 +2144,7 @@ def hits(
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
-    ed = e.select("src", "dst").dropDuplicates().cache()
+    ed = _edges(graph, edge_labels).select("src", "dst").dropDuplicates().cache()
 
     def _l2_normalize(raw: DataFrame, col: str) -> DataFrame:
         norm = raw.agg(
@@ -2340,15 +2207,7 @@ def degree_assortativity(
     map-side-combinable; the coefficient itself is a single-row
     closed form, so the SQL oracle replays it exactly.
     """
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
-    ue = (
-        e.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .unionByName(e.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .dropDuplicates(["u", "v"])
-    )
+    ue = _sym_adjacency(_edges(graph, edge_labels))
     deg = ue.groupBy(F.col("u").alias("id")).agg(F.count(F.lit(1)).alias("d"))
     pairs = (
         ue.join(deg.select(F.col("id").alias("u"), F.col("d").alias("du")), "u")
@@ -2395,15 +2254,7 @@ def transitivity(
     the enumerated triangle stream feeds ONE count aggregate, and the
     (id, d) degree table is shared between the wedge sum and the
     degree orientation instead of being aggregated twice."""
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
-    und = (
-        e.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b"])
-        .cache()
-    )
+    und = _undirected_pairs(_edges(graph, edge_labels)).cache()
     deg = (
         und.select(F.col("a").alias("id"))
         .unionAll(und.select(F.col("b").alias("id")))
@@ -2459,15 +2310,7 @@ def approximate_diameter(
     scan rounds over the full graph (FulgoraGraphComputer's
     iteration loop); the double sweep needs exactly two of them.
     """
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
-    und = (
-        e.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b"])
-        .cache()
-    )
+    und = _undirected_pairs(_edges(graph, edge_labels)).cache()
     sym = (
         und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionAll(und.select(F.col("b").alias("src"), F.col("a").alias("dst")))
@@ -2538,9 +2381,7 @@ def modularity(
     each endpoint, one community aggregate, one 1-row reduce — no
     iteration, nothing driver-sized beyond the final row.
     """
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
+    e = _edges(graph, edge_labels)
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
     und = (
         e.select(
@@ -2625,9 +2466,7 @@ def louvain(
     """
     from pyspark.sql import Window
 
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
+    e = _edges(graph, edge_labels)
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
     # undirected weighted edge list, deduped; self-loops carry intra
     # weight at coarser levels (loop weight counts ONCE in k(v))
@@ -2968,12 +2807,8 @@ def minimum_spanning_forest(
         live = cut_lineage(live, eager=True)
         n_live = live.count()
     if n_live > 0:
-        import warnings
-
-        warnings.warn(
-            f"minimum_spanning_forest did not converge within "
-            f"{max_iterations} rounds; the forest may be incomplete.",
-            RuntimeWarning,
+        _warn_unconverged(
+            "minimum_spanning_forest", max_iterations, "the forest may be incomplete."
         )
     if not forest_rounds:
         return local_relation(spark, [], "u long, v long, weight double")
@@ -3075,18 +2910,7 @@ def node2vec_walks(
         wo
     ).cast("long")
 
-    e = graph.edges
-    if edge_labels:
-        e = e.filter(F.col("label").isin(list(edge_labels)))
-    parts = []
-    if direction in ("out", "both"):
-        parts.append(e.select(F.col("src").alias("u"), F.col("dst").alias("v")))
-    if direction in ("in", "both"):
-        parts.append(e.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-    ad = parts[0]
-    for p in parts[1:]:
-        ad = ad.unionByName(p)
-    ad = ad.filter(F.col("u") != F.col("v")).dropDuplicates(["u", "v"])
+    ad = _adjacency(_edges(graph, edge_labels), direction)
     if max_neighbors is not None:
         pick = portable_hash64(
             F.concat(F.lit(f"n2vn{seed}:"), F.col("v").cast("string"))

@@ -23,9 +23,29 @@ only the vertex sides it actually references (a src-only program does
 one join per round, not two). AQE handles skewed (supernode)
 recipients — the analog of Titan's PartitionedVertexProgramExecutor
 (C9).
+
+The frontier driver (:class:`Frontier`) runs the BFS family — loops
+whose state only grows by what each round newly reaches (landmark
+distances, betweenness's forward phase, k-hop balls, bidirectional
+BFS, DAG layering). The caller gives the seed and the expand step
+(frontier, state) → delta, which settles against the state itself
+(an anti-join, an improvement filter); the driver owns the rest: the
+eager cut of the seed, the delta's cut, the merge of the delta into
+the state (union unless the caller passes an upsert), the round cap,
+and the ``converged``/``rounds`` record. Each round is ONE Spark
+action: the delta is cut lazily, so the ``count()`` that answers "is
+the frontier empty" is also the action that materializes the
+checkpoint, and the merged state is cut lazily too, so the next
+round's count fills it. An eager cut plus a separate emptiness probe
+costs two actions per round (under AQE each action runs one job per
+shuffle stage, so the saving is that many jobs). One round per
+:meth:`Frontier.advance` call lets bidirectional BFS step whichever
+side has the smaller frontier.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -179,3 +199,48 @@ def pregel(
             v = cut_lineage(v, eager=True)
     edges.unpersist(blocking=False)
     return v
+
+
+class Frontier:
+    """A frontier loop whose state grows by each round's delta.
+
+    ``expand(frontier, state)`` returns the round's delta: what the
+    frontier newly reaches, already settled against ``state``. An empty
+    delta ends the loop. ``merge(state, delta)`` folds the delta in
+    (default: union). ``size`` is the last delta's row count; pass it
+    for the seed when the caller knows it, since no job is run to find
+    it. ``rounds`` counts the rounds that found something; ``converged``
+    says a round came back empty.
+    """
+
+    def __init__(
+        self,
+        seed: DataFrame,
+        expand: Callable[[DataFrame, DataFrame], DataFrame],
+        merge: Callable[[DataFrame, DataFrame], DataFrame] = DataFrame.unionByName,
+        size: int | None = None,
+    ):
+        self.state = self.frontier = cut_lineage(seed, eager=True)
+        self.size = size
+        self.rounds = 0
+        self.converged = False
+        self._expand, self._merge = expand, merge
+
+    def advance(self) -> bool:
+        """Run one round (one action); False once the delta is empty."""
+        delta = cut_lineage(self._expand(self.frontier, self.state), eager=False)
+        self.size = delta.count()
+        if self.size == 0:
+            self.converged = True
+            return False
+        self.rounds += 1
+        self.state = cut_lineage(self._merge(self.state, delta), eager=False)
+        self.frontier = delta
+        return True
+
+    def run(self, max_rounds: int) -> "Frontier":
+        """Advance until converged or ``max_rounds`` rounds found
+        something."""
+        while not self.converged and self.rounds < max_rounds:
+            self.advance()
+        return self
