@@ -1,6 +1,8 @@
-"""The BFS family on the frontier driver: closeness and harmonic
-(landmark distances), sampled betweenness, k_hop_subgraph,
-bidirectional_distance and topological_levels.
+"""The loop families on the two drivers, against independent oracles.
+On the frontier driver: closeness and harmonic (landmark distances),
+sampled betweenness, k_hop_subgraph, bidirectional_distance,
+topological_levels and shortest_distance. On ``pregel()``'s fixed
+rounds: pagerank, personalized_pagerank and label_propagation.
 
 Ghost-vertex rule (an edge endpoint with no vertex row): the BFS loops
 expand over the edge relation alone, so a ghost is a vertex of the
@@ -9,13 +11,22 @@ on shortest paths. Seeds that are filtered from the vertex table
 (landmarks, betweenness sources) must be vertex rows; outputs joined to
 the vertex table (betweenness, k_hop_subgraph's vertices) list vertex
 rows only. topological_levels layers vertex rows only: an edge with a
-ghost endpoint takes no part in it.
+ghost endpoint takes no part in it. shortest_distance likewise: a ghost
+neither gets a distance nor relays one, so the oracle runs on the
+vertex-row subgraph. label_propagation: a ghost neither sends nor
+receives a label. pagerank and personalized_pagerank: N counts vertex
+rows, an edge to a ghost counts in its source's outdeg but delivers
+nothing (its mass is lost), a ghost source sends nothing, and a ghost
+seed counts in |S| but holds no mass.
 """
 
 import random
+import warnings
+from collections import Counter
 from fractions import Fraction
 
 import networkx as nx
+import numpy as np
 import pyarrow as pa
 import pytest
 
@@ -25,27 +36,29 @@ from titan_spark.compute import (
     closeness_centrality,
     harmonic_centrality,
     k_hop_subgraph,
+    label_propagation,
+    pagerank,
+    personalized_pagerank,
+    shortest_distance,
     topological_levels,
 )
 from titan_spark.graph import PropertyGraph
 
 
-def _property_graph(spark, ids, edges):
+def _property_graph(spark, ids, edges, weights=None):
     cols = list(zip(*edges)) or [(), (), (), ()]
     v = spark.createDataFrame(
         pa.table({"id": pa.array(ids, pa.int64()), "label": ["n"] * len(ids)})
     )
-    e = spark.createDataFrame(
-        pa.table(
-            {
-                "edge_id": pa.array(cols[0], pa.int64()),
-                "src": pa.array(cols[1], pa.int64()),
-                "dst": pa.array(cols[2], pa.int64()),
-                "label": pa.array(cols[3], pa.string()),
-            }
-        )
-    )
-    return PropertyGraph(v, e)
+    columns = {
+        "edge_id": pa.array(cols[0], pa.int64()),
+        "src": pa.array(cols[1], pa.int64()),
+        "dst": pa.array(cols[2], pa.int64()),
+        "label": pa.array(cols[3], pa.string()),
+    }
+    if weights is not None:
+        columns["w"] = pa.array(weights, pa.float64())
+    return PropertyGraph(v, spark.createDataFrame(pa.table(columns)))
 
 
 def _random_case(rng, base):
@@ -112,6 +125,66 @@ def _brandes(und, sources):
 
 def _close(a, b):
     return abs(a - b) <= 2e-6
+
+
+def _vertex_rows(dg, ids):
+    """``dg`` restricted to the vertex rows, every row a node."""
+    sub = dg.subgraph(ids).copy()
+    sub.add_nodes_from(ids)
+    return sub
+
+
+def _widest_seed(view, ids):
+    """The vertex row that reaches the most vertices, ties to the
+    smallest id."""
+    return min(ids, key=lambda v: (-len(nx.descendants(view, v)), v))
+
+
+def _label_replay(ids, edges, labels, rounds):
+    """Synchronous label propagation replayed in pure Python: each
+    vertex row takes the modal label of its distinct undirected
+    neighbours (a self-loop makes it its own neighbour), ties to the
+    smallest label; no neighbour keeps the label. Ghosts take no part."""
+    rows = set(ids)
+    nbrs = {v: set() for v in ids}
+    for _, s, d, lab in edges:
+        if (not labels or lab in labels) and s in rows and d in rows:
+            nbrs[d].add(s)
+            nbrs[s].add(d)
+    community = {v: v for v in ids}
+    for _ in range(rounds):
+        new = {}
+        for v in ids:
+            votes = Counter(community[u] for u in nbrs[v])
+            top = max(votes.values(), default=0)
+            new[v] = min((c for c, k in votes.items() if k == top), default=community[v])
+        community = new
+    return community
+
+
+def _rank_replay(ids, edges, labels, alpha, rounds, seeds=None):
+    """PageRank (``seeds`` None) or personalized PageRank replayed with
+    numpy: x' = restart + α·M·x, M[d, s] = (#edges s→d)/outdeg(s), with
+    outdeg over every kept edge of s, ghost targets included."""
+    idx = {v: i for i, v in enumerate(ids)}
+    kept = [(s, d) for _, s, d, lab in edges if not labels or lab in labels]
+    outdeg = Counter(s for s, _ in kept)
+    m = np.zeros((len(ids), len(ids)))
+    for s, d in kept:
+        if s in idx and d in idx:
+            m[idx[d], idx[s]] += 1.0 / outdeg[s]
+    if seeds is None:
+        x = np.full(len(ids), 1.0 / len(ids))
+        restart = np.full(len(ids), (1.0 - alpha) / len(ids))
+    else:
+        x = np.zeros(len(ids))
+        for s in seeds:
+            if s in idx:
+                x[idx[s]] = 1.0 / len(seeds)
+        restart = (1.0 - alpha) * x
+    for _ in range(rounds):
+        x = restart + alpha * (m @ x)
+    return {v: x[i] for v, i in idx.items()}
 
 
 def test_bfs_family_matches_independent_oracles(spark):
@@ -186,6 +259,66 @@ def test_bfs_family_matches_independent_oracles(spark):
         got = topological_levels(dag_g, edge_labels=labels)
         assert {r["id"]: r["level"] for r in got.collect()} == level
 
+        # single-source distance in each direction, from the vertex row
+        # that reaches the most, over the vertex-row subgraph
+        sub = _vertex_rows(dg, ids)
+        views = {"out": sub, "in": sub.reverse(), "both": sub.to_undirected()}
+        for direction, view in views.items():
+            src = _widest_seed(view, ids)
+            want = nx.single_source_shortest_path_length(view, src)
+            got = shortest_distance(g, src, direction=direction, edge_labels=labels)
+            assert {r["id"]: r["distance"] for r in got.collect()} == {
+                v: want.get(v) for v in ids
+            }, direction
+        with pytest.raises(ValueError, match=r"direction must be out\|in\|both"):
+            shortest_distance(g, src, direction="sideways")
+
+        # label propagation against a synchronous replay
+        got = label_propagation(g, iterations=3, edge_labels=labels)
+        assert {r["id"]: r["community"] for r in got.collect()} == _label_replay(
+            ids, edges, labels, 3
+        )
+
+        # pagerank and personalized pagerank against a numpy replay; the
+        # personalized seeds include ghosts
+        for got, col, want in (
+            (pagerank(g, 0.85, 10, labels), "pagerank",
+             _rank_replay(ids, edges, labels, 0.85, 10)),
+            (personalized_pagerank(g, seeds, 0.85, 10, labels), "ppr",
+             _rank_replay(ids, edges, labels, 0.85, 10, seeds)),
+        ):
+            rows = {r["id"]: r[col] for r in got.collect()}
+            assert rows.keys() == want.keys(), col
+            assert max(abs(rows[v] - want[v]) for v in ids) <= 1e-12, col
+
+    # weighted distance against Dijkstra: parallel edges of different
+    # weights (the lightest counts) and one NULL weight, which carries
+    # nothing, on an edge leaving the source
+    weights = [rng.choice([0.5, 1.0, 1.5, 2.0, 3.0]) for _ in edges]
+    und = _vertex_rows(_digraph(edges, ()), ids).to_undirected()
+    src = _widest_seed(und, ids)
+    null = next(
+        k for k, (_, s, d, _) in enumerate(edges)
+        if src in (s, d) and s != d and {s, d} <= set(ids)
+    )
+    weights[null] = None
+    wg = nx.Graph()
+    wg.add_nodes_from(ids)
+    for (_, s, d, _), w in zip(edges, weights):
+        if w is not None and s in ids and d in ids:
+            lightest = min(w, wg.edges[s, d]["weight"]) if wg.has_edge(s, d) else w
+            wg.add_edge(s, d, weight=lightest)
+    reach = nx.node_connected_component(und, src)
+    assert any(
+        len({w for (_, s, d, _), w in zip(edges, weights) if {s, d} == pair}) > 1
+        for pair in ({s, d} for _, s, d, _ in edges if s in reach and d in reach)
+    ), "no parallel edges of different weights in the source's component"
+    want = nx.single_source_dijkstra_path_length(wg, src)
+    got = shortest_distance(
+        _property_graph(spark, ids, edges, weights), src, weight_col="w", direction="both"
+    )
+    assert {r["id"]: r["distance"] for r in got.collect()} == {v: want.get(v) for v in ids}
+
     # point-to-point distance, undirected and directed, one graph each
     for c, (c_ids, c_ghosts, c_edges) in enumerate(cases):
         labels = rng.choice([(), ("a",)])
@@ -206,6 +339,19 @@ def test_capped_bfs_loops_warn(spark):
         harmonic_centrality(g, [0], max_iterations=3).collect()
     with pytest.warns(RuntimeWarning, match="did not converge"):
         betweenness_centrality(g, [0], max_iterations=3).collect()
+    with pytest.warns(RuntimeWarning, match="did not converge"):
+        got = shortest_distance(g, 0, max_iterations=3).collect()
+    assert {r["id"]: r["distance"] for r in got} == {
+        i: float(i) if i <= 3 else None for i in range(25)
+    }
+    # a search that settles within its cap, and the fixed-round
+    # programs, whose rounds are what they compute, do not warn
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        assert shortest_distance(g, 0).filter("distance = 24").count() == 1
+        label_propagation(g, iterations=1).collect()
+        pagerank(g, iterations=1).collect()
+        personalized_pagerank(g, [0], iterations=1).collect()
 
 
 def test_bfs_family_rows_do_not_depend_on_the_partition_count(spark, sf_dir):
@@ -219,6 +365,12 @@ def test_bfs_family_rows_do_not_depend_on_the_partition_count(spark, sf_dir):
         "topo_levels",
         "k_hop_ego",
         "point_distance",
+        "shortest_distance",
+        "weighted_distance",
+        "graph_diameter",
+        "pagerank",
+        "personalized_pagerank",
+        "label_propagation",
     )
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
@@ -268,3 +420,18 @@ def test_bfs_loop_job_counts_are_pinned(spark):
     )
     assert levels == {0: 0, 1: 1, 2: 2, 3: 3, 4: 4, 5: 5, 6: 2}
     assert jobs == 45
+    dist, jobs = _jobs(
+        spark,
+        "bfs-pin-distance",
+        lambda: {r["id"]: r["distance"] for r in shortest_distance(g, 0).collect()},
+    )
+    assert dist == {0: 0.0, 1: 1.0, 2: 2.0, 3: 3.0, 4: 4.0, 5: 5.0, 6: 2.0}
+    assert jobs == 40
+    # fixed rounds: the initial cut, one eager cut per round and the collect
+    communities, jobs = _jobs(
+        spark,
+        "bfs-pin-lpa",
+        lambda: {r["id"]: r["community"] for r in label_propagation(g).collect()},
+    )
+    assert communities == {0: 1, 1: 0, 2: 1, 3: 0, 4: 1, 5: 2, 6: 1}
+    assert jobs == 17

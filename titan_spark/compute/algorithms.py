@@ -19,7 +19,7 @@ from __future__ import annotations
 import os
 import warnings
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from titan_spark.compute.pregel import Frontier, pregel
@@ -96,6 +96,29 @@ def _warn_unconverged(what: str, max_iterations: int, result: str) -> None:
     )
 
 
+def _rank_rounds(
+    graph: PropertyGraph, col: str, initial: Column, restart: Column, alpha: float,
+    iterations: int, edge_labels: tuple[str, ...],
+) -> DataFrame:
+    """The power iteration behind :func:`pagerank` and
+    :func:`personalized_pagerank`: ``iterations`` pregel rounds of
+    col' = restart + α·Σ_{u→v} col(u)/outdeg(u) over (src, dst, outdeg)
+    contribution edges. outdeg counts every edge of the source, ghost
+    targets included, so mass sent to a ghost is lost; a ghost source
+    sends nothing."""
+    e = _edges(graph, edge_labels).select("src", "dst")
+    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+    return pregel(
+        graph.vertices,
+        e.join(outdeg, "src"),
+        initial={col: initial},
+        agg=F.sum("msg").alias("s"),
+        update={col: restart + F.lit(alpha) * F.coalesce(F.col("s"), F.lit(0.0))},
+        msg_to_dst=F.col(f"src.{col}") / F.col("edge.outdeg"),
+        max_iterations=iterations,
+    )
+
+
 def pagerank(
     graph: PropertyGraph,
     alpha: float = 0.85,
@@ -106,47 +129,23 @@ def pagerank(
 
     The degree pre-round of the reference (messages over inE at
     iteration 0) is a plain aggregation here. Edges+degrees are
-    computed once and cached; each round is one shuffle on dst.
+    computed once and cached by :func:`pregel`; each round is one
+    shuffle on dst.
+
+    Ghost endpoints: N counts vertex rows only; an edge to a ghost
+    counts in its source's outdeg but delivers nothing, and a ghost
+    source sends nothing.
 
     Lineage is cut every round because each round references the state
     twice (message join + rank join): an unmaterialized state doubles
     the physical plan per round (2^N base scans), while materializing
     one row per vertex per round is cheap at any scale.
     """
-    e = _edges(graph, edge_labels).select("src", "dst")
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # contribution edges: src, dst, outdeg(src) — built once, cached
-    contrib_e = e.join(outdeg, "src").cache()
-
     n = graph.num_vertices()
-    ranks = graph.vertices.select("id").withColumn("pagerank", F.lit(1.0 / n))
-    base = (1.0 - alpha) / n
-
-    def step(state: DataFrame) -> DataFrame:
-        msgs = (
-            contrib_e.join(state, contrib_e["src"] == state["id"])
-            .select(F.col("dst").alias("id"), (F.col("pagerank") / F.col("outdeg")).alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("s"))
-        )
-        return (
-            state.drop("pagerank")
-            .join(msgs, "id", "left")
-            .select(
-                "id",
-                (F.lit(base) + F.lit(alpha) * F.coalesce(F.col("s"), F.lit(0.0))).alias(
-                    "pagerank"
-                ),
-            )
-        )
-
-    try:
-        for i in range(iterations):
-            ranks = cut_lineage(step(ranks), eager=True)
-        # materialize before releasing the cached contribution edges
-        return cut_lineage(ranks, eager=True)
-    finally:
-        contrib_e.unpersist(blocking=False)
+    return _rank_rounds(
+        graph, "pagerank", F.lit(1.0 / n), F.lit((1.0 - alpha) / n),
+        alpha, iterations, edge_labels,
+    )
 
 
 def shortest_distance(
@@ -158,40 +157,54 @@ def shortest_distance(
     max_iterations: int = 50,
 ) -> DataFrame:
     """Single-source shortest distance → DataFrame(id, distance);
-    unreachable vertices have NULL distance.
+    unreachable vertices have NULL distance. ``direction`` follows
+    edges src→dst (out), dst→src (in) or both ways (both); an edge
+    whose weight is NULL carries nothing.
 
-    Frontier iteration: only vertices improved in the previous round
-    send messages, so round cost tracks the frontier, not |V| — the
-    scalable form of the reference's fixpoint-with-incr-flag loop.
+    Frontier iteration over one state row per vertex: only vertices
+    improved in the previous round send messages, so a round's message
+    cost tracks the frontier, not |E| — the scalable form of the
+    reference's fixpoint-with-incr-flag loop. A search still improving
+    after ``max_iterations`` rounds warns.
+
+    Ghost endpoints: an edge with an endpoint that has no vertex row is
+    dropped, so a ghost neither gets a distance nor relays one.
     """
+    if direction not in ("out", "in", "both"):
+        raise ValueError(f"direction must be out|in|both, got {direction!r}")
     e = _edges(graph, edge_labels)
-    w = F.col(f"edge.{weight_col}").cast("double") if weight_col else F.lit(1.0)
-    msg = F.col("src.distance") + w if direction == "out" else F.col("dst.distance") + w
-    kwargs = {"msg_to_dst": msg} if direction == "out" else {"msg_to_src": msg}
-
-    result = pregel(
-        graph.vertices,
-        e,
-        initial={
-            "distance": F.when(F.col("id") == seed_id, F.lit(0.0)).otherwise(
-                F.lit(None).cast("double")
-            ),
-            "_active": F.col("id") == seed_id,
-        },
-        agg=F.min("msg").alias("newdist"),
-        update={
-            "distance": F.when(
-                F.col("newdist") < F.coalesce(F.col("distance"), F.lit(float("inf"))),
-                F.col("newdist"),
-            ).otherwise(F.col("distance")),
-            "_active": F.col("newdist")
-            < F.coalesce(F.col("distance"), F.lit(float("inf"))),
-        },
-        max_iterations=max_iterations,
-        active_col="_active",
-        **kwargs,
+    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
+    fwd = e.select(F.col("src").alias("u"), F.col("dst").alias("v"), w.alias("w"))
+    back = e.select(F.col("dst").alias("u"), F.col("src").alias("v"), w.alias("w"))
+    uvw = {"out": fwd, "in": back, "both": fwd.unionByName(back)}[direction].cache()
+    seed = graph.vertices.select(
+        "id", F.when(F.col("id") == seed_id, F.lit(0.0)).alias("distance")
     )
-    return result.select("id", "distance")
+
+    def expand(frontier: DataFrame, dist: DataFrame) -> DataFrame:
+        # the seed frontier is every vertex row, and only the source has
+        # a distance to send; the inner join with the state (the vertex
+        # rows) drops ghost recipients
+        return (
+            frontier.filter(F.col("distance").isNotNull())
+            .join(uvw.withColumnRenamed("u", "id"), "id")
+            .groupBy(F.col("v").alias("id"))
+            .agg(F.min(F.col("distance") + F.col("w")).alias("_nd"))
+            .join(dist, "id")
+            .filter(F.col("_nd") < F.coalesce(F.col("distance"), F.lit(float("inf"))))
+            .select("id", F.col("_nd").alias("distance"))
+        )
+
+    def lower(dist: DataFrame, better: DataFrame) -> DataFrame:
+        return dist.unionByName(better).groupBy("id").agg(F.min("distance").alias("distance"))
+
+    sssp = Frontier(seed, expand, lower).run(max_iterations)
+    uvw.unpersist()
+    if not sssp.converged:
+        _warn_unconverged(
+            "shortest_distance", max_iterations, "distances may be too long or missing."
+        )
+    return sssp.state
 
 
 def connected_components(
@@ -667,35 +680,24 @@ def label_propagation(
     programs through FulgoraGraphComputer's BSP rounds; the sync
     schedule is the BSP one).
 
-    Scale shape per round: one edges⋈state join (message send), one
-    map-side-combinable (vertex, label) count, one per-vertex argmax
-    window over the count relation — all keyed on vertex id; lineage
-    cut per round like every other BSP loop here.
-    """
-    from pyspark.sql import Window
+    A self-loop votes for the vertex's own label, parallel edges vote
+    once, and a ghost endpoint (no vertex row) neither sends nor
+    receives a label.
 
-    und = _sym_adjacency(_edges(graph, edge_labels), drop_loops=False).cache()
-    state = graph.vertices.select("id", F.col("id").alias("community"))
-    state = cut_lineage(state, eager=True)
-    w = Window.partitionBy("id").orderBy(F.col("n").desc(), F.col("community").asc())
-    for i in range(iterations):
-        msgs = und.join(state.withColumnRenamed("id", "u"), "u").select(
-            F.col("v").alias("id"), "community"
-        )
-        modal = (
-            msgs.groupBy("id", "community")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("id", F.col("community").alias("_new"))
-        )
-        state = (
-            state.join(modal, "id", "left")
-            .select("id", F.coalesce("_new", "community").alias("community"))
-        )
-        state = cut_lineage(state, eager=True)
-    und.unpersist(blocking=False)
-    return state
+    One :func:`pregel` round: one edges⋈state join (message send), one
+    per-vertex ``mode`` (ties to the smallest label) keyed on vertex
+    id; lineage cut per round like every other BSP loop here.
+    """
+    und = _sym_adjacency(_edges(graph, edge_labels), drop_loops=False)
+    return pregel(
+        graph.vertices,
+        und.select(F.col("u").alias("src"), F.col("v").alias("dst")),
+        initial={"community": F.col("id")},
+        agg=F.mode("msg", deterministic=True).alias("_new"),
+        update={"community": F.coalesce("_new", "community")},
+        msg_to_dst=F.col("src.community"),
+        max_iterations=iterations,
+    )
 
 
 def k_core(
@@ -976,48 +978,23 @@ def personalized_pagerank(
     """Personalized PageRank → DataFrame(id, ppr): the random walk
     restarts into the seed set instead of the uniform vector —
     PR_{t+1}(v) = (1−α)·1[v ∈ S]/|S| + α·Σ_{u→v} PR_t(u)/outdeg(u),
-    initial mass 1/|S| on each seed. Same loop shape as
-    :func:`pagerank` (cached contribution edges, one shuffle per
-    round, lineage cut per round); the restart vector is a broadcast
-    ``isin`` literal — fine for seed sets up to thousands, beyond that
-    pass seeds as a DataFrame join instead.
+    initial mass 1/|S| on each seed. Same rounds as :func:`pagerank`
+    (cached contribution edges, one shuffle per round, lineage cut per
+    round); the restart vector is a broadcast ``isin`` literal — fine
+    for seed sets up to thousands, beyond that pass seeds as a
+    DataFrame join instead. Ghost endpoints as in :func:`pagerank`; a
+    ghost seed counts in |S| but holds no mass.
     """
     seeds = [int(s) for s in seed_ids]
     if not seeds:
         raise ValueError("personalized_pagerank requires at least one seed")
-    e = _edges(graph, edge_labels).select("src", "dst")
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    contrib_e = e.join(outdeg, "src").cache()
-
     seed_mass = 1.0 / len(seeds)
     is_seed = F.col("id").isin(seeds)
-    base = F.when(is_seed, F.lit((1.0 - alpha) * seed_mass)).otherwise(F.lit(0.0))
-    ranks = graph.vertices.select("id").withColumn(
-        "ppr", F.when(is_seed, F.lit(seed_mass)).otherwise(F.lit(0.0))
+    return _rank_rounds(
+        graph, "ppr", F.when(is_seed, F.lit(seed_mass)).otherwise(F.lit(0.0)),
+        F.when(is_seed, F.lit((1.0 - alpha) * seed_mass)).otherwise(F.lit(0.0)),
+        alpha, iterations, edge_labels,
     )
-
-    def step(state: DataFrame) -> DataFrame:
-        msgs = (
-            contrib_e.join(state, contrib_e["src"] == state["id"])
-            .select(F.col("dst").alias("id"), (F.col("ppr") / F.col("outdeg")).alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("s"))
-        )
-        return (
-            state.drop("ppr")
-            .join(msgs, "id", "left")
-            .select(
-                "id",
-                (base + F.lit(alpha) * F.coalesce(F.col("s"), F.lit(0.0))).alias("ppr"),
-            )
-        )
-
-    try:
-        for i in range(iterations):
-            ranks = cut_lineage(step(ranks), eager=True)
-        return cut_lineage(ranks, eager=True)
-    finally:
-        contrib_e.unpersist(blocking=False)
 
 
 def peer_pressure(
@@ -1094,7 +1071,8 @@ def closeness_centrality(
     (n−1)/Σd self-exclusion) while a non-landmark vertex keeps every
     reached landmark — its reached set never contains itself, so
     nothing is discarded. See :func:`_landmark_distances` for the
-    multi-source-BFS cost model.
+    multi-source-BFS cost model. Ghost endpoints (no vertex row) are
+    traversed and get rows; a ghost landmark seeds nothing.
     """
     state = _landmark_distances(graph, landmark_ids, edge_labels, max_iterations)
     is_lm = F.max(F.when(F.col("d") == 0, F.lit(1)).otherwise(F.lit(0)))
@@ -1121,7 +1099,8 @@ def harmonic_centrality(
     Centrality", Internet Math. 2014 — the closeness variant that
     stays well-defined on disconnected graphs: unreachable landmarks
     contribute 0 instead of poisoning the sum). Same one multi-source
-    BFS as closeness; only the final aggregation differs."""
+    BFS as closeness, ghosts included; only the final aggregation
+    differs."""
     state = _landmark_distances(graph, landmark_ids, edge_labels, max_iterations)
     return state.groupBy("id").agg(
         F.round(
@@ -1220,7 +1199,8 @@ def topological_levels(
     O(out-edges(frontier) + |bumped|) plus one anti-join merge into
     the state, not O(|E|)·depth. Raises on non-convergence (a cycle:
     topological layering is undefined — the reference failure mode,
-    not a silent wrong answer).
+    not a silent wrong answer). Only vertex rows are layered: an edge
+    with a ghost endpoint (no vertex row) takes no part.
     """
     ed = (
         _edges(graph, edge_labels)
@@ -1282,7 +1262,8 @@ def betweenness_centrality(
     O(|V|·k) like the closeness/harmonic landmark family — k is the
     published accuracy/cost knob; exact betweenness (k = |V|) is the
     quadratic ceiling this sampling exists to avoid. Per-round
-    lineage cuts throughout.
+    lineage cuts throughout. Ghost endpoints (no vertex row) are
+    traversed and lie on paths, but only vertex rows are listed.
 
     Error bound (Brandes–Pich, "Centrality Estimation in Large
     Networks", IJBC 2007): the population estimate (n/k)·Σ_{s∈S}
@@ -2306,31 +2287,17 @@ def approximate_diameter(
     lookups (start pick, farthest pick, final max) — nothing
     corpus-sized ever reaches the driver.
 
+    Ghost endpoints (no vertex row): the start pick counts every edge,
+    so a ghost can be the max-degree id; both sweeps run on vertex rows
+    only, as :func:`shortest_distance` does.
+
     Reference analog: eccentricity-style OLAP jobs run as repeated
     scan rounds over the full graph (FulgoraGraphComputer's
     iteration loop); the double sweep needs exactly two of them.
     """
-    und = _undirected_pairs(_edges(graph, edge_labels)).cache()
-    sym = (
-        und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionAll(und.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .select(
-            F.lit(0).cast("long").alias("edge_id"),
-            "src",
-            "dst",
-            F.lit("sym").alias("label"),
-        )
-    )
-    g2 = PropertyGraph(graph.vertices, sym)
-    deg = (
-        und.select(F.col("a").alias("id"))
-        .unionAll(und.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    start = deg.orderBy(F.col("d").desc(), F.col("id").asc()).first()
+    deg = _sym_adjacency(_edges(graph, edge_labels)).groupBy(F.col("u").alias("id")).count()
+    start = deg.orderBy(F.col("count").desc(), F.col("id").asc()).first()
     if start is None:  # edgeless graph
-        und.unpersist(blocking=False)
         return local_relation(
             graph.vertices.sparkSession,
             [],
@@ -2338,7 +2305,8 @@ def approximate_diameter(
         )
     start_id = start["id"]
     d1 = shortest_distance(
-        g2, seed_id=start_id, direction="out", max_iterations=max_iterations
+        graph, start_id, direction="both", edge_labels=edge_labels,
+        max_iterations=max_iterations,
     )
     far = (
         d1.filter(F.col("distance").isNotNull())
@@ -2347,10 +2315,10 @@ def approximate_diameter(
     )
     ecc_start, far_id = int(far["distance"]), far["id"]
     d2 = shortest_distance(
-        g2, seed_id=far_id, direction="out", max_iterations=max_iterations
+        graph, far_id, direction="both", edge_labels=edge_labels,
+        max_iterations=max_iterations,
     )
     lb = d2.agg(F.max("distance").alias("m")).first()["m"]
-    und.unpersist(blocking=False)
     return local_relation(
         graph.vertices.sparkSession,
         [(int(start_id), ecc_start, int(far_id), int(lb))],

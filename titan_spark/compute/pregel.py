@@ -11,8 +11,9 @@ Spark mapping (SURVEY §2.9 C2): one round =
     vertices = vertices ⟕ messages → update expressions
 
 The per-round full scan becomes a cached DataFrame; the message
-combiner is the ``agg`` (partial aggregation runs map-side); ``Memory``
-counters are driver-side aggs. Lineage is truncated with
+combiner is the ``agg`` (partial aggregation runs map-side); the
+``Memory`` counter that ends a fixpoint is :class:`Frontier`'s
+``converged``/``rounds`` record. Lineage is truncated with
 ``localCheckpoint`` every round — without it the iterated plan
 grows without bound and the driver stack-overflows (SURVEY §7,
 correctness-adjacent).
@@ -24,11 +25,24 @@ one join per round, not two). AQE handles skewed (supernode)
 recipients — the analog of Titan's PartitionedVertexProgramExecutor
 (C9).
 
-The frontier driver (:class:`Frontier`) runs the BFS family — loops
-whose state only grows by what each round newly reaches (landmark
-distances, betweenness's forward phase, k-hop balls, bidirectional
-BFS, DAG layering). The caller gives the seed and the expand step
-(frontier, state) → delta, which settles against the state itself
+One mechanism per loop shape. A loop that runs a FIXED number of
+rounds over every vertex — PageRank, personalized PageRank, label
+propagation (and so peer pressure and the traversal ``page_rank`` /
+``peer_pressure`` steps) — is a :func:`pregel` program: its rounds are
+what it computes, so it takes no convergence probe, just one eager cut
+per round. A loop that runs until nothing CHANGES is a
+:class:`Frontier`, and only the changed set does work in a round.
+
+The frontier driver (:class:`Frontier`) runs the changed-set family:
+loops whose state only grows or improves by what each round newly
+reaches (landmark distances, betweenness's forward phase, k-hop balls,
+bidirectional BFS, DAG layering, single-source shortest distance).
+Shortest distance is this kind because only a vertex whose distance
+fell in the last round can lower a neighbour's: its frontier is the
+improved set, the loop ends when a round improves nothing, and a cap
+that stops it early leaves distances too long or missing (the driver's
+``converged`` record says so). The caller gives the seed and the expand
+step (frontier, state) → delta, which settles against the state itself
 (an anti-join, an improvement filter); the driver owns the rest: the
 eager cut of the seed, the delta's cut, the merge of the delta into
 the state (union unless the caller passes an upsert), the round cap,
@@ -71,56 +85,6 @@ def _sides_referenced(*exprs: Column | None) -> set[str]:
     return sides
 
 
-def _messages(
-    vertices: DataFrame,
-    edges: DataFrame,
-    msg_to_dst: Column | None,
-    msg_to_src: Column | None,
-    sender_ids: DataFrame | None = None,
-) -> DataFrame:
-    """Build the un-aggregated message stream DataFrame(id, msg).
-
-    ``sender_ids`` (optional, column ``id``) restricts which vertices
-    *send* — a left-semi join on the sending endpoint, so receivers are
-    never filtered (frontier iteration stays correct).
-    """
-    vstruct = F.struct(*[F.col(c) for c in vertices.columns])
-    estruct = F.struct(*[F.col(c) for c in edges.columns])
-    sides = _sides_referenced(msg_to_dst, msg_to_src)
-
-    parts = []
-    for direction, expr in (("dst", msg_to_dst), ("src", msg_to_src)):
-        if expr is None:
-            continue
-        sender_key = "src" if direction == "dst" else "dst"
-        e = edges.select(
-            F.col("src").alias("_esrc"), F.col("dst").alias("_edst"), estruct.alias("edge")
-        )
-        if sender_ids is not None:
-            e = e.join(
-                sender_ids.select(F.col("id").alias(f"_e{sender_key}")),
-                f"_e{sender_key}",
-                "left_semi",
-            )
-        t = e
-        if "src" in sides:
-            t = t.join(
-                vertices.select(F.col("id").alias("_sid"), vstruct.alias("src")),
-                F.col("_esrc") == F.col("_sid"),
-            )
-        if "dst" in sides:
-            t = t.join(
-                vertices.select(F.col("id").alias("_did"), vstruct.alias("dst")),
-                F.col("_edst") == F.col("_did"),
-            )
-        recipient = "_edst" if direction == "dst" else "_esrc"
-        parts.append(t.select(F.col(recipient).alias("id"), expr.alias("msg")))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def aggregate_messages(
     vertices: DataFrame,
     edges: DataFrame,
@@ -139,7 +103,33 @@ def aggregate_messages(
     """
     if msg_to_dst is None and msg_to_src is None:
         raise ValueError("at least one of msg_to_dst / msg_to_src required")
-    return _messages(vertices, edges, msg_to_dst, msg_to_src).groupBy("id").agg(agg)
+    vstruct = F.struct(*[F.col(c) for c in vertices.columns])
+    estruct = F.struct(*[F.col(c) for c in edges.columns])
+    sides = _sides_referenced(msg_to_dst, msg_to_src)
+
+    parts = []
+    for direction, expr in (("dst", msg_to_dst), ("src", msg_to_src)):
+        if expr is None:
+            continue
+        t = edges.select(
+            F.col("src").alias("_esrc"), F.col("dst").alias("_edst"), estruct.alias("edge")
+        )
+        if "src" in sides:
+            t = t.join(
+                vertices.select(F.col("id").alias("_sid"), vstruct.alias("src")),
+                F.col("_esrc") == F.col("_sid"),
+            )
+        if "dst" in sides:
+            t = t.join(
+                vertices.select(F.col("id").alias("_did"), vstruct.alias("dst")),
+                F.col("_edst") == F.col("_did"),
+            )
+        recipient = "_edst" if direction == "dst" else "_esrc"
+        parts.append(t.select(F.col(recipient).alias("id"), expr.alias("msg")))
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out.groupBy("id").agg(agg)
 
 
 def pregel(
@@ -151,54 +141,36 @@ def pregel(
     msg_to_dst: Column | None = None,
     msg_to_src: Column | None = None,
     max_iterations: int = 10,
-    active_col: str | None = None,
-    keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Run a vertex program to fixpoint or ``max_iterations``.
+    """Run a vertex program for ``max_iterations`` rounds.
 
     - ``initial``: state columns added to ``vertices`` before round 1.
-    - ``msg_to_*``: triplet message expressions; when ``active_col``
-      is set only edges whose *sender* is active participate.
+    - ``msg_to_*``: triplet message expressions.
     - ``agg``: the combiner over ``msg``; its alias becomes a column
       visible to ``update`` (NULL where a vertex got no messages).
     - ``update``: new state expressions over current state + agg
       output.
-    - ``active_col``: boolean state column enabling frontier
-      early-stop: the loop ends when no vertex is active (the
-      reference's Memory ``incr``-flag fixpoint); round cost tracks
-      the frontier, not |V|.
 
-    Returns the vertex DataFrame with ``id`` + state columns.
+    An edge endpoint with no vertex row never receives (the update is a
+    left join from the vertex rows), and sends only from a message that
+    reads no vertex state (the triplet join drops it otherwise). Returns
+    the vertex DataFrame with ``id`` + state columns.
     """
-    v = vertices.select("id", *keep_cols, *[e.alias(n) for n, e in initial.items()])
+    v = vertices.select("id", *[e.alias(n) for n, e in initial.items()])
     edges.cache()
-    v = cut_lineage(v, eager=True)
-    for i in range(max_iterations):
-        sender_ids = None
-        if active_col is not None:
-            sender_ids = v.filter(F.col(active_col)).select("id")
-        msgs = aggregate_messages(
-            v, edges, agg, msg_to_dst=msg_to_dst, msg_to_src=msg_to_src
-        ) if sender_ids is None else _messages(
-            v, edges, msg_to_dst, msg_to_src, sender_ids
-        ).groupBy("id").agg(agg)
-        joined = v.join(msgs, "id", "left")
-        v = joined.select(
-            "id",
-            *keep_cols,
-            *[update.get(n, F.col(n)).alias(n) for n in initial.keys()],
-        )
-        if active_col is not None:
-            # lazy cut + one full count: a single job materializes
-            # the checkpoint AND answers the frontier-empty test
-            # (eager cut + limit(1).count() was two jobs per round)
-            v = cut_lineage(v, eager=False)
-            if v.filter(F.col(active_col)).count() == 0:
-                break
-        else:
+    try:
+        v = cut_lineage(v, eager=True)
+        for _ in range(max_iterations):
+            msgs = aggregate_messages(
+                v, edges, agg, msg_to_dst=msg_to_dst, msg_to_src=msg_to_src
+            )
+            v = v.join(msgs, "id", "left").select(
+                "id", *[update.get(n, F.col(n)).alias(n) for n in initial]
+            )
             v = cut_lineage(v, eager=True)
-    edges.unpersist(blocking=False)
-    return v
+        return v
+    finally:
+        edges.unpersist(blocking=False)
 
 
 class Frontier:
