@@ -1,8 +1,9 @@
 """The loop families on the two drivers, against independent oracles.
 On the frontier driver: closeness and harmonic (landmark distances),
 sampled betweenness, k_hop_subgraph, bidirectional_distance,
-topological_levels and shortest_distance. On ``pregel()``'s fixed
-rounds: pagerank, personalized_pagerank and label_propagation.
+topological_levels, shortest_distance, strongly_connected_components
+and k_truss. On ``pregel()``'s fixed rounds: pagerank,
+personalized_pagerank and label_propagation.
 
 Ghost-vertex rule (an edge endpoint with no vertex row): the BFS loops
 expand over the edge relation alone, so a ghost is a vertex of the
@@ -13,8 +14,11 @@ the vertex table (betweenness, k_hop_subgraph's vertices) list vertex
 rows only. topological_levels layers vertex rows only: an edge with a
 ghost endpoint takes no part in it. shortest_distance likewise: a ghost
 neither gets a distance nor relays one, so the oracle runs on the
-vertex-row subgraph. label_propagation: a ghost neither sends nor
-receives a label. pagerank and personalized_pagerank: N counts vertex
+vertex-row subgraph. strongly_connected_components drops every edge
+with a ghost endpoint, so its oracle also runs on the vertex-row
+subgraph. k_truss peels the edge relation alone, so a ghost endpoint is
+a truss vertex. label_propagation: a ghost neither sends nor receives a
+label. pagerank and personalized_pagerank: N counts vertex
 rows, an edge to a ghost counts in its source's outdeg but delivers
 nothing (its mass is lost), a ghost source sends nothing, and a ghost
 seed counts in |S| but holds no mass.
@@ -36,10 +40,13 @@ from titan_spark.compute import (
     closeness_centrality,
     harmonic_centrality,
     k_hop_subgraph,
+    k_truss,
     label_propagation,
+    maximal_independent_set,
     pagerank,
     personalized_pagerank,
     shortest_distance,
+    strongly_connected_components,
     topological_levels,
 )
 from titan_spark.graph import PropertyGraph
@@ -162,6 +169,33 @@ def _label_replay(ids, edges, labels, rounds):
     return community
 
 
+def _truss_replay(edges, labels, k, rounds):
+    """The k-truss peel replayed in pure Python over the undirected
+    simple edge set (a < b), ghosts included: each of at most
+    ``rounds`` rounds drops every edge in fewer than k−2 triangles of
+    the surviving edges, stopping early once a round drops nothing;
+    support is then counted on the edges left."""
+    kept = {
+        (min(s, d), max(s, d))
+        for _, s, d, lab in edges
+        if s != d and (not labels or lab in labels)
+    }
+
+    def support():
+        nbrs = {}
+        for a, b in kept:
+            nbrs.setdefault(a, set()).add(b)
+            nbrs.setdefault(b, set()).add(a)
+        return {(a, b): len(nbrs[a] & nbrs[b]) for a, b in kept}
+
+    for _ in range(rounds):
+        weak = {e for e, n in support().items() if n < k - 2}
+        if not weak:
+            break
+        kept -= weak
+    return support()
+
+
 def _rank_replay(ids, edges, labels, alpha, rounds, seeds=None):
     """PageRank (``seeds`` None) or personalized PageRank replayed with
     numpy: x' = restart + α·M·x, M[d, s] = (#edges s→d)/outdeg(s), with
@@ -273,6 +307,20 @@ def test_bfs_family_matches_independent_oracles(spark):
         with pytest.raises(ValueError, match=r"direction must be out\|in\|both"):
             shortest_distance(g, src, direction="sideways")
 
+        # strongly connected components of the vertex-row subgraph,
+        # each named by its min id
+        want = {v: min(c) for c in nx.strongly_connected_components(sub) for v in c}
+        got = strongly_connected_components(g, edge_labels=labels)
+        assert {r["id"]: r["component"] for r in got.collect()} == want
+
+        # the 4-truss peel, cut short after one and two rounds and run to
+        # its fixpoint
+        for rounds in (1, 2, 20):
+            got = k_truss(g, k=4, rounds=rounds, edge_labels=labels)
+            assert {(r["a"], r["b"]): r["support"] for r in got.collect()} == (
+                _truss_replay(edges, labels, 4, rounds)
+            ), rounds
+
         # label propagation against a synchronous replay
         got = label_propagation(g, iterations=3, edge_labels=labels)
         assert {r["id"]: r["community"] for r in got.collect()} == _label_replay(
@@ -331,7 +379,9 @@ def test_bfs_family_matches_independent_oracles(spark):
         assert [tuple(r) for r in got.collect()] == [(a, b, want)], c
 
 
-def test_capped_bfs_loops_warn(spark):
+def test_capped_bfs_loops_warn(spark, sf_dir):
+    import __spark_entry__ as entry
+
     g = _property_graph(spark, list(range(25)), [(i, i, i + 1, "e") for i in range(24)])
     with pytest.warns(RuntimeWarning, match="did not converge"):
         closeness_centrality(g, [0], max_iterations=3).collect()
@@ -344,11 +394,19 @@ def test_capped_bfs_loops_warn(spark):
     assert {r["id"]: r["distance"] for r in got} == {
         i: float(i) if i <= 3 else None for i in range(25)
     }
+    # Luby's first round on the path leaves 21 and 22 active, so a
+    # one-round set is not maximal
+    with pytest.warns(RuntimeWarning, match="did not converge"):
+        got = maximal_independent_set(g, max_iterations=1).collect()
+    assert not any(r["in_mis"] for r in got if r["id"] in (20, 21, 22, 23))
     # a search that settles within its cap, and the fixed-round
     # programs, whose rounds are what they compute, do not warn
     with warnings.catch_warnings():
         warnings.simplefilter("error", RuntimeWarning)
         assert shortest_distance(g, 0).filter("distance = 24").count() == 1
+        # the second round empties the active set: the cap is met
+        maximal_independent_set(g, max_iterations=2).collect()
+        entry.queries()["mis_geo"](spark, sf_dir).collect()
         label_propagation(g, iterations=1).collect()
         pagerank(g, iterations=1).collect()
         personalized_pagerank(g, [0], iterations=1).collect()
@@ -371,6 +429,9 @@ def test_bfs_family_rows_do_not_depend_on_the_partition_count(spark, sf_dir):
         "pagerank",
         "personalized_pagerank",
         "label_propagation",
+        "scc_blocks",
+        "condensation_dag",
+        "k_truss",
     )
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
@@ -427,6 +488,29 @@ def test_bfs_loop_job_counts_are_pinned(spark):
     )
     assert dist == {0: 0.0, 1: 1.0, 2: 2.0, 3: 3.0, 4: 4.0, 5: 5.0, 6: 2.0}
     assert jobs == 40
+    # colour invasion: the cycle {10, 11} floods {1, 2} with colour 11,
+    # so SCC takes two outer rounds of both fixpoints
+    inv = [(10, 11), (11, 10), (11, 1), (1, 2), (2, 1)]
+    ig = _property_graph(spark, [1, 2, 10, 11], [(i, a, b, "x") for i, (a, b) in enumerate(inv)])
+    scc, jobs = _jobs(
+        spark,
+        "bfs-pin-scc",
+        lambda: {r["id"]: r["component"] for r in strongly_connected_components(ig).collect()},
+    )
+    assert scc == {1: 1, 2: 1, 10: 10, 11: 10}
+    assert jobs == 77
+    # K4 plus a tail triangle: the 4-truss peels the tail in one round
+    # and the second round drops nothing
+    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+    pairs = k4 + [(3, 4), (4, 5), (3, 5)]
+    kg = _property_graph(spark, list(range(6)), [(i, a, b, "l") for i, (a, b) in enumerate(pairs)])
+    truss, jobs = _jobs(
+        spark,
+        "bfs-pin-truss",
+        lambda: {(r["a"], r["b"]): r["support"] for r in k_truss(kg, k=4).collect()},
+    )
+    assert truss == dict.fromkeys(k4, 2)
+    assert jobs == 23
     # fixed rounds: the initial cut, one eager cut per round and the collect
     communities, jobs = _jobs(
         spark,

@@ -492,6 +492,9 @@ def test_greedy_coloring_proper_and_bounded(spark):
     assert max(got.values()) <= 3  # <= Delta + 1 = 4 colors (ids 0..3)
     again = {r["id"]: r["color"] for r in greedy_coloring(g).collect()}
     assert again == got
+    # no vertex rows: an empty (id, color) frame
+    none = greedy_coloring(PropertyGraph(v.limit(0), e))
+    assert none.collect() == [] and none.dtypes == [("id", "bigint"), ("color", "int")]
 
 
 def test_random_walks_semantics(spark, gods):
@@ -746,6 +749,13 @@ def test_approximate_diameter_closed_forms(spark):
 
     empty = g([1, 2], [])
     assert approximate_diameter(empty).count() == 0
+
+    # a ghost hub (99, no vertex row) is not picked: both sweeps run on
+    # vertex rows, so with no edge between them the result is empty
+    hub = [(99, 1), (99, 2), (99, 3)]
+    assert approximate_diameter(g([1, 2, 3], hub)).count() == 0
+    row = approximate_diameter(g([1, 2, 3], hub + [(2, 3)])).collect()[0]
+    assert (row["start_id"], row["ecc_start"], row["far_id"], row["diameter_lb"]) == (2, 1, 3, 1)
 
 
 def test_cc_pruned_bridge_regression(spark):

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 import warnings
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -85,6 +86,13 @@ def _undirected_pairs(e: DataFrame) -> DataFrame:
         e.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .dropDuplicates(["a", "b"])
+    )
+
+
+def _inside(e: DataFrame, ids: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
+    """The rows of ``e`` whose ``a`` and ``b`` columns are both ids in ``ids``."""
+    return e.join(ids.withColumnRenamed("id", a), a, "left_semi").join(
+        ids.withColumnRenamed("id", b), b, "left_semi"
     )
 
 
@@ -815,9 +823,7 @@ def k_core(
             # incremental path against the rewritten relation
             keep = deg.filter(F.col("d") >= k).select("id")
             und = cut_lineage(
-                und.join(keep.withColumnRenamed("id", "a"), "a", "left_semi")
-                .join(keep.withColumnRenamed("id", "b"), "b", "left_semi")
-                .select("a", "b"),
+                _inside(und, keep, "a", "b").select("a", "b"),
                 eager=True,
                 disk=True,
             )
@@ -923,47 +929,38 @@ def k_truss(
     k−2; the fixpoint is the k-truss. Like :func:`k_core`, ``rounds``
     is part of the reproducible contract — a fixed-round prefix is
     deterministic, so a generated SQL oracle replays it verbatim —
-    and the loop early-stops once a round removes nothing. The
-    per-round triangle pass reuses the degree-ordered enumeration, so
-    wedge work stays arboricity-bounded on every round (the edge set
-    only shrinks).
+    and the loop early-stops once a round removes nothing. The peel
+    runs on the frontier driver: a round's delta is the set of edges it
+    drops, so one count per round both materializes it and ends the
+    loop. The per-round triangle pass reuses the degree-ordered
+    enumeration, so wedge work stays arboricity-bounded on every round
+    (the edge set only shrinks). Ghost endpoints (no vertex row) are
+    truss vertices: the peel reads the edge relation alone.
     """
     und = _undirected_pairs(_edges(graph, edge_labels))
-    und = cut_lineage(und, eager=True, disk=True)
-    # The triangle pass (_edge_support) dominates every round, so
-    # (a) each round's support relation is materialized once (on
-    # disk, which keeps executor memory flat, same rationale as the
-    # edge-set cut) and probed twice cheaply — once for the
-    # drop count, once for the rewrite; (b) convergence is decided
-    # on the dropped-EDGE count BEFORE rewriting the edge set (the
-    # old form rewrote the unchanged full edge set first);
-    # (c) when the loop converges, the final support IS the last
-    # round's materialized support ("no edge dropped" means the
-    # edge set, hence every triangle, is unchanged), so the old
-    # post-loop _edge_support(und) — a third full triangle pass on
-    # the bench fixture — is skipped. Unconverged (rounds
-    # exhausted with drops) still recounts, as before.
-    final: DataFrame | None = None
-    for i in range(rounds):
-        sup = cut_lineage(_edge_support(und), disk=True)
-        n_drop = (
-            und.join(sup, ["a", "b"], "left")
+    # The triangle pass (_edge_support) dominates every round, so each
+    # round's support is cut lazily (on disk, like the edge set, to keep
+    # executor memory flat) and filled by the round's one count. A
+    # converged peel dropped nothing in its last round, so that round's
+    # support is the final one ("no edge dropped" means every triangle
+    # is unchanged); a peel cut short by ``rounds`` recounts.
+    last: dict[str, DataFrame] = {}
+
+    def weak(_dropped: DataFrame, edges: DataFrame) -> DataFrame:
+        last["sup"] = cut_lineage(_edge_support(edges), eager=False, disk=True)
+        return (
+            edges.join(last["sup"], ["a", "b"], "left")
             .filter(F.coalesce("support", F.lit(0)) < k - 2)
-            .count()
-        )
-        if n_drop == 0:
-            final = sup
-            break
-        new_und = (
-            und.join(sup, ["a", "b"], "left")
-            .filter(F.coalesce("support", F.lit(0)) >= k - 2)
             .select("a", "b")
         )
-        und = cut_lineage(new_und, eager=True, disk=True)
-    if final is None:
-        final = _edge_support(und)
+
+    def peel(edges: DataFrame, dropped: DataFrame) -> DataFrame:
+        return edges.join(dropped, ["a", "b"], "left_anti")
+
+    truss = Frontier(und, weak, peel, disk=True).run(rounds)
+    sup = last["sup"] if truss.converged else _edge_support(truss.state)
     return (
-        und.join(final, ["a", "b"], "left")
+        truss.state.join(sup, ["a", "b"], "left")
         .select("a", "b", F.coalesce("support", F.lit(0)).alias("support"))
     )
 
@@ -1177,6 +1174,8 @@ def maximal_independent_set(
         )
         winners_acc = cut_lineage(winners_acc, eager=False)
     ue.unpersist()
+    if n_rem > 0:
+        _warn_unconverged("maximal_independent_set", max_iterations, "it may not be maximal.")
     mis = winners_acc if winners_acc is not None else remaining.limit(0)
     return graph.vertices.select("id").join(
         mis.withColumn("_in", F.lit(True)), "id", "left"
@@ -1419,6 +1418,8 @@ def greedy_coloring(
         )
     if verts.limit(1).count() > 0:
         raise ValueError(f"coloring did not finish within {max_colors} colors")
+    if colored is None:  # no vertex rows
+        return local_relation(graph.vertices.sparkSession, [], "id long, color int")
     return colored
 
 
@@ -1578,22 +1579,16 @@ def strongly_connected_components(
     contract). ``strict=False`` restores the old warn-and-return-
     partial behavior for exploratory use.
     """
-    ed_all = (
-        _edges(graph, edge_labels)
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .dropDuplicates(["u", "v"])
-    )
-    remaining = cut_lineage(graph.vertices.select("id"), eager=True)
-    done: DataFrame | None = None
+    ed_all = _adjacency(_edges(graph, edge_labels), "out")
+    # a lazy cut plus a count: one action both materializes the
+    # remaining set and answers "is anything left"
+    remaining = cut_lineage(graph.vertices.select("id"), eager=False)
+    n_rem = remaining.count()
+    done = remaining.select("id", F.col("id").alias("component")).limit(0)
     for _outer in range(max_outer):
-        if remaining.limit(1).count() == 0:
+        if n_rem == 0:
             break
-        sub_e = (
-            ed_all.join(remaining.withColumnRenamed("id", "u"), "u", "left_semi")
-            .join(remaining.withColumnRenamed("id", "v"), "v", "left_semi")
-            .cache()
-        )
+        sub_e = _inside(ed_all, remaining, "u", "v").cache()
         n_sub = sub_e.count()
         # r11: big-state rounds keep EVERY lineage cut on disk. The
         # per-round localCheckpoint blocks of the two fixpoints are
@@ -1612,6 +1607,7 @@ def strongly_connected_components(
         # threshold boundary, and a missed broadcast re-shuffles the
         # cached edge relation every round
         bcast_cap = 4_000_000
+
         # 1. forward max-color fixpoint (changed-frontier
         # expansion), delta state only. Pointer jumping on colors
         # (the WCC loop's O(log diameter) doubling) was tried here
@@ -1620,77 +1616,42 @@ def strongly_connected_components(
         # every round, so the two extra frontier-sized joins per
         # round cost more than the saved rounds — reverted, noted
         # so it is not re-tried.
-        parts: list[DataFrame] = []
-        cmap_u: DataFrame | None = None
-        frontier = remaining.select("id", F.col("id").alias("color"))
-        n_front: int | None = None
-        for _i in range(max_inner):
+        def bump(frontier: DataFrame, bumps: DataFrame) -> DataFrame:
             fr = frontier.select(F.col("id").alias("u"), "color")
-            if n_front is not None and n_front <= bcast_cap:
+            if fwd.size is not None and fwd.size <= bcast_cap:
                 fr = F.broadcast(fr)
-            cand = (
+            # current color = max over accepted bumps (colors only
+            # increase), default id — the union of checkpointed bump
+            # parts needs no per-round dedup/rewrite
+            return (
                 sub_e.join(fr, "u")
                 .groupBy(F.col("v").alias("id"))
                 .agg(F.max("color").alias("_nc"))
+                .join(bumps, "id", "left")
+                .groupBy("id", "_nc")
+                .agg(F.max("color").alias("_cur"))
+                .filter(F.col("_nc") > F.coalesce(F.col("_cur"), F.col("id")))
+                .select("id", F.col("_nc").alias("color"))
             )
-            if cmap_u is None:
-                # round 0: every color is still the implicit id
-                bumped = cand.filter(F.col("_nc") > F.col("id")).select(
-                    "id", F.col("_nc").alias("color")
-                )
-            else:
-                # current color = max over accepted bumps (colors
-                # only increase), default id — the union of
-                # checkpointed bump parts needs no per-round
-                # dedup/rewrite
-                bumped = (
-                    cand.join(cmap_u, "id", "left")
-                    .groupBy("id", "_nc")
-                    .agg(F.max("color").alias("_cur"))
-                    .filter(
-                        F.col("_nc") > F.coalesce(F.col("_cur"), F.col("id"))
-                    )
-                    .select("id", F.col("_nc").alias("color"))
-                )
-            # lazy cut + full count: ONE job materializes the
-            # checkpoint and answers the empty-frontier test
-            # (limit(1).count() after an eager cut was a second
-            # job per round — ~2 jobs x rounds saved)
-            bumped = cut_lineage(bumped, eager=False, disk=big_state)
-            n_front = bumped.count()
-            if n_front == 0:
-                break
-            parts.append(bumped)
-            cmap_u = bumped if cmap_u is None else cmap_u.unionByName(bumped)
-            frontier = bumped
+
+        own = remaining.select("id", F.col("id").alias("color"))
+        fwd = Frontier(own, bump, state=own.limit(0), disk=big_state)
+        fwd.run(max_inner)
         # converged colors, resolved ONCE: cmap holds only vertices
         # whose color exceeds their id; everyone else's color is
         # their id (those are the roots and the singletons)
-        if cmap_u is None:
-            cmap = remaining.select("id", F.col("id").alias("color")).limit(0)
-        else:
-            cmap = cmap_u.groupBy("id").agg(F.max("color").alias("color"))
+        cmap = fwd.state.groupBy("id").agg(F.max("color").alias("color"))
         cmap = cut_lineage(cmap, eager=True, disk=big_state)
+
         # 2. backward collection from roots within each color
         # class. members starts as every vertex whose color == id
         # (root of its class or trivial class); the uncollected
         # rest is exactly cmap, carried as the shrinking uncolmap
-        members0 = cut_lineage(
-            remaining.join(cmap, "id", "left_anti").select(
-                "id", F.col("id").alias("color")
-            ),
-            eager=True,
-            disk=big_state,
-        )
-        uncolmap = cmap
-        bparts: list[DataFrame] = [members0]
-        bfront = members0
-        n_new: int | None = None
-        for _i in range(max_inner):
+        def reach_back(bfront: DataFrame, uncolmap: DataFrame) -> DataFrame:
             # predecessors u of collected v, same color class, not
             # yet collected — "u uncollected AND color(u) == class"
             # is ONE inner join against uncolmap
-            cand = (
+            return (
                 sub_e.join(bfront.select(F.col("id").alias("v"), "color"), "v")
                 .select(F.col("u").alias("id"), "color")
                 .join(uncolmap.withColumnRenamed("color", "_uc"), "id")
@@ -1698,51 +1659,44 @@ def strongly_connected_components(
                 .select("id", "color")
                 .dropDuplicates(["id"])
             )
-            new = cut_lineage(cand, eager=False, disk=big_state)
-            n_new = new.count()
-            if n_new == 0:
-                break
-            bparts.append(new)
+
+        def drop_collected(uncolmap: DataFrame, new: DataFrame) -> DataFrame:
+            # members = the roots plus every round's cut delta
+            collected.append(new)
             gone = new.select("id")
-            if n_new <= bcast_cap:
+            if bwd.size <= bcast_cap:
                 gone = F.broadcast(gone)
-            uncolmap = cut_lineage(
-                uncolmap.join(gone, "id", "left_anti"),
-                eager=False,
-                disk=big_state,
-            )
-            bfront = new
-        members = bparts[0]
-        for p in bparts[1:]:
-            members = members.unionByName(p)
+            return uncolmap.join(gone, "id", "left_anti")
+
+        members0 = remaining.join(cmap, "id", "left_anti").withColumn("color", F.col("id"))
+        bwd = Frontier(members0, reach_back, drop_collected, state=cmap, disk=big_state)
+        collected = [bwd.frontier]
+        bwd.run(max_inner)
+        members = reduce(DataFrame.unionByName, collected)
         # 3. retire: rep = min id of each collected SCC; the
         # still-uncollected leftover of uncolmap IS the next
         # round's remaining set (remaining = members ⊎ uncolmap)
         rep = members.groupBy("color").agg(F.min("id").alias("component"))
         assigned = members.join(rep, "color").select("id", "component")
-        done = assigned if done is None else done.unionByName(assigned)
-        done = cut_lineage(done, eager=True, disk=big_state)
-        remaining = cut_lineage(uncolmap.select("id"), eager=True, disk=big_state)
+        done = cut_lineage(done.unionByName(assigned), eager=True, disk=big_state)
+        remaining = cut_lineage(bwd.state.select("id"), eager=False, disk=big_state)
+        n_rem = remaining.count()
         sub_e.unpersist()
-    else:
-        if remaining.limit(1).count() > 0:
-            if strict:
-                raise ValueError(
-                    f"strongly_connected_components did not converge in "
-                    f"{max_outer} outer rounds; raise max_outer (deep "
-                    f"SCC-chain graph) or pass strict=False to accept a "
-                    f"partial assignment"
-                )
-            warnings.warn(
-                f"strongly_connected_components did not converge in {max_outer} "
-                "outer rounds; returning partial assignment",
-                stacklevel=2,
+    if n_rem > 0:
+        if strict:
+            raise ValueError(
+                f"strongly_connected_components did not converge in "
+                f"{max_outer} outer rounds; raise max_outer (deep "
+                f"SCC-chain graph) or pass strict=False to accept a "
+                f"partial assignment"
             )
-            leftover = remaining.select("id", F.col("id").alias("component"))
-            done = leftover if done is None else done.unionByName(leftover)
-    return done if done is not None else graph.vertices.select(
-        "id", F.col("id").alias("component")
-    ).limit(0)
+        warnings.warn(
+            f"strongly_connected_components did not converge in {max_outer} "
+            "outer rounds; returning partial assignment",
+            stacklevel=2,
+        )
+        done = done.unionByName(remaining.select("id", F.col("id").alias("component")))
+    return done
 
 
 def bidirectional_distance(
@@ -2096,9 +2050,7 @@ def k_hop_subgraph(
     seen = Frontier(seed, expand).run(k).state
     ad.unpersist()
     v = graph.vertices.join(seen, "id", "left_semi")
-    ee = e.join(seen.withColumnRenamed("id", "src"), "src", "left_semi").join(
-        seen.withColumnRenamed("id", "dst"), "dst", "left_semi"
-    )
+    ee = _inside(e, seen)
     vp = graph.vertex_properties
     if vp is not None:
         vp = vp.join(seen.withColumnRenamed("id", "vertex_id"), "vertex_id", "left_semi")
@@ -2287,17 +2239,18 @@ def approximate_diameter(
     lookups (start pick, farthest pick, final max) — nothing
     corpus-sized ever reaches the driver.
 
-    Ghost endpoints (no vertex row): the start pick counts every edge,
-    so a ghost can be the max-degree id; both sweeps run on vertex rows
-    only, as :func:`shortest_distance` does.
+    Ghost endpoints (no vertex row): both sweeps run on vertex rows
+    only, as :func:`shortest_distance` does, so the start pick counts
+    only edges between vertex rows; with none, the result is empty.
 
     Reference analog: eccentricity-style OLAP jobs run as repeated
     scan rounds over the full graph (FulgoraGraphComputer's
     iteration loop); the double sweep needs exactly two of them.
     """
-    deg = _sym_adjacency(_edges(graph, edge_labels)).groupBy(F.col("u").alias("id")).count()
+    e = _inside(_edges(graph, edge_labels), graph.vertices.select("id"))
+    deg = _sym_adjacency(e).groupBy(F.col("u").alias("id")).count()
     start = deg.orderBy(F.col("count").desc(), F.col("id").asc()).first()
-    if start is None:  # edgeless graph
+    if start is None:  # no edge between vertex rows
         return local_relation(
             graph.vertices.sparkSession,
             [],

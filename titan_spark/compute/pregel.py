@@ -34,27 +34,37 @@ per round. A loop that runs until nothing CHANGES is a
 :class:`Frontier`, and only the changed set does work in a round.
 
 The frontier driver (:class:`Frontier`) runs the changed-set family:
-loops whose state only grows or improves by what each round newly
-reaches (landmark distances, betweenness's forward phase, k-hop balls,
-bidirectional BFS, DAG layering, single-source shortest distance).
+loops whose state changes only by what each round newly finds
+(landmark distances, betweenness's forward phase, k-hop balls,
+bidirectional BFS, DAG layering, single-source shortest distance, both
+fixpoints of strongly connected components, the k-truss peel).
 Shortest distance is this kind because only a vertex whose distance
 fell in the last round can lower a neighbour's: its frontier is the
 improved set, the loop ends when a round improves nothing, and a cap
 that stops it early leaves distances too long or missing (the driver's
-``converged`` record says so). The caller gives the seed and the expand
-step (frontier, state) → delta, which settles against the state itself
-(an anti-join, an improvement filter); the driver owns the rest: the
-eager cut of the seed, the delta's cut, the merge of the delta into
-the state (union unless the caller passes an upsert), the round cap,
-and the ``converged``/``rounds`` record. Each round is ONE Spark
+``converged`` record says so). A peel's delta is what a round removes.
+The caller gives the seed and the expand step (frontier, state) →
+delta, which settles against the state itself (an anti-join, an
+improvement filter); the driver owns the rest: the eager cut of the
+seed, the delta's cut, the merge of the delta into the state (union
+unless the caller passes an upsert, a min or an anti-join), the round
+cap, and the ``converged``/``rounds`` record. Each round is ONE Spark
 action: the delta is cut lazily, so the ``count()`` that answers "is
 the frontier empty" is also the action that materializes the
-checkpoint, and the merged state is cut lazily too, so the next
-round's count fills it. An eager cut plus a separate emptiness probe
-costs two actions per round (under AQE each action runs one job per
-shuffle stage, so the saving is that many jobs). One round per
+checkpoint, and a merged state is cut lazily too, so the next round's
+count fills it. An eager cut plus a separate emptiness probe costs two
+actions per round (under AQE each action runs one job per shuffle
+stage, so the saving is that many jobs). One round per
 :meth:`Frontier.advance` call lets bidirectional BFS step whichever
 side has the smaller frontier.
+
+``state=`` starts the state elsewhere than the seed: SCC's forward
+fixpoint carries only changed colours (none at first), its backward
+collection the still-uncollected colour map. ``disk=`` goes to every
+cut. The default union merge is not cut: a union of cut deltas is
+already a flat plan, and its ``UnionRDD`` has the sum of its
+children's partitions whether cut or not, so a cut would only copy
+every accumulated row again each round.
 """
 
 from __future__ import annotations
@@ -179,34 +189,42 @@ class Frontier:
     ``expand(frontier, state)`` returns the round's delta: what the
     frontier newly reaches, already settled against ``state``. An empty
     delta ends the loop. ``merge(state, delta)`` folds the delta in
-    (default: union). ``size`` is the last delta's row count; pass it
-    for the seed when the caller knows it, since no job is run to find
-    it. ``rounds`` counts the rounds that found something; ``converged``
-    says a round came back empty.
+    (default: union, left uncut). ``state`` is the initial state when it
+    is not the seed. ``disk`` is passed to every cut. ``size`` is the
+    last delta's row count; pass it for the seed when the caller knows
+    it, since no job is run to find it. ``rounds`` counts the rounds
+    that found something; ``converged`` says a round came back empty.
     """
 
     def __init__(
         self,
         seed: DataFrame,
         expand: Callable[[DataFrame, DataFrame], DataFrame],
-        merge: Callable[[DataFrame, DataFrame], DataFrame] = DataFrame.unionByName,
+        merge: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
         size: int | None = None,
+        state: DataFrame | None = None,
+        disk: bool = False,
     ):
-        self.state = self.frontier = cut_lineage(seed, eager=True)
+        self.frontier = cut_lineage(seed, eager=True, disk=disk)
+        self.state = self.frontier if state is None else state
         self.size = size
         self.rounds = 0
         self.converged = False
         self._expand, self._merge = expand, merge
+        self._cut = lambda df: cut_lineage(df, eager=False, disk=disk)
 
     def advance(self) -> bool:
         """Run one round (one action); False once the delta is empty."""
-        delta = cut_lineage(self._expand(self.frontier, self.state), eager=False)
+        delta = self._cut(self._expand(self.frontier, self.state))
         self.size = delta.count()
         if self.size == 0:
             self.converged = True
             return False
         self.rounds += 1
-        self.state = cut_lineage(self._merge(self.state, delta), eager=False)
+        if self._merge is None:
+            self.state = self.state.unionByName(delta)
+        else:
+            self.state = self._cut(self._merge(self.state, delta))
         self.frontier = delta
         return True
 
