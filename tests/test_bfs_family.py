@@ -1,9 +1,11 @@
-"""The loop families on the two drivers, against independent oracles.
+"""The loop families on the three drivers, against independent oracles.
 On the frontier driver: closeness and harmonic (landmark distances),
 sampled betweenness, k_hop_subgraph, bidirectional_distance,
 topological_levels, shortest_distance, strongly_connected_components
 and k_truss. On ``pregel()``'s fixed rounds: pagerank,
-personalized_pagerank and label_propagation.
+personalized_pagerank and label_propagation. On the whole-state
+fixpoint driver: k_core, maximal_independent_set, greedy_coloring and
+connected_components' distributed label loop.
 
 Ghost-vertex rule (an edge endpoint with no vertex row): the BFS loops
 expand over the edge relation alone, so a ghost is a vertex of the
@@ -17,11 +19,13 @@ neither gets a distance nor relays one, so the oracle runs on the
 vertex-row subgraph. strongly_connected_components drops every edge
 with a ghost endpoint, so its oracle also runs on the vertex-row
 subgraph. k_truss peels the edge relation alone, so a ghost endpoint is
-a truss vertex. label_propagation: a ghost neither sends nor receives a
-label. pagerank and personalized_pagerank: N counts vertex
-rows, an edge to a ghost counts in its source's outdeg but delivers
-nothing (its mass is lost), a ghost source sends nothing, and a ghost
-seed counts in |S| but holds no mass.
+a truss vertex, and k_core likewise peels the edge relation alone.
+maximal_independent_set and greedy_coloring list vertex rows only and
+ignore every edge with a ghost endpoint. label_propagation: a ghost
+neither sends nor receives a label. pagerank and personalized_pagerank:
+N counts vertex rows, an edge to a ghost counts in its source's outdeg
+but delivers nothing (its mass is lost), a ghost source sends nothing,
+and a ghost seed counts in |S| but holds no mass.
 """
 
 import random
@@ -38,7 +42,10 @@ from titan_spark.compute import (
     betweenness_centrality,
     bidirectional_distance,
     closeness_centrality,
+    connected_components,
+    greedy_coloring,
     harmonic_centrality,
+    k_core,
     k_hop_subgraph,
     k_truss,
     label_propagation,
@@ -196,6 +203,25 @@ def _truss_replay(edges, labels, k, rounds):
     return support()
 
 
+def _core_replay(edges, labels, k, rounds):
+    """The k-core peel replayed in pure Python over the undirected
+    simple edge set, ghosts included (the catalog oracle's rule): each
+    of at most ``rounds`` rounds drops every vertex of degree below k
+    and its edges, stopping early once a round drops nothing; the rows
+    are the vertices left with degree at least k."""
+    kept = {
+        (min(s, d), max(s, d))
+        for _, s, d, lab in edges
+        if s != d and (not labels or lab in labels)
+    }
+    for _ in range(rounds):
+        low = {v for v, n in Counter(v for e in kept for v in e).items() if n < k}
+        if not low:
+            break
+        kept = {(a, b) for a, b in kept if a not in low and b not in low}
+    return {v: n for v, n in Counter(v for e in kept for v in e).items() if n >= k}
+
+
 def _rank_replay(ids, edges, labels, alpha, rounds, seeds=None):
     """PageRank (``seeds`` None) or personalized PageRank replayed with
     numpy: x' = restart + α·M·x, M[d, s] = (#edges s→d)/outdeg(s), with
@@ -313,6 +339,29 @@ def test_bfs_family_matches_independent_oracles(spark):
         got = strongly_connected_components(g, edge_labels=labels)
         assert {r["id"]: r["component"] for r in got.collect()} == want
 
+        # Luby's set is independent and maximal on the vertex-row
+        # subgraph, and greedy coloring colours it properly, each vertex
+        # with at most its degree (a vertex left out of a colour's MIS
+        # has a neighbour in it)
+        simple = _undirected(sub)
+        got = maximal_independent_set(g, edge_labels=labels).collect()
+        assert sorted(r["id"] for r in got) == sorted(ids)
+        mis = {r["id"] for r in got if r["in_mis"]}
+        assert not any(a in mis and b in mis for a, b in simple.edges)
+        assert all(v in mis or mis & set(simple[v]) for v in ids)
+        color = {r["id"]: r["color"] for r in greedy_coloring(g, edge_labels=labels).collect()}
+        assert color.keys() == set(ids)
+        assert all(color[a] != color[b] for a, b in simple.edges)
+        assert all(color[v] <= simple.degree(v) for v in ids)
+
+        # the 2-core peel, cut short after one and two rounds and run to
+        # its fixpoint
+        for rounds in (1, 2, 20):
+            got = k_core(g, k=2, rounds=rounds, edge_labels=labels)
+            assert {r["id"]: r["core_degree"] for r in got.collect()} == (
+                _core_replay(edges, labels, 2, rounds)
+            ), rounds
+
         # the 4-truss peel, cut short after one and two rounds and run to
         # its fixpoint
         for rounds in (1, 2, 20):
@@ -412,6 +461,19 @@ def test_capped_bfs_loops_warn(spark, sf_dir):
         personalized_pagerank(g, [0], iterations=1).collect()
 
 
+def test_capped_scc_inner_fixpoint_raises_or_warns(spark):
+    # colour 9 needs nine forward rounds to travel round a directed
+    # 10-cycle, and a tenth to find it has settled, so two inner rounds
+    # would leave it split into singletons
+    cycle = _property_graph(spark, list(range(10)), [(i, i, (i + 1) % 10, "e") for i in range(10)])
+    with pytest.raises(ValueError, match="did not converge"):
+        strongly_connected_components(cycle, max_inner=2)
+    with pytest.warns(RuntimeWarning, match="did not converge"):
+        strongly_connected_components(cycle, max_inner=2, strict=False)
+    got = strongly_connected_components(cycle, max_inner=10).collect()
+    assert {r["id"]: r["component"] for r in got} == dict.fromkeys(range(10), 0)
+
+
 def test_bfs_family_rows_do_not_depend_on_the_partition_count(spark, sf_dir):
     import __spark_entry__ as entry
 
@@ -432,6 +494,8 @@ def test_bfs_family_rows_do_not_depend_on_the_partition_count(spark, sf_dir):
         "scc_blocks",
         "condensation_dag",
         "k_truss",
+        "k_core",
+        "mis_geo",
     )
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
@@ -480,7 +544,7 @@ def test_bfs_loop_job_counts_are_pinned(spark):
         lambda: {r["id"]: r["level"] for r in topological_levels(g).collect()},
     )
     assert levels == {0: 0, 1: 1, 2: 2, 3: 3, 4: 4, 5: 5, 6: 2}
-    assert jobs == 45
+    assert jobs == 41
     dist, jobs = _jobs(
         spark,
         "bfs-pin-distance",
@@ -519,3 +583,47 @@ def test_bfs_loop_job_counts_are_pinned(spark):
     )
     assert communities == {0: 1, 1: 0, 2: 1, 3: 0, 4: 1, 5: 2, 6: 1}
     assert jobs == 17
+    # k_core's peel on a 5-path hanging off a 4-cycle: five rounds of
+    # drops, each counted once, and the round that drops nothing
+    tail = [(0, 1), (1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 7), (7, 8), (8, 5)]
+    cg = _property_graph(spark, list(range(9)), [(i, a, b, "l") for i, (a, b) in enumerate(tail)])
+    core, jobs = _jobs(
+        spark,
+        "bfs-pin-k-core",
+        lambda: {r["id"]: r["core_degree"] for r in k_core(cg, k=2).collect()},
+    )
+    assert core == dict.fromkeys(range(5, 9), 2)
+    assert jobs == 31
+    path = _property_graph(spark, list(range(25)), [(i, i, i + 1, "e") for i in range(24)])
+    mis, jobs = _jobs(
+        spark,
+        "bfs-pin-mis",
+        lambda: sorted(r["id"] for r in maximal_independent_set(path).collect() if r["in_mis"]),
+    )
+    assert mis == [0, 2, 4, 6, 8, 11, 14, 17, 19, 22, 24]
+    assert jobs == 34
+    # an odd cycle plus a pendant needs three colours
+    c5 = [(i, i, (i + 1) % 5, "e") for i in range(5)] + [(5, 0, 5, "e")]
+    c5g = _property_graph(spark, list(range(6)), c5)
+    colors, jobs = _jobs(
+        spark,
+        "bfs-pin-coloring",
+        lambda: {r["id"]: r["color"] for r in greedy_coloring(c5g).collect()},
+    )
+    assert colors == {0: 1, 1: 2, 2: 0, 3: 1, 4: 0, 5: 0}
+    assert jobs == 58
+    # with the broadcast threshold off, connected_components runs its
+    # distributed label loop
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        comp, jobs = _jobs(
+            spark,
+            "bfs-pin-cc",
+            lambda: {r["component"] for r in connected_components(path).collect()},
+        )
+    finally:
+        spark.conf.set(key, old)
+    assert comp == {0}
+    assert jobs == 63

@@ -258,11 +258,12 @@ def test_connected_components_driver_arm_job_count(spark, gods):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
 
 
-def test_k_core_cascading_peel(spark):
+def test_k_core_cascading_peel(spark, monkeypatch):
     # path 0-1-2-3-4 hanging off a 4-cycle (5,6,7,8): the 2-core is the
     # cycle alone, found only after the tail peels one layer per round
     from pyspark.sql import functions as F
 
+    from titan_spark.compute import algorithms
     from titan_spark.compute.algorithms import k_core
     from titan_spark.graph import PropertyGraph
 
@@ -273,16 +274,21 @@ def test_k_core_cascading_peel(spark):
         "edge_id long, src long, dst long, label string",
     )
     g = PropertyGraph(v, e)
-    core2 = {r["id"]: r["core_degree"] for r in k_core(g, k=2).collect()}
-    assert core2 == {5: 2, 6: 2, 7: 2, 8: 2}
-    # and an unconverged fixed-round prefix is still deterministic:
-    # round 1 peels the degree-1 endpoint 0; the output filter then
-    # also hides vertex 1, whose degree fell below k in the restricted
-    # edge set (it would be peeled next round)
-    one = {r["id"] for r in k_core(g, k=2, rounds=1).collect()}
-    assert one == {2, 3, 4, 5, 6, 7, 8}
-    # 3-core is empty (max degree in the 2-core is 2)
-    assert k_core(g, k=3).count() == 0
+    # the second pass sets the broadcast cap to 0, which leaves the
+    # drop set's broadcast hint off: the planner's joins give the
+    # same rows
+    for cap in (algorithms._PEEL_BROADCAST_MAX_ROWS, 0):
+        monkeypatch.setattr(algorithms, "_PEEL_BROADCAST_MAX_ROWS", cap)
+        core2 = {r["id"]: r["core_degree"] for r in k_core(g, k=2).collect()}
+        assert core2 == {5: 2, 6: 2, 7: 2, 8: 2}, cap
+        # and an unconverged fixed-round prefix is still deterministic:
+        # round 1 peels the degree-1 endpoint 0; the output filter then
+        # also hides vertex 1, whose degree fell below k in the
+        # restricted edge set (it would be peeled next round)
+        one = {r["id"] for r in k_core(g, k=2, rounds=1).collect()}
+        assert one == {2, 3, 4, 5, 6, 7, 8}, cap
+        # 3-core is empty (max degree in the 2-core is 2)
+        assert k_core(g, k=3).count() == 0, cap
 
 
 def test_clustering_coefficient_closed_forms(spark):

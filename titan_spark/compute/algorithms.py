@@ -16,33 +16,26 @@ against the same closed-form oracles:
 
 from __future__ import annotations
 
-import os
 import warnings
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from titan_spark.compute.pregel import Frontier, pregel
+from titan_spark.compute.pregel import Fixpoint, Frontier, pregel
 from titan_spark.graph import PropertyGraph
 from titan_spark.compute.checkpointing import cut_lineage
 from titan_spark.session import local_relation
 
-# Peeling loops (k_core) broadcast the per-round dropped-vertex set into
-# an anti-join when it fits: 8 M ids ≈ 64 MB serialized — well inside
+# k_core broadcasts each round's dropped-vertex set (and the degree
+# loss it causes) when it fits: 8 M ids ≈ 64 MB serialized — well inside
 # executor/driver headroom on any sane cluster profile, far beyond the
 # typical per-round drop (sf10 co-lineitem 8-core drops ~6.5 M vertices
-# in round 0 and ~0 after), and small enough that the alternative — two
-# shuffle semi-joins moving the FULL surviving edge set — is strictly
-# worse. Above the cap the loop falls back to that semi-join form.
-# The cap is a BYTE budget expressed in rows (ids are 8-byte longs, so
-# rows × 8 B bounds the serialized relation; the built hash side is
-# ~2-3× that). Memory-constrained deployments can lower it via
-# $TITAN_SPARK_PEEL_BROADCAST_MAX_ROWS without touching code (r12,
-# ADVICE r11).
-_PEEL_BROADCAST_MAX_ROWS = int(
-    os.environ.get("TITAN_SPARK_PEEL_BROADCAST_MAX_ROWS", 8_000_000)
-)
+# in round 0 and ~0 after). The cap is a BYTE budget expressed in rows
+# (ids are 8-byte longs, so rows × 8 B bounds the serialized relation;
+# the built hash side is ~2-3× that). Above it the planner picks the
+# joins.
+_PEEL_BROADCAST_MAX_ROWS = 8_000_000
 
 
 def _edges(graph: PropertyGraph, edge_labels: tuple[str, ...] = ()) -> DataFrame:
@@ -473,20 +466,14 @@ def _cc_loop(state, und, max_iterations):
         .dropDuplicates(["u", "v"])
     )
     live = cut_lineage(live, eager=False)
-    lmap = cut_lineage(
-        state.select(F.col("component").alias("id"))
-        .dropDuplicates(["id"])
-        .select("id", F.col("id").alias("component")),
-        eager=False,
-    )
-    converged = False
-    for i in range(1, max_iterations):
-        if i > 1:
+
+    def relabel(lmap: DataFrame, r: int) -> DataFrame:
+        nonlocal live
+        if r > 0:
             lab_u = lmap.select(F.col("id").alias("u"), F.col("component").alias("cu"))
             lab_v = lmap.select(F.col("id").alias("v"), F.col("component").alias("cv"))
             live = (
-                live.select("u", "v")
-                .join(lab_u, "u")
+                live.join(lab_u, "u")
                 .join(lab_v, "v")
                 .filter(F.col("cu") != F.col("cv"))
                 .select(F.col("cu").alias("u"), F.col("cv").alias("v"))
@@ -494,16 +481,14 @@ def _cc_loop(state, und, max_iterations):
             )
             live = cut_lineage(live, eager=False)
         # neighbor min on the quotient graph, keyed by LABEL (live is
-        # symmetric in label space from round 1 on, so grouping on u
-        # covers both directions)
-        nbr = live.groupBy(F.col("u").alias("component")).agg(
-            F.min("v").alias("nbr_min")
-        )
+        # symmetric in label space, so grouping on u covers both
+        # directions)
+        nbr = live.groupBy(F.col("u").alias("component")).agg(F.min("v").alias("nbr_min"))
         # pointer jump: component of my component
         ptr = lmap.select(
             F.col("id").alias("component"), F.col("component").alias("jump")
         )
-        if i >= 2:
+        if r > 0:
             # chain a second jump (labels are always live vertex ids,
             # so the hop join is total; left+coalesce is belt-and-braces)
             hop = ptr.select(
@@ -512,7 +497,7 @@ def _cc_loop(state, und, max_iterations):
             ptr = ptr.join(hop, "jump", "left").select(
                 "component", F.coalesce("jump2", "jump").alias("jump")
             )
-        new_lmap = (
+        return (
             lmap.join(nbr, "component", "left")
             .join(ptr, "component", "left")
             .select(
@@ -525,25 +510,26 @@ def _cc_loop(state, und, max_iterations):
                 F.col("component").alias("_old"),
             )
         )
-        new_lmap = cut_lineage(new_lmap, eager=False)
-        changed = new_lmap.filter(F.col("component") < F.col("_old")).count()
-        lmap = new_lmap.select("id", "component")
-        if changed == 0:
-            converged = True
-            break
+
+    # round 0's changed count is the driver's first size, so the label
+    # map's first round takes no extra count
+    lmap = state.select(F.col("component").alias("id")).dropDuplicates(["id"])
+    lmap = cut_lineage(lmap.select("id", F.col("id").alias("component")), eager=False)
+    moved = F.col("component") < F.col("_old")
+    labels = Fixpoint(lmap, relabel, flag=moved, size=changed).run(max_iterations - 1)
     # ---- compose once: vertex label → its label's final component.
     # Every round-0 label is an lmap key by construction, so the inner
     # join is total; lmap is label-sized (small), typically broadcast.
     state = (
         state.join(
-            lmap.select(
+            labels.state.select(
                 F.col("id").alias("component"), F.col("component").alias("_final")
             ),
             "component",
         )
         .select("id", F.col("_final").alias("component"))
     )
-    if not converged:
+    if not labels.converged:
         # labels were still moving when the cap hit: the returned
         # components are an UNDER-merged partition of the true ones.
         # Silent truncation here poisons every dedup-cluster consumer
@@ -735,24 +721,27 @@ def k_core(
     credits both ends exactly once — identical to the symmetric
     groupBy) and are then maintained INCREMENTALLY (r12, guide §2.1):
     a peel round subtracts the dropped endpoints' credits — computable
-    from the tiny dropped set × the edge relation with broadcast joins
-    — instead of re-aggregating the 2|E|-row endpoint union, and the
-    edge relation itself is never rewritten: each round's loss scan
-    filters by the cumulative dropped set (broadcast), so after the
-    build there is no edge-set-sized shuffle OR write at all. The
-    subtraction is exact (d_new(v) = d_old(v) − #removed edges
-    incident to v; vertices reaching d=0 leave the table exactly as
-    the endpoint-union form forgets them), so drops, rounds and output
-    replay identically — sf10 A/B (374d0e5:tools/prof_kcore3.py): 53.1 →
-    35.5 s with 0 row mismatches. An adversarial k whose drop set
-    outgrows the broadcast cap falls back to the r11 shuffle
-    semi-join peel + full re-aggregation, which stays correct at any
-    drop size.
+    from the round's dropped set × the edge relation — instead of
+    re-aggregating the 2|E|-row endpoint union, and the edge relation
+    itself is never rewritten, so after the build there is no
+    edge-set-sized shuffle OR write at all. The subtraction is exact
+    (d_new(v) = d_old(v) − #removed edges incident to v; vertices
+    reaching d=0 leave the table exactly as the endpoint-union form
+    forgets them), so drops, rounds and output replay identically —
+    sf10 A/B (374d0e5:tools/prof_kcore3.py): 53.1 → 35.5 s with 0 row
+    mismatches. It needs no cumulative drop set and no fallback at any
+    drop size: a credit to an id dropped in this round or earlier is
+    discarded by the left join from the survivors. The peel is a
+    :class:`Fixpoint` over the degree table whose flag is ``d < k``, so
+    one count per round both fills the round's cut and is the next
+    round's drop size. One gate: a drop set of at most
+    ``_PEEL_BROADCAST_MAX_ROWS`` ids is broadcast into the loss scan,
+    and a larger one is left to the planner.
     """
     und = _undirected_pairs(_edges(graph, edge_labels))
     # the edge relation is cut once at build, on disk: it is
-    # edge-set-sized and held for the whole loop; rounds only SCAN it
-    # (broadcast-filtered), never rewrite it
+    # edge-set-sized and held for the whole loop; rounds only SCAN it,
+    # never rewrite it
     und = cut_lineage(und, eager=True, disk=True)
     deg = (
         und.select(F.col("a").alias("id"))
@@ -760,82 +749,36 @@ def k_core(
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("d"))
     )
-    deg = cut_lineage(deg, eager=False)
-    dropped_all: DataFrame | None = None
-    for i in range(rounds):
-        # Convergence is decided on the DROPPED-vertex set (tiny)
-        # BEFORE any edge work: "no vertex below k" ⇔ "no edge
-        # removed" — every id in deg has d ≥ 1, so a drop always
-        # removes edges and an unchanged edge set means an empty
-        # drop set; the fixed-round oracle prefix replays
-        # identically. On the convergence round deg IS the answer.
-        dropped = deg.filter(F.col("d") < k).select("id")
-        n_drop = dropped.count()
-        if n_drop == 0:
-            break
-        small = n_drop <= _PEEL_BROADCAST_MAX_ROWS
-        if small and dropped_all is not None:
-            dropped_all = cut_lineage(dropped_all.unionByName(dropped), eager=True)
-            small = dropped_all.count() <= _PEEL_BROADCAST_MAX_ROWS
-        elif small:
-            dropped_all = dropped
-        if small:
-            # incremental degree update: each removed edge had at
-            # least one endpoint in this round's drop set; credit
-            # the loss to the OTHER endpoint when it survives.
-            # und still holds long-dead edges, but an edge with a
-            # previously-dropped endpoint was already subtracted —
-            # the cumulative anti-join excludes it (its other end
-            # is in dropped_all)
-            d = F.broadcast(dropped)
-            dall = F.broadcast(dropped_all)
-            gone_a = d.withColumnRenamed("id", "a")
-            gone_b = d.withColumnRenamed("id", "b")
-            all_a = dall.withColumnRenamed("id", "a")
-            all_b = dall.withColumnRenamed("id", "b")
-            loss = (
-                und.join(gone_a, "a", "left_semi")
-                .join(all_b, "b", "left_anti")
-                .select(F.col("b").alias("id"))
-                .unionAll(
-                    und.join(gone_b, "b", "left_semi")
-                    .join(all_a, "a", "left_anti")
-                    .select(F.col("a").alias("id"))
-                )
-                .groupBy("id")
-                .agg(F.count(F.lit(1)).alias("_l"))
+
+    def peel(deg: DataFrame, _round: int) -> DataFrame:
+        # each removed edge credits its loss to its OTHER endpoint; und
+        # still holds long-dead edges, whose credits the left join from
+        # the survivors discards
+        hint = F.broadcast if core.size <= _PEEL_BROADCAST_MAX_ROWS else (lambda df: df)
+        gone = hint(deg.filter(F.col("d") < k).select("id"))
+        loss = (
+            und.join(gone.withColumnRenamed("id", "a"), "a", "left_semi")
+            .select(F.col("b").alias("id"))
+            .unionAll(
+                und.join(gone.withColumnRenamed("id", "b"), "b", "left_semi")
+                .select(F.col("a").alias("id"))
             )
-            new_deg = (
-                deg.filter(F.col("d") >= k)
-                .join(F.broadcast(loss), "id", "left")
-                .select(
-                    "id",
-                    (F.col("d") - F.coalesce("_l", F.lit(0))).alias("d"),
-                )
-                .filter(F.col("d") > 0)
-            )
-            deg = cut_lineage(new_deg, eager=False)
-        else:
-            # drop set outgrew the broadcast budget (adversarial
-            # k): materialize the restricted edge set with the old
-            # shuffle semi-join peel and re-aggregate degrees in
-            # full — correct at any size; later rounds resume the
-            # incremental path against the rewritten relation
-            keep = deg.filter(F.col("d") >= k).select("id")
-            und = cut_lineage(
-                _inside(und, keep, "a", "b").select("a", "b"),
-                eager=True,
-                disk=True,
-            )
-            deg = cut_lineage(
-                und.select(F.col("a").alias("id"))
-                .unionAll(und.select(F.col("b").alias("id")))
-                .groupBy("id")
-                .agg(F.count(F.lit(1)).alias("d")),
-                eager=False,
-            )
-            dropped_all = None
-    return deg.filter(F.col("d") >= k).select(
+            .groupBy("id")
+            .agg(F.count(F.lit(1)).alias("_l"))
+        )
+        return (
+            deg.filter(F.col("d") >= k)
+            .join(hint(loss), "id", "left")
+            .select("id", (F.col("d") - F.coalesce("_l", F.lit(0))).alias("d"))
+            .filter(F.col("d") > 0)
+        )
+
+    # the flag is the drop set: "no vertex below k" ⇔ "no edge removed"
+    # (every id in deg has d ≥ 1), so the round that finds no drop ends
+    # the loop and its state IS the answer
+    core = Fixpoint(deg, peel, flag=F.col("d") < k)
+    core.run(rounds)
+    return core.state.filter(F.col("d") >= k).select(
         "id", F.col("d").alias("core_degree")
     )
 
@@ -1123,25 +1066,39 @@ def maximal_independent_set(
 
     Per round: one join of active vertices with the cached symmetric
     edge list + one max-combiner agg + two anti-joins — all
-    frontier-proportional; the active set only shrinks. Per-round
-    lineage cut, as in every BSP loop. MIS at scale is
+    frontier-proportional; the active set only shrinks. The rounds run
+    on :class:`Fixpoint` with the active set as the state, so the count
+    that fills a round's cut also ends the loop once nothing is active
+    (no extra empty round). MIS at scale is
     the classic building block for graph coloring / parallel
     scheduling / diversity sampling over near-dup graphs.
     """
-    from titan_spark.functions.hashing import portable_hash64
-
     # self-loops never block MIS entry
     ue = _sym_adjacency(_edges(graph, edge_labels)).cache()
-    remaining = cut_lineage(graph.vertices.select("id"), eager=True)
-    n_rem = remaining.count()
-    winners_acc: DataFrame | None = None
-    for r in range(max_iterations):
-        if n_rem == 0:
-            break
+    mis = _luby(ue, graph.vertices.select("id"), seed, max_iterations)
+    ue.unpersist()
+    return graph.vertices.select("id").join(
+        mis.withColumn("_in", F.lit(True)), "id", "left"
+    ).select("id", F.coalesce(F.col("_in"), F.lit(False)).alias("in_mis"))
+
+
+def _luby(
+    ue: DataFrame, ids: DataFrame, seed: int, max_iterations: int, size: int | None = None
+) -> DataFrame:
+    """Luby's rounds over the active ``ids`` and the symmetric edge
+    list ``ue`` (u, v) → the MIS winners (id). ``size`` is the number of
+    ids when the caller knows it. Only edges with both endpoints active
+    take part, so ``ue`` may hold edges to retired or ghost ids. Warns
+    when active ids remain after ``max_iterations`` rounds."""
+    from titan_spark.functions.hashing import portable_hash64
+
+    won: list[DataFrame] = []
+
+    def round_(active: DataFrame, r: int) -> DataFrame:
         pr = portable_hash64(
             F.concat(F.lit(f"mis{seed}:{r}:"), F.col("id").cast("string"))
         )
-        ap = remaining.select("id", pr.alias("p"))
+        ap = active.select("id", pr.alias("p"))
         nbr_max = (
             ue.join(ap.select(F.col("id").alias("v"), F.struct("p", "id").alias("vs")), "v")
             .join(ap.select(F.col("id").alias("u")), "u")
@@ -1154,32 +1111,20 @@ def maximal_independent_set(
             .filter(F.col("mx").isNull() | (F.struct("p", "id") > F.col("mx")))
             .select("id")
         )
-        winners = cut_lineage(winners, eager=True)
+        # filled by the count of the next active set, which reads it
+        won.append(cut_lineage(winners, eager=False))
         losers = (
-            ue.join(winners.withColumnRenamed("id", "u"), "u")
+            ue.join(won[-1].withColumnRenamed("id", "u"), "u")
             .select(F.col("v").alias("id"))
             .distinct()
-            .join(remaining, "id", "left_semi")
+            .join(active, "id", "left_semi")
         )
-        retired = winners.unionByName(losers)
-        # lazy cut + full count: one job materializes the next
-        # active set and answers the loop's emptiness test
-        remaining = cut_lineage(
-            remaining.join(retired, "id", "left_anti"),
-            eager=False,
-        )
-        n_rem = remaining.count()
-        winners_acc = (
-            winners if winners_acc is None else winners_acc.unionByName(winners)
-        )
-        winners_acc = cut_lineage(winners_acc, eager=False)
-    ue.unpersist()
-    if n_rem > 0:
+        return active.join(won[-1].unionByName(losers), "id", "left_anti")
+
+    luby = Fixpoint(ids, round_, size=size).run(max_iterations)
+    if not luby.converged:
         _warn_unconverged("maximal_independent_set", max_iterations, "it may not be maximal.")
-    mis = winners_acc if winners_acc is not None else remaining.limit(0)
-    return graph.vertices.select("id").join(
-        mis.withColumn("_in", F.lit(True)), "id", "left"
-    ).select("id", F.coalesce(F.col("_in"), F.lit(False)).alias("in_mis"))
+    return reduce(DataFrame.unionByName, won, ids.select("id").limit(0))
 
 
 def topological_levels(
@@ -1195,7 +1140,7 @@ def topological_levels(
     vertices whose level rose last round — a level can rise only when
     a predecessor's did, so the merge `max(old, bumped)` over the
     frontier's successors is exact. Per-round cost is
-    O(out-edges(frontier) + |bumped|) plus one anti-join merge into
+    O(out-edges(frontier) + |bumped|) plus one grouped-max merge into
     the state, not O(|E|)·depth. Raises on non-convergence (a cycle:
     topological layering is undefined — the reference failure mode,
     not a silent wrong answer). Only vertex rows are layered: an edge
@@ -1220,11 +1165,11 @@ def topological_levels(
             .select("id", F.col("_nl").alias("level"))
         )
 
-    def upsert(lvl: DataFrame, bumped: DataFrame) -> DataFrame:
-        return lvl.join(bumped, "id", "left_anti").unionByName(bumped)
+    def rise(lvl: DataFrame, bumped: DataFrame) -> DataFrame:
+        return lvl.unionByName(bumped).groupBy("id").agg(F.max("level").alias("level"))
 
     seed = graph.vertices.select("id", F.lit(0).cast("long").alias("level"))
-    layers = Frontier(seed, expand, upsert).run(max_iterations)
+    layers = Frontier(seed, expand, rise).run(max_iterations)
     ed.unpersist()
     if not layers.converged:
         raise ValueError(
@@ -1389,38 +1334,31 @@ def greedy_coloring(
     monochromatic edge) with at most Δ+1 colors (every vertex joins
     an MIS once all neighbors of lower colors are gone). Rounds =
     colors used × Luby rounds — both logarithmic-ish on sparse
-    graphs; the residual vertex/edge sets only shrink and each color
-    pass reuses :func:`maximal_independent_set` unchanged. Coloring
+    graphs. The color passes run on :class:`Fixpoint` with the
+    uncolored ids as the state; each pass is the Luby loop of
+    :func:`maximal_independent_set` on those ids, over one cached
+    symmetric edge list. Coloring
     feeds conflict-free parallel scheduling (e.g. batching DML on a
     dependency graph) and diversity batching over near-dup graphs.
     """
-    verts = cut_lineage(graph.vertices.select("id", "label"), eager=True)
-    edges = cut_lineage(
-        _edges(graph, edge_labels).select("edge_id", "src", "dst", "label"), eager=True
-    )
-    colored: DataFrame | None = None
-    for c in range(max_colors):
-        if verts.limit(1).count() == 0:
-            break
-        mis = maximal_independent_set(
-            PropertyGraph(verts, edges), seed=seed + c
-        ).filter(F.col("in_mis"))
-        got = cut_lineage(
-            mis.select("id", F.lit(c).cast("int").alias("color")), eager=True
-        )
-        colored = got if colored is None else colored.unionByName(got)
-        colored = cut_lineage(colored, eager=True)
-        verts = cut_lineage(verts.join(got, "id", "left_anti"), eager=True)
-        edges = cut_lineage(
-            edges.join(got.withColumnRenamed("id", "src"), "src", "left_anti")
-            .join(got.withColumnRenamed("id", "dst"), "dst", "left_anti"),
-            eager=True,
-        )
-    if verts.limit(1).count() > 0:
+    ue = _sym_adjacency(_edges(graph, edge_labels)).cache()
+    colored: list[DataFrame] = []
+
+    def color(uncolored: DataFrame, c: int) -> DataFrame:
+        # Luby's joins skip every edge with a coloured endpoint, so the
+        # residual graph is never built; 30 rounds is MIS's default cap
+        mis = _luby(ue, uncolored, seed + c, 30, size=coloring.size)
+        colored.append(mis.select("id", F.lit(c).cast("int").alias("color")))
+        return uncolored.join(mis, "id", "left_anti")
+
+    coloring = Fixpoint(graph.vertices.select("id"), color)
+    coloring.run(max_colors)
+    ue.unpersist()
+    if not coloring.converged:
         raise ValueError(f"coloring did not finish within {max_colors} colors")
-    if colored is None:  # no vertex rows
+    if not colored:  # no vertex rows
         return local_relation(graph.vertices.sparkSession, [], "id long, color int")
-    return colored
+    return reduce(DataFrame.unionByName, colored)
 
 
 def random_walks(
@@ -1572,13 +1510,20 @@ def strongly_connected_components(
     warm, bit-identical assignments (374d0e5:tools/prof_scc2.py).
 
     ``strict=True`` (default) raises ``ValueError`` if ``max_outer``
-    rounds run out before every vertex is assigned — a partial
+    rounds run out before every vertex is assigned, or if an inner
+    fixpoint is still moving after ``max_inner`` rounds — a partial
     assignment would turn leftover vertices into fake singleton SCCs,
     and :func:`condensation` built on it would silently emit a cyclic
     "DAG" (matching :func:`topological_levels`' raise-on-cycle
     contract). ``strict=False`` restores the old warn-and-return-
     partial behavior for exploratory use.
     """
+    def capped(rounds: str, knob: str, result: str) -> None:
+        msg = f"strongly_connected_components did not converge in {rounds}"
+        if strict:
+            raise ValueError(f"{msg}; raise {knob} or pass strict=False to accept {result}")
+        warnings.warn(f"{msg}; returning {result}", RuntimeWarning, stacklevel=3)
+
     ed_all = _adjacency(_edges(graph, edge_labels), "out")
     # a lazy cut plus a count: one action both materializes the
     # remaining set and answers "is anything left"
@@ -1672,6 +1617,9 @@ def strongly_connected_components(
         bwd = Frontier(members0, reach_back, drop_collected, state=cmap, disk=big_state)
         collected = [bwd.frontier]
         bwd.run(max_inner)
+        if not (fwd.converged and bwd.converged):
+            # a capped fixpoint splits an SCC into fake singletons
+            capped(f"{max_inner} inner rounds", "max_inner (long cycles)", "split components")
         members = reduce(DataFrame.unionByName, collected)
         # 3. retire: rep = min id of each collected SCC; the
         # still-uncollected leftover of uncolmap IS the next
@@ -1683,18 +1631,7 @@ def strongly_connected_components(
         n_rem = remaining.count()
         sub_e.unpersist()
     if n_rem > 0:
-        if strict:
-            raise ValueError(
-                f"strongly_connected_components did not converge in "
-                f"{max_outer} outer rounds; raise max_outer (deep "
-                f"SCC-chain graph) or pass strict=False to accept a "
-                f"partial assignment"
-            )
-        warnings.warn(
-            f"strongly_connected_components did not converge in {max_outer} "
-            "outer rounds; returning partial assignment",
-            stacklevel=2,
-        )
+        capped(f"{max_outer} outer rounds", "max_outer (deep SCC chains)", "a partial assignment")
         done = done.unionByName(remaining.select("id", F.col("id").alias("component")))
     return done
 
