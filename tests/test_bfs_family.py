@@ -4,8 +4,9 @@ sampled betweenness, k_hop_subgraph, bidirectional_distance,
 topological_levels, shortest_distance, strongly_connected_components
 and k_truss. On ``pregel()``'s fixed rounds: pagerank,
 personalized_pagerank and label_propagation. On the whole-state
-fixpoint driver: k_core, maximal_independent_set, greedy_coloring and
-connected_components' distributed label loop.
+fixpoint driver: k_core, maximal_independent_set, greedy_coloring,
+connected_components' distributed label loop, minimum_spanning_forest
+and louvain's move rounds (pinned for their job counts only).
 
 Ghost-vertex rule (an edge endpoint with no vertex row): the BFS loops
 expand over the edge relation alone, so a ghost is a vertex of the
@@ -49,6 +50,7 @@ from titan_spark.compute import (
     k_hop_subgraph,
     k_truss,
     label_propagation,
+    louvain,
     maximal_independent_set,
     pagerank,
     personalized_pagerank,
@@ -56,6 +58,7 @@ from titan_spark.compute import (
     strongly_connected_components,
     topological_levels,
 )
+from titan_spark.compute.algorithms import minimum_spanning_forest
 from titan_spark.graph import PropertyGraph
 
 
@@ -453,6 +456,8 @@ def test_capped_bfs_loops_warn(spark, sf_dir):
     with warnings.catch_warnings():
         warnings.simplefilter("error", RuntimeWarning)
         assert shortest_distance(g, 0).filter("distance = 24").count() == 1
+        # the 24th round settles the last vertex: the cap is met exactly
+        assert shortest_distance(g, 0, max_iterations=24).filter("distance = 24").count() == 1
         # the second round empties the active set: the cap is met
         maximal_independent_set(g, max_iterations=2).collect()
         entry.queries()["mis_geo"](spark, sf_dir).collect()
@@ -470,8 +475,10 @@ def test_capped_scc_inner_fixpoint_raises_or_warns(spark):
         strongly_connected_components(cycle, max_inner=2)
     with pytest.warns(RuntimeWarning, match="did not converge"):
         strongly_connected_components(cycle, max_inner=2, strict=False)
-    got = strongly_connected_components(cycle, max_inner=10).collect()
-    assert {r["id"]: r["component"] for r in got} == dict.fromkeys(range(10), 0)
+    # nine rounds settle both fixpoints, so a cap of nine is met exactly
+    for max_inner in (9, 10):
+        got = strongly_connected_components(cycle, max_inner=max_inner).collect()
+        assert {r["id"]: r["component"] for r in got} == dict.fromkeys(range(10), 0), max_inner
 
 
 def test_bfs_family_rows_do_not_depend_on_the_partition_count(spark, sf_dir):
@@ -496,6 +503,9 @@ def test_bfs_family_rows_do_not_depend_on_the_partition_count(spark, sf_dir):
         "k_truss",
         "k_core",
         "mis_geo",
+        "minimum_spanning_tree",
+        "louvain_cliques",
+        "dedup_clusters",
     )
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
@@ -627,3 +637,27 @@ def test_bfs_loop_job_counts_are_pinned(spark):
         spark.conf.set(key, old)
     assert comp == {0}
     assert jobs == 63
+    # Borůvka's rounds and its pointer-jump passes, and louvain's move
+    # rounds, each take one count per round. These two counts moved by
+    # up to two jobs between runs of the same code, so they are bounds,
+    # set below the 72 and 186 jobs that the hand-written loops took
+    rng = random.Random(7)
+    chain = [(i, i + 1, float(w)) for i, w in enumerate(rng.sample(range(1, 1000), 39))]
+    d = spark.createDataFrame(chain, "src long, dst long, weight double")
+    forest, jobs = _jobs(
+        spark,
+        "bfs-pin-msf",
+        lambda: sorted(tuple(r) for r in minimum_spanning_forest(d).collect()),
+    )
+    assert forest == chain
+    assert jobs <= 61
+    two = [0, 2, 4, 6], [1, 3, 5, 7]
+    cliques = [(a, b) for cl in two for i, a in enumerate(cl) for b in cl[i + 1 :]] + [(0, 1)]
+    lg = _property_graph(spark, list(range(8)), [(i, a, b, "x") for i, (a, b) in enumerate(cliques)])
+    comm, jobs = _jobs(
+        spark,
+        "bfs-pin-louvain",
+        lambda: {r["id"]: r["community"] for r in louvain(lg).collect()},
+    )
+    assert comm == {v: v % 2 for v in range(8)}
+    assert jobs <= 136

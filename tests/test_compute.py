@@ -245,6 +245,12 @@ def test_personalized_pagerank_mass_stays_near_seeds(spark):
     assert got[0] == 0.15
     assert got[1] == round(0.85 * 0.15, 9)
     assert got[2] == 0.0 and got[3] == 0.0
+    # a repeated seed counts once in |S|
+    ppr = [
+        sorted(tuple(r) for r in personalized_pagerank(g, seeds, alpha=0.85, iterations=3).collect())
+        for seeds in ([0, 0, 3], [0, 3])
+    ]
+    assert ppr[0] == ppr[1]
 
 
 def test_bidirectional_distance_closed_forms(spark):
@@ -353,7 +359,8 @@ def test_hits_closed_form(spark):
 
 
 def _py_kruskal(n_vertices, edges):
-    """Union-find Kruskal reference: edges as (u, v, w), distinct w."""
+    """Union-find Kruskal reference: edges as (u, v, w) with u < v,
+    taken in (w, u, v) order, so tied weights give one forest."""
     parent = list(range(n_vertices))
 
     def find(x):
@@ -374,19 +381,25 @@ def _py_kruskal(n_vertices, edges):
 def test_boruvka_msf_matches_kruskal_random(spark):
     """Borůvka equals union-find Kruskal on seeded random graphs with
     distinct weights (unique MSF), including disconnected ones — the
-    forest has V - #components edges and the exact same edge set."""
+    forest has V - #components edges and the exact same edge set —
+    and with weights tied from {1, 2, 3}, where both break ties on the
+    (w, u, v) order."""
     import itertools
     import random
 
     from titan_spark.compute.algorithms import minimum_spanning_forest
 
     rng = random.Random(20260815)
-    for trial in range(6):
+    for trial in range(10):
         n = rng.randint(2, 12)
         pairs = list(itertools.combinations(range(n), 2))
         rng.shuffle(pairs)
         m = rng.randint(1, len(pairs))
-        weights = rng.sample(range(1, 10_000), m)
+        # the last trials tie weights, which break on (w, u, v) order
+        if trial < 6:
+            weights = rng.sample(range(1, 10_000), m)
+        else:
+            weights = [rng.choice((16, 32, 48)) for _ in range(m)]
         edges = [
             (u, v, w / 16.0) for (u, v), w in zip(pairs[:m], weights)
         ]

@@ -89,6 +89,25 @@ def _inside(e: DataFrame, ids: DataFrame, a: str = "src", b: str = "dst") -> Dat
     )
 
 
+def _contract(
+    e: DataFrame, labels: DataFrame, a: str = "u", b: str = "v", loops: bool = False
+) -> DataFrame:
+    """Edge contraction, GRADOOP's grouping of edges by (key(src),
+    key(dst)): the ``a`` and ``b`` columns of ``e`` relabel through an
+    ``(id, component)`` map by two inner joins, and every other column
+    of ``e`` carries through unchanged. A pair whose endpoints fall in
+    one component drops unless ``loops``. Callers dedup or aggregate the
+    quotient edges themselves; an endpoint missing from ``labels``
+    drops its pair, so the map must cover every endpoint."""
+    out = e.join(
+        labels.select(F.col("id").alias(a), F.col("component").alias("_ca")), a
+    ).join(labels.select(F.col("id").alias(b), F.col("component").alias("_cb")), b)
+    if not loops:
+        out = out.filter(F.col("_ca") != F.col("_cb"))
+    rest = [c for c in e.columns if c not in (a, b)]
+    return out.select(F.col("_ca").alias(a), F.col("_cb").alias(b), *rest)
+
+
 def _warn_unconverged(what: str, max_iterations: int, result: str) -> None:
     warnings.warn(
         f"{what} did not converge within {max_iterations} rounds; {result}",
@@ -447,18 +466,13 @@ def _cc_loop(state, und, max_iterations):
     # already quotient-sized — never materializing 2|E| vertex-space
     # rows. Relabeling commutes with the swap, so this equals
     # contracting a symmetrized edge set exactly.
-    lab_u = state.select(F.col("id").alias("u"), F.col("component").alias("cu"))
-    lab_v = state.select(F.col("id").alias("v"), F.col("component").alias("cv"))
     live = (
-        und.select("u", "v")
-        .join(lab_u, "u")
-        .join(lab_v, "v")
-        .filter(F.col("cu") != F.col("cv"))
+        _contract(und.select("u", "v"), state)
         .select(
             F.explode(
                 F.array(
-                    F.struct(F.col("cu").alias("u"), F.col("cv").alias("v")),
-                    F.struct(F.col("cv").alias("u"), F.col("cu").alias("v")),
+                    F.struct(F.col("u"), F.col("v")),
+                    F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
                 )
             ).alias("p")
         )
@@ -470,16 +484,7 @@ def _cc_loop(state, und, max_iterations):
     def relabel(lmap: DataFrame, r: int) -> DataFrame:
         nonlocal live
         if r > 0:
-            lab_u = lmap.select(F.col("id").alias("u"), F.col("component").alias("cu"))
-            lab_v = lmap.select(F.col("id").alias("v"), F.col("component").alias("cv"))
-            live = (
-                live.join(lab_u, "u")
-                .join(lab_v, "v")
-                .filter(F.col("cu") != F.col("cv"))
-                .select(F.col("cu").alias("u"), F.col("cv").alias("v"))
-                .dropDuplicates(["u", "v"])
-            )
-            live = cut_lineage(live, eager=False)
+            live = cut_lineage(_contract(live, lmap).dropDuplicates(["u", "v"]), eager=False)
         # neighbor min on the quotient graph, keyed by LABEL (live is
         # symmetric in label space, so grouping on u covers both
         # directions)
@@ -923,9 +928,10 @@ def personalized_pagerank(
     round); the restart vector is a broadcast ``isin`` literal — fine
     for seed sets up to thousands, beyond that pass seeds as a
     DataFrame join instead. Ghost endpoints as in :func:`pagerank`; a
-    ghost seed counts in |S| but holds no mass.
+    ghost seed counts in |S| but holds no mass. A repeated seed counts
+    once.
     """
-    seeds = [int(s) for s in seed_ids]
+    seeds = list(dict.fromkeys(int(s) for s in seed_ids))
     if not seeds:
         raise ValueError("personalized_pagerank requires at least one seed")
     seed_mass = 1.0 / len(seeds)
@@ -1933,15 +1939,8 @@ def condensation(
         .withColumn("label", F.lit("scc"))
         .select("id", "label", "n_members")
     )
-    ca = components.select(F.col("id").alias("src"), F.col("component").alias("ca"))
-    cb = components.select(F.col("id").alias("dst"), F.col("component").alias("cb"))
     ce = (
-        _edges(graph, edge_labels)
-        .select("src", "dst")
-        .join(ca, "src")
-        .join(cb, "dst")
-        .filter(F.col("ca") != F.col("cb"))
-        .select(F.col("ca").alias("src"), F.col("cb").alias("dst"))
+        _contract(_edges(graph, edge_labels).select("src", "dst"), components, "src", "dst")
         .dropDuplicates()
         .select(
             F.monotonically_increasing_id().alias("edge_id"),
@@ -2255,21 +2254,20 @@ def modularity(
         # which sums supervertex edge weights
         .agg(F.sum("w").alias("w"))
     )
-    asg = assignment.select(F.col("id"), F.col("community"))
-    labeled = (
-        und.join(asg.select(F.col("id").alias("a"), F.col("community").alias("ca")), "a")
-        .join(asg.select(F.col("id").alias("b"), F.col("community").alias("cb")), "b")
+    # (a, b) relabelled to the endpoints' communities: per-community
+    # intra weight and total degree (each edge adds its weight to both
+    # endpoints' communities)
+    labeled = _contract(
+        und, assignment.select("id", F.col("community").alias("component")), "a", "b", loops=True
     )
-    # per-community intra weight and total degree (each edge adds its
-    # weight to both endpoints' communities)
     intra = (
-        labeled.filter(F.col("ca") == F.col("cb"))
-        .groupBy(F.col("ca").alias("community"))
+        labeled.filter(F.col("a") == F.col("b"))
+        .groupBy(F.col("a").alias("community"))
         .agg(F.sum("w").alias("e_c"))
     )
     deg_c = (
-        labeled.select(F.col("ca").alias("community"), "w")
-        .unionAll(labeled.select(F.col("cb").alias("community"), "w"))
+        labeled.select(F.col("a").alias("community"), "w")
+        .unionAll(labeled.select(F.col("b").alias("community"), "w"))
         .groupBy("community")
         .agg(F.sum("w").alias("d_c"))
     )
@@ -2307,10 +2305,13 @@ def louvain(
     neighboring community, taking the modularity gain
     ΔQ ∝ k_in(v,c) − k(v)·Σ_tot(c)/(2m) and moving to the best
     strictly-positive gain (ties → smaller community id); after
-    ``rounds_per_level`` synchronous rounds the graph is contracted
-    (communities become supervertices, parallel edge weights sum,
-    intra-community weight folds into self-loops) and the next level
-    repeats on the coarsened graph. Deterministic: no random vertex
+    ``rounds_per_level`` synchronous rounds, or sooner once a round
+    moves no vertex (the rounds run on :class:`Fixpoint`, and a
+    deterministic round that moves nothing would only repeat itself),
+    the graph is contracted by :func:`_contract` (communities become
+    supervertices, parallel edge weights sum, intra-community weight
+    folds into self-loops) and the next level repeats on the coarsened
+    graph. Deterministic: no random vertex
     order — simultaneous moves with a total tie order, the
     batch-friendly formulation used by distributed Louvain
     implementations (vs the inherently sequential original).
@@ -2367,19 +2368,17 @@ def louvain(
             .groupBy("node")
             .agg(F.sum("w").alias("k"))
         )
-        comm = nodes.select("node", F.col("node").alias("community"))
+        half = proper.select("a", "b", "w").unionAll(
+            proper.select(F.col("b").alias("a"), F.col("a").alias("b"), "w")
+        )
 
-        for _round in range(rounds_per_level):
-            comm = cut_lineage(comm, eager=True)
+        def move(comm: DataFrame, _r: int) -> DataFrame:
             sig_tot = (
                 k.join(comm, "node")
                 .groupBy("community")
                 .agg(F.sum("k").alias("sig"))
             )
             # k_in(v, c): weight from v to neighbors currently in c
-            half = proper.select("a", "b", "w").unionAll(
-                proper.select(F.col("b").alias("a"), F.col("a").alias("b"), "w")
-            )
             kin = (
                 half.join(
                     comm.select(F.col("node").alias("b"), F.col("community").alias("c")),
@@ -2451,13 +2450,20 @@ def louvain(
                 .filter(F.col("rn") == 1)
                 .select("node", F.col("c").alias("new_community"))
             )
-            comm = (
-                comm.join(best, "node", "left")
-                .select(
-                    "node",
-                    F.coalesce("new_community", "community").alias("community"),
-                )
+            return comm.join(best, "node", "left").select(
+                "node",
+                F.coalesce("new_community", "community").alias("community"),
+                F.col("community").alias("_old"),
             )
+
+        # a round is deterministic, so one that moves no vertex would
+        # repeat itself: stop there. _old starts NULL, so every node is
+        # flagged, and total_w > 0 means there is one: no count needed
+        comm = nodes.select(
+            "node", F.col("node").alias("community"), F.lit(None).cast("long").alias("_old")
+        )
+        moved = ~F.col("community").eqNullSafe(F.col("_old"))
+        comm = Fixpoint(comm, move, flag=moved, size=1).run(rounds_per_level).state
 
         # canonical community id = min member node id at this level
         canon = comm.groupBy("community").agg(F.min("node").alias("canon"))
@@ -2476,13 +2482,12 @@ def louvain(
         )
         # contract: communities become vertices, edge weights sum
         cur = (
-            cur.join(comm.select(F.col("node").alias("a"), F.col("community").alias("ca")), "a")
-            .join(comm.select(F.col("node").alias("b"), F.col("community").alias("cb")), "b")
-            .select(
-                F.least("ca", "cb").alias("a"),
-                F.greatest("ca", "cb").alias("b"),
-                "w",
+            _contract(
+                cur,
+                comm.select(F.col("node").alias("id"), F.col("community").alias("component")),
+                "a", "b", loops=True,
             )
+            .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"), "w")
             .groupBy("a", "b")
             .agg(F.sum("w").alias("w"))
         )
@@ -2521,8 +2526,10 @@ def minimum_spanning_forest(
     election tree onto its root — CHAINED four-deep per
     materialization (parent⁴ in one plan), so a depth-D tree needs
     ~log₄D materializations, not D; (3) live quotient edges relabel
-    to the new roots and same-component pairs drop (edge contraction,
-    _cc_loop's trick — the relation shrinks geometrically). Sources —
+    to the new roots and same-component pairs drop (:func:`_contract`,
+    as in _cc_loop — the relation shrinks geometrically). Rounds run
+    on :class:`Fixpoint` until no live edge is left; jump passes on an
+    inner one until a pass's fourth jump moves no row. Sources —
     Borůvka 1926 via the textbook parallel formulation; the reference
     engine ships no MST (its OLAP layer delegates global algorithms
     to external graph computers), so this fills that gap as a
@@ -2536,7 +2543,7 @@ def minimum_spanning_forest(
     elected relations, each already lineage-cut), never on the
     driver.
     """
-    e0 = (
+    live = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
             F.greatest(F.col(src), F.col(dst)).alias("b"),
@@ -2545,38 +2552,35 @@ def minimum_spanning_forest(
         .filter(F.col("a") != F.col("b"))
         .groupBy("a", "b")
         .agg(F.min("w").alias("w"))
+        # live quotient edges carry original endpoints (oa, ob) forever
+        .select(F.col("a").alias("ca"), F.col("b").alias("cb"), "w",
+                F.col("a").alias("oa"), F.col("b").alias("ob"))
     )
-    # live quotient edges carry original endpoints (oa, ob) forever
-    live = e0.select(
-        F.col("a").alias("ca"),
-        F.col("b").alias("cb"),
-        "w",
-        F.col("a").alias("oa"),
-        F.col("b").alias("ob"),
-    )
-    live = cut_lineage(live, eager=True)
-    n_live = live.count()
-    spark = edges.sparkSession
 
-    def _jump(j, base):
-        return (
-            j.alias("x")
-            .join(base.alias("y"), F.col("x.parent") == F.col("y.c"), "left")
-            .select(
-                F.col("x.c").alias("c"),
-                F.coalesce(F.col("y.parent"), F.col("x.parent")).alias(
-                    "parent"
-                ),
+    def flatten(par: DataFrame, _r: int) -> DataFrame:
+        # four chained jumps against this pass's table (parent⁴), each
+        # keeping the parent it replaced as _old: if the fourth moved no
+        # row, every row already points at a root
+        base = par.select("c", "parent")
+        j = base
+        for _ in range(4):
+            j = (
+                j.alias("x")
+                .join(base.alias("y"), F.col("x.parent") == F.col("y.c"), "left")
+                .select(
+                    F.col("x.c").alias("c"),
+                    F.coalesce(F.col("y.parent"), F.col("x.parent")).alias("parent"),
+                    F.col("x.parent").alias("_old"),
+                )
             )
-        )
+        return j
 
     forest_rounds = []
-    rounds = 0
-    while n_live > 0 and rounds < max_iterations:
-        rounds += 1
+
+    def boruvka(live: DataFrame, _r: int) -> DataFrame:
         # (1) election: min (w, oa, ob) incident edge per component,
         # remembering the component on the far side for contraction
-        pick = F.struct("w", "oa", "ob", F.col("other").alias("other"))
+        pick = F.struct("w", "oa", "ob", "other")
         inc = live.select(
             F.col("ca").alias("c"), "w", "oa", "ob",
             F.col("cb").alias("other"),
@@ -2589,21 +2593,12 @@ def minimum_spanning_forest(
         elected = (
             inc.groupBy("c")
             .agg(F.min(pick).alias("e"))
-            .select(
-                "c",
-                F.col("e.w").alias("w"),
-                F.col("e.oa").alias("oa"),
-                F.col("e.ob").alias("ob"),
-                F.col("e.other").alias("parent"),
-            )
+            .select("c", "e.w", "e.oa", "e.ob", F.col("e.other").alias("parent"))
         )
-        # lazy cut: the rooting pass's first jump-probe count
-        # materializes it — one fewer job per Borůvka round
-        # (Change-1 pattern)
+        # lazy cut: the rooting pass's first count materializes it
         elected = cut_lineage(elected, eager=False)
-        forest_rounds.append(
-            elected.select("oa", "ob", "w").dropDuplicates(["oa", "ob"])
-        )
+        # a 2-cycle elects its edge twice: the final dedup drops it
+        forest_rounds.append(elected.select("oa", "ob", "w"))
         # (2) break mutual-choice 2-cycles: the smaller label roots
         par = elected.select("c", "parent")
         pp = par.select(
@@ -2619,61 +2614,25 @@ def minimum_spanning_forest(
             .otherwise(F.col("parent"))
             .alias("parent"),
         )
-        # pointer-jump to the roots: four chained jumps per
-        # materialization (parent⁴), exponential across passes
-        for _ in range(max_iterations):
-            j = par
-            for _k in range(4):
-                j = _jump(j, par)
-            # lazy cut + one count that BOTH materializes the
-            # jumped table and answers the convergence probe —
-            # the old eager cut + separate limit(1).count() was
-            # two jobs per pass (Change-1 pattern)
-            j = cut_lineage(j, eager=False)
-            moved = (
-                j.alias("x")
-                .join(
-                    j.alias("y"), F.col("x.parent") == F.col("y.c")
-                )
-                .filter(F.col("y.parent") != F.col("y.c"))
-                .limit(1)
-                .count()
-            )
-            par = j
-            if moved == 0:
-                break
-        # (3) relabel live edges to the new roots and contract
-        ra = par.select(F.col("c").alias("ca"), F.col("parent").alias("na"))
-        rb = par.select(F.col("c").alias("cb"), F.col("parent").alias("nb"))
-        live = (
-            live.join(ra, "ca", "left")
-            .join(rb, "cb", "left")
-            .select(
-                F.coalesce("na", "ca").alias("ca"),
-                F.coalesce("nb", "cb").alias("cb"),
-                "w",
-                "oa",
-                "ob",
-            )
-            .filter(F.col("ca") != F.col("cb"))
-        )
-        # live is the one CROSS-ROUND carrier, and the round's
-        # ~10-join tree multiplies its Catalyst size estimate (measured
-        # 385 -> 8052 bits in one round before cuts clamped it);
-        # cut_lineage clamps the carried estimate to
-        # defaultSizeInBytes, so every round plans against a flat stat
-        live = cut_lineage(live, eager=True)
-        n_live = live.count()
-    if n_live > 0:
+        # pointer-jump to the roots, exponential across passes; a live
+        # edge leaves at least one non-root pointer, so the first pass
+        # always runs and needs no count of its own
+        moved = F.col("parent") != F.col("_old")
+        par = Fixpoint(par, flatten, flag=moved, size=1).run(max_iterations).state
+        # (3) relabel live edges to the new roots and contract; par
+        # covers every live endpoint, so the inner joins keep every
+        # edge that crosses two components
+        roots = par.select(F.col("c").alias("id"), F.col("parent").alias("component"))
+        return _contract(live, roots, "ca", "cb")
+
+    msf = Fixpoint(live, boruvka).run(max_iterations)
+    if not msf.converged:
         _warn_unconverged(
             "minimum_spanning_forest", max_iterations, "the forest may be incomplete."
         )
     if not forest_rounds:
-        return local_relation(spark, [], "u long, v long, weight double")
-    forest = forest_rounds[0]
-    for nxt in forest_rounds[1:]:
-        forest = forest.unionByName(nxt)
-    return forest.select(
+        return local_relation(edges.sparkSession, [], "u long, v long, weight double")
+    return reduce(DataFrame.unionByName, forest_rounds).select(
         F.col("oa").alias("u"), F.col("ob").alias("v"),
         F.col("w").alias("weight"),
     ).dropDuplicates(["u", "v"])

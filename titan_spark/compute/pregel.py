@@ -52,9 +52,12 @@ probe is two actions, and under AQE an action runs a job per stage).
 - :class:`Fixpoint` runs a loop that rewrites one whole relation per
   round and stops when a count of it is 0: the k-core peel (the degree
   table, flagged ``d < k``), Luby's MIS (the active set), greedy
-  coloring (the uncoloured ids) and connected components' label map
-  (flagged where a label fell). GraphX's Pregel has this shape: vertex
-  state in one relation and a count of the active set.
+  coloring (the uncoloured ids), connected components' label map
+  (flagged where a label fell), Borůvka's live quotient edges, its
+  pointer jumps (flagged where the last jump moved a row) and
+  Louvain's move rounds (flagged where a vertex changed community).
+  GraphX's Pregel has this shape: vertex state in one relation and a
+  count of the active set.
 
 A union merge is left uncut because a union of cut deltas is already a
 flat plan whose ``UnionRDD`` has the sum of its children's partitions
@@ -188,6 +191,9 @@ class Frontier:
     last delta's row count; pass it for the seed when the caller knows
     it, since no job is run to find it. ``rounds`` counts the rounds
     that found something; ``converged`` says a round came back empty.
+    When :meth:`run` stops at its cap, the round that would come back
+    empty was never run, so ``converged`` runs one more expand and
+    counts it (not merged) the first time it is read.
     """
 
     def __init__(
@@ -203,16 +209,22 @@ class Frontier:
         self.state = self.frontier if state is None else state
         self.size = size
         self.rounds = 0
-        self.converged = False
+        self._converged: bool | None = False
         self._expand, self._merge = expand, merge
         self._cut = lambda df: cut_lineage(df, eager=False, disk=disk)
+
+    @property
+    def converged(self) -> bool:
+        if self._converged is None:
+            self._converged = self._expand(self.frontier, self.state).count() == 0
+        return self._converged
 
     def advance(self) -> bool:
         """Run one round (one action); False once the delta is empty."""
         delta = self._cut(self._expand(self.frontier, self.state))
         self.size = delta.count()
         if self.size == 0:
-            self.converged = True
+            self._converged = True
             return False
         self.rounds += 1
         if self._merge is None:
@@ -225,8 +237,9 @@ class Frontier:
     def run(self, max_rounds: int) -> "Frontier":
         """Advance until converged or ``max_rounds`` rounds found
         something."""
-        while not self.converged and self.rounds < max_rounds:
+        while not self._converged and self.rounds < max_rounds:
             self.advance()
+        self._converged = self._converged or None
         return self
 
 
@@ -236,9 +249,11 @@ class Fixpoint:
     ``step(state, round)`` returns the next state (``round`` counts
     from 0). The driver cuts it lazily and counts its ``flag`` rows, or
     every row when ``flag`` is None; a count of 0 ends the loop.
-    ``size`` is that count for the initial state; when the caller does
-    not know it, the initial state is cut and counted too. ``rounds``
-    counts the steps taken; ``converged`` says the last count was 0.
+    ``size`` is that count for the initial state, or any positive
+    number when the caller knows only that it is not 0; when the caller
+    does not know it, the initial state is cut and counted too.
+    ``rounds`` counts the steps taken; ``converged`` says the last count
+    was 0.
     """
 
     def __init__(
