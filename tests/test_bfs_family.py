@@ -1,12 +1,13 @@
-"""The loop families on the three drivers, against independent oracles.
+"""The loop families on the two drivers, against independent oracles.
 On the frontier driver: closeness and harmonic (landmark distances),
 sampled betweenness, k_hop_subgraph, bidirectional_distance,
-topological_levels, shortest_distance, strongly_connected_components
-and k_truss. On ``pregel()``'s fixed rounds: pagerank,
-personalized_pagerank and label_propagation. On the whole-state
-fixpoint driver: k_core, maximal_independent_set, greedy_coloring,
-connected_components' distributed label loop, minimum_spanning_forest
-and louvain's move rounds (pinned for their job counts only).
+topological_levels, shortest_distance, strongly_connected_components,
+k_truss, and random_walks and node2vec_walks (pinned for their job
+counts only). On the whole-state fixpoint driver: ``pregel()``'s fixed
+rounds (pagerank, personalized_pagerank and label_propagation), k_core,
+maximal_independent_set, greedy_coloring, connected_components'
+distributed label loop, minimum_spanning_forest and louvain's move
+rounds (pinned for their job counts only).
 
 Ghost-vertex rule (an edge endpoint with no vertex row): the BFS loops
 expand over the edge relation alone, so a ghost is a vertex of the
@@ -58,7 +59,7 @@ from titan_spark.compute import (
     strongly_connected_components,
     topological_levels,
 )
-from titan_spark.compute.algorithms import minimum_spanning_forest
+from titan_spark.compute.algorithms import minimum_spanning_forest, node2vec_walks, random_walks
 from titan_spark.graph import PropertyGraph
 
 
@@ -506,6 +507,8 @@ def test_bfs_family_rows_do_not_depend_on_the_partition_count(spark, sf_dir):
         "minimum_spanning_tree",
         "louvain_cliques",
         "dedup_clusters",
+        "random_walk_corpus",
+        "node2vec_corpus",
     )
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
@@ -535,8 +538,8 @@ def _jobs(spark, group, run):
 
 
 def test_bfs_loop_job_counts_are_pinned(spark):
-    # one action per round: a second action per round (an eager cut
-    # before the emptiness count) raises these counts. A 6-path 0→…→5
+    # one counted cut per round: a count run apart from the round's cut
+    # (a lazy cut plus count()) raises these counts. A 6-path 0→…→5
     # with a branch 1→6: the k-hop ball from 0 grows one ring per
     # round, and the levels settle in five rounds
     edges = [(i, i, i + 1, "e") for i in range(5)] + [(5, 1, 6, "e")]
@@ -547,21 +550,21 @@ def test_bfs_loop_job_counts_are_pinned(spark):
         lambda: sorted(r["id"] for r in k_hop_subgraph(g, [0], k=3).vertices.collect()),
     )
     assert ego == [0, 1, 2, 3, 6]
-    assert jobs == 21
+    assert jobs == 18
     levels, jobs = _jobs(
         spark,
         "bfs-pin-topo",
         lambda: {r["id"]: r["level"] for r in topological_levels(g).collect()},
     )
     assert levels == {0: 0, 1: 1, 2: 2, 3: 3, 4: 4, 5: 5, 6: 2}
-    assert jobs == 41
+    assert jobs == 35
     dist, jobs = _jobs(
         spark,
         "bfs-pin-distance",
         lambda: {r["id"]: r["distance"] for r in shortest_distance(g, 0).collect()},
     )
     assert dist == {0: 0.0, 1: 1.0, 2: 2.0, 3: 3.0, 4: 4.0, 5: 5.0, 6: 2.0}
-    assert jobs == 40
+    assert jobs == 34
     # colour invasion: the cycle {10, 11} floods {1, 2} with colour 11,
     # so SCC takes two outer rounds of both fixpoints
     inv = [(10, 11), (11, 10), (11, 1), (1, 2), (2, 1)]
@@ -572,7 +575,7 @@ def test_bfs_loop_job_counts_are_pinned(spark):
         lambda: {r["id"]: r["component"] for r in strongly_connected_components(ig).collect()},
     )
     assert scc == {1: 1, 2: 1, 10: 10, 11: 10}
-    assert jobs == 77
+    assert jobs == 65
     # K4 plus a tail triangle: the 4-truss peels the tail in one round
     # and the second round drops nothing
     k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
@@ -584,8 +587,22 @@ def test_bfs_loop_job_counts_are_pinned(spark):
         lambda: {(r["a"], r["b"]): r["support"] for r in k_truss(kg, k=4).collect()},
     )
     assert truss == dict.fromkeys(k4, 2)
-    assert jobs == 23
-    # fixed rounds: the initial cut, one eager cut per round and the collect
+    assert jobs == 21
+    # fixed rounds: the initial cut, one cut per round and the collect
+    ranks, jobs = _jobs(
+        spark, "bfs-pin-pagerank", lambda: pagerank(g, iterations=3).collect()
+    )
+    assert len(ranks) == 7
+    assert jobs == 20
+    # walks: one cut per step; the out-walk from 2 follows the path
+    for walk in (random_walks, node2vec_walks):
+        corpus, jobs = _jobs(
+            spark,
+            f"bfs-pin-{walk.__name__}",
+            lambda: walk(g, length=3, direction="out", start_ids=[2]).collect(),
+        )
+        assert sorted((r["step"], r["id"]) for r in corpus) == [(0, 2), (1, 3), (2, 4), (3, 5)]
+        assert jobs == {random_walks: 11, node2vec_walks: 37}[walk], walk.__name__
     communities, jobs = _jobs(
         spark,
         "bfs-pin-lpa",
@@ -603,7 +620,7 @@ def test_bfs_loop_job_counts_are_pinned(spark):
         lambda: {r["id"]: r["core_degree"] for r in k_core(cg, k=2).collect()},
     )
     assert core == dict.fromkeys(range(5, 9), 2)
-    assert jobs == 31
+    assert jobs == 25
     path = _property_graph(spark, list(range(25)), [(i, i, i + 1, "e") for i in range(24)])
     mis, jobs = _jobs(
         spark,
@@ -611,7 +628,7 @@ def test_bfs_loop_job_counts_are_pinned(spark):
         lambda: sorted(r["id"] for r in maximal_independent_set(path).collect() if r["in_mis"]),
     )
     assert mis == [0, 2, 4, 6, 8, 11, 14, 17, 19, 22, 24]
-    assert jobs == 34
+    assert jobs == 31
     # an odd cycle plus a pendant needs three colours
     c5 = [(i, i, (i + 1) % 5, "e") for i in range(5)] + [(5, 0, 5, "e")]
     c5g = _property_graph(spark, list(range(6)), c5)
@@ -621,7 +638,7 @@ def test_bfs_loop_job_counts_are_pinned(spark):
         lambda: {r["id"]: r["color"] for r in greedy_coloring(c5g).collect()},
     )
     assert colors == {0: 1, 1: 2, 2: 0, 3: 1, 4: 0, 5: 0}
-    assert jobs == 58
+    assert jobs == 50
     # with the broadcast threshold off, connected_components runs its
     # distributed label loop
     key = "spark.sql.autoBroadcastJoinThreshold"
@@ -636,11 +653,11 @@ def test_bfs_loop_job_counts_are_pinned(spark):
     finally:
         spark.conf.set(key, old)
     assert comp == {0}
-    assert jobs == 63
+    assert jobs == 57
     # Borůvka's rounds and its pointer-jump passes, and louvain's move
-    # rounds, each take one count per round. These two counts moved by
-    # up to two jobs between runs of the same code, so they are bounds,
-    # set below the 72 and 186 jobs that the hand-written loops took
+    # rounds, each take one counted cut per round. These two counts
+    # moved by up to two jobs between runs of the same code, so they
+    # are bounds: the largest count measured (46 and 119) plus two
     rng = random.Random(7)
     chain = [(i, i + 1, float(w)) for i, w in enumerate(rng.sample(range(1, 1000), 39))]
     d = spark.createDataFrame(chain, "src long, dst long, weight double")
@@ -650,7 +667,7 @@ def test_bfs_loop_job_counts_are_pinned(spark):
         lambda: sorted(tuple(r) for r in minimum_spanning_forest(d).collect()),
     )
     assert forest == chain
-    assert jobs <= 61
+    assert jobs <= 48
     two = [0, 2, 4, 6], [1, 3, 5, 7]
     cliques = [(a, b) for cl in two for i, a in enumerate(cl) for b in cl[i + 1 :]] + [(0, 1)]
     lg = _property_graph(spark, list(range(8)), [(i, a, b, "x") for i, (a, b) in enumerate(cliques)])
@@ -660,4 +677,4 @@ def test_bfs_loop_job_counts_are_pinned(spark):
         lambda: {r["id"]: r["community"] for r in louvain(lg).collect()},
     )
     assert comm == {v: v % 2 for v in range(8)}
-    assert jobs <= 136
+    assert jobs <= 121

@@ -545,6 +545,23 @@ def test_random_walks_semantics(spark, gods):
     got = sorted((r["step"], r["id"]) for r in dw)
     assert [s for s, _ in got] == [0, 1, 2]
 
+    # every walk dead-ends before its length on a directed path
+    # 0→1→2→3→4: the walk from i is i, i+1, ..., 4 for both walkers
+    from titan_spark.compute.algorithms import node2vec_walks
+
+    path = PropertyGraph(
+        spark.createDataFrame([(i, "n") for i in range(5)], "id long, label string"),
+        spark.createDataFrame(
+            [(i, i, i + 1, "e") for i in range(4)],
+            "edge_id long, src long, dst long, label string",
+        ),
+    )
+    want = {(i, t, i + t) for i in range(5) for t in range(5 - i)}
+    for walk in (random_walks, node2vec_walks):
+        rows = walk(path, length=8, direction="out").collect()
+        assert {(r["walk_id"], r["step"], r["id"]) for r in rows} == want, walk
+        assert len(rows) == len(want)
+
 
 def test_scc_closed_forms(spark):
     """SCC on handcrafted digraphs: cycles, singleton chains, and the

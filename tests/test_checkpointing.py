@@ -40,21 +40,25 @@ def test_cut_lineage_modes(spark, tmp_path):
 
 
 def test_pagerank_matches_under_reliable_checkpointing(gods, spark, tmp_path):
-    from titan_spark.compute.algorithms import pagerank
+    # pagerank runs on Fixpoint and shortest_distance on Frontier: both
+    # read each round's count from an Observation of a reliable cut
+    from titan_spark.compute.algorithms import pagerank, shortest_distance
 
-    base = {
-        r["id"]: r["pagerank"] for r in pagerank(gods, iterations=3).collect()
+    runs = {
+        "pagerank": lambda: pagerank(gods, iterations=3),
+        "distance": lambda: shortest_distance(gods, 1, direction="both"),
     }
-    _set_reliable(spark, str(tmp_path / "ck2"))
-    try:
-        reliable = {
-            r["id"]: r["pagerank"] for r in pagerank(gods, iterations=3).collect()
-        }
-    finally:
-        _clear_reliable(spark)
-    assert base.keys() == reliable.keys()
-    for k in base:
-        assert abs(base[k] - reliable[k]) < 1e-12
+    for name, run in runs.items():
+        base = {r[0]: r[1] for r in run().collect()}
+        _set_reliable(spark, str(tmp_path / name))
+        try:
+            reliable = {r[0]: r[1] for r in run().collect()}
+        finally:
+            _clear_reliable(spark)
+        assert len(base) > 1, name
+        assert base.keys() == reliable.keys(), name
+        for k in base:
+            assert abs(base[k] - reliable[k]) < 1e-12, name
 
 
 def _size(df):

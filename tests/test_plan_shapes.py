@@ -25,6 +25,26 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def round_plans(monkeypatch, run) -> list[str]:
+    """The plan of every round a loop driver cuts while ``run()`` runs.
+    A loop's result is itself a cut, whose plan is one RDD scan, so a
+    loop's plan shape is asserted on what its rounds cut."""
+    import importlib
+
+    # the package re-exports the function ``pregel``, which shadows the
+    # submodule as an attribute of ``titan_spark.compute``
+    pregel = importlib.import_module("titan_spark.compute.pregel")
+    real, plans = pregel.counted_cut, []
+
+    def recording(df, *args, **kwargs):
+        plans.append(plan_of(df))
+        return real(df, *args, **kwargs)
+
+    monkeypatch.setattr(pregel, "counted_cut", recording)
+    run()
+    return plans
+
+
 def scanned_files(plan: str) -> set[str]:
     return {
         line.split("/")[-1].rstrip("]")
@@ -188,17 +208,23 @@ def test_local_scoped_limit_uses_window_group_limit(tpch):
     assert "rangepartitioning" not in p.lower()
 
 
-def test_random_walk_step_joins_one_row_per_walk(spark, tpch):
+def test_random_walk_step_joins_one_row_per_walk(spark, tpch, monkeypatch):
     """The walk step must join the frontier against the ONE-row-per-
     vertex neighbor-array table (no per-candidate expansion: zero
     Expand/Generate nodes, no cross join) — the fix for the measured
     79.9x superlinear candidate-enumeration design."""
     from titan_spark.compute import random_walks
 
-    df = random_walks(tpch, length=2, direction="both",
-                      edge_labels=("in_nation", "in_region"), cut_every=99)
-    p = plan_of(df)
-    assert "CartesianProduct" not in p and "Generate" not in p
+    plans = round_plans(
+        monkeypatch,
+        lambda: random_walks(
+            tpch, length=2, direction="both", edge_labels=("in_nation", "in_region")
+        ),
+    )
+    assert len(plans) == 2
+    for p in plans:
+        assert "Join" in p and "element_at" in p, p
+        assert "CartesianProduct" not in p and "Generate" not in p, p
 
 
 def test_jl_projection_zero_shuffle_plan(spark):
@@ -275,7 +301,7 @@ def test_kmv_intersection_no_python_eval(spark, sf_dir):
     assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
 
 
-def test_node2vec_no_python_no_degree_explosion(spark, sf_dir):
+def test_node2vec_no_python_no_degree_explosion(spark, sf_dir, monkeypatch):
     """node2vec (rejection formulation): no Python eval nodes, no
     cartesian product, and the only explodes are the CONSTANT-width
     trial sequences (sequence(0, trials−1) — degree-independent); no
@@ -286,15 +312,20 @@ def test_node2vec_no_python_no_degree_explosion(spark, sf_dir):
 
     from titan_spark.plans.catalog import q_node2vec_corpus
 
-    p = plan_of(q_node2vec_corpus(spark, sf_dir))
-    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
-    assert "CartesianProduct" not in p
-    # every Generate must be the constant trial sequence, never an
-    # array-column explode
-    for m in re.findall(r"Generate (\w+)\(([^)]*)", p):
-        kind, arg = m
-        assert kind == "explode" and arg.startswith("sequence("), m
-    assert "sort_array" not in p and "collect_list" not in p
+    plans = round_plans(monkeypatch, lambda: q_node2vec_corpus(spark, sf_dir))
+    assert len(plans) == 3
+    # steps after the first run the rejection trials
+    assert all("explode(sequence(" in p for p in plans[1:])
+    for p in plans:
+        assert "Join" in p, p
+        assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+        assert "CartesianProduct" not in p
+        # every explode must be the constant trial sequence, never an
+        # array-column explode
+        for m in re.findall(r"(\w*explode)\(([^)]*)", p):
+            kind, arg = m
+            assert kind == "explode" and arg.startswith("sequence("), m
+        assert "sort_array" not in p and "collect_list" not in p
 
 
 def test_url_dedup_single_shuffle_no_text(spark, sf_dir):

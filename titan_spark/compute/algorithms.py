@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from titan_spark.compute.pregel import Fixpoint, Frontier, pregel
 from titan_spark.graph import PropertyGraph
-from titan_spark.compute.checkpointing import cut_lineage
+from titan_spark.compute.checkpointing import counted_cut, cut_lineage
 from titan_spark.session import local_relation
 
 # k_core broadcasts each round's dropped-vertex set (and the degree
@@ -451,11 +451,7 @@ def _cc_loop(state, und, max_iterations):
             F.col("component").alias("_old"),
         )
     )
-    # lazy cut + FULL count: one job both materializes the checkpoint
-    # and answers the convergence test (the Change-1 pattern; the old
-    # eager cut + limit(1) probe paid two jobs per round)
-    state0 = cut_lineage(state0, eager=False)
-    changed = state0.filter(F.col("component") < F.col("_old")).count()
+    state0, changed = counted_cut(state0, F.col("component") < F.col("_old"))
     state = state0.select("id", "component")
     if changed == 0:
         return state
@@ -738,10 +734,10 @@ def k_core(
     drop size: a credit to an id dropped in this round or earlier is
     discarded by the left join from the survivors. The peel is a
     :class:`Fixpoint` over the degree table whose flag is ``d < k``, so
-    one count per round both fills the round's cut and is the next
-    round's drop size. One gate: a drop set of at most
-    ``_PEEL_BROADCAST_MAX_ROWS`` ids is broadcast into the loss scan,
-    and a larger one is left to the planner.
+    the count on each round's cut is the next round's drop size. One
+    gate: a drop set of at most ``_PEEL_BROADCAST_MAX_ROWS`` ids is
+    broadcast into the loss scan, and a larger one is left to the
+    planner.
     """
     und = _undirected_pairs(_edges(graph, edge_labels))
     # the edge relation is cut once at build, on disk: it is
@@ -879,16 +875,16 @@ def k_truss(
     deterministic, so a generated SQL oracle replays it verbatim —
     and the loop early-stops once a round removes nothing. The peel
     runs on the frontier driver: a round's delta is the set of edges it
-    drops, so one count per round both materializes it and ends the
-    loop. The per-round triangle pass reuses the degree-ordered
-    enumeration, so wedge work stays arboricity-bounded on every round
-    (the edge set only shrinks). Ghost endpoints (no vertex row) are
+    drops, so the count on each round's cut ends the loop. The
+    per-round triangle pass reuses the degree-ordered enumeration, so
+    wedge work stays arboricity-bounded on every round (the edge set
+    only shrinks). Ghost endpoints (no vertex row) are
     truss vertices: the peel reads the edge relation alone.
     """
     und = _undirected_pairs(_edges(graph, edge_labels))
     # The triangle pass (_edge_support) dominates every round, so each
     # round's support is cut lazily (on disk, like the edge set, to keep
-    # executor memory flat) and filled by the round's one count. A
+    # executor memory flat) and filled by the round's counted cut. A
     # converged peel dropped nothing in its last round, so that round's
     # support is the final one ("no edge dropped" means every triangle
     # is unchanged); a peel cut short by ``rounds`` recounts.
@@ -1117,7 +1113,7 @@ def _luby(
             .filter(F.col("mx").isNull() | (F.struct("p", "id") > F.col("mx")))
             .select("id")
         )
-        # filled by the count of the next active set, which reads it
+        # filled by the cut of the next active set, which reads it
         won.append(cut_lineage(winners, eager=False))
         losers = (
             ue.join(won[-1].withColumnRenamed("id", "u"), "u")
@@ -1367,6 +1363,38 @@ def greedy_coloring(
     return reduce(DataFrame.unionByName, colored)
 
 
+def _walk_graph(
+    graph: PropertyGraph,
+    edge_labels: tuple[str, ...],
+    direction: str,
+    max_neighbors: int | None,
+    start_ids: list[int] | None,
+    salt: str,
+) -> tuple[DataFrame, DataFrame]:
+    """What :func:`random_walks` and :func:`node2vec_walks` step over:
+    the (u, v) adjacency in ``direction`` with each vertex's neighbours
+    capped at ``max_neighbors`` (the first by a hash keyed on ``salt``:
+    a sampling bias on vertices above the cap, so no hub row outgrows
+    memory), and the start ids (``start_ids``, else every vertex row)."""
+    from pyspark.sql import Window
+
+    from titan_spark.functions.hashing import portable_hash64
+
+    ad = _adjacency(_edges(graph, edge_labels), direction)
+    if max_neighbors is not None:
+        pick = portable_hash64(F.concat(F.lit(salt), F.col("v").cast("string")))
+        w = Window.partitionBy("u").orderBy(pick.asc(), F.col("v").asc())
+        ad = (
+            ad.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= max_neighbors)
+            .drop("_rn")
+        )
+    starts = graph.vertices.select("id")
+    if start_ids is not None:
+        starts = starts.filter(F.col("id").isin([int(x) for x in start_ids]))
+    return ad, starts
+
+
 def random_walks(
     graph: PropertyGraph,
     length: int = 3,
@@ -1376,7 +1404,6 @@ def random_walks(
     start_ids: list[int] | None = None,
     walks_per_start: int = 1,
     max_neighbors: int | None = None,
-    cut_every: int = 4,
 ) -> DataFrame:
     """Deterministic random walks → (walk_id, step, id): the corpus
     generator for DeepWalk/node2vec-style graph embeddings (Perozzi
@@ -1394,6 +1421,11 @@ def random_walks(
     dead-end vertex stop (no rows for later steps), matching the
     standard walk-corpus convention.
 
+    The walk is a :class:`Frontier` over (walk_id, step, id) rows: a
+    round's delta is the next step of every walk still moving, and the
+    union state is the corpus, so the loop ends early once every walk
+    has dead-ended.
+
     Scale shape: neighbor arrays are built ONCE (one groupBy over the
     edges); each step is then one frontier⋈neighbor-array join
     emitting exactly ONE row per walk — O(frontier) per step
@@ -1406,63 +1438,38 @@ def random_walks(
     bias on vertices above the cap) so no single row exceeds memory
     at true-supernode scale; None stores exact adjacency.
     """
-    if direction not in ("out", "in", "both"):
-        raise ValueError(f"direction must be out|in|both, got {direction!r}")
     from titan_spark.functions.hashing import portable_hash64
 
-    ad = _adjacency(_edges(graph, edge_labels), direction)
-    if max_neighbors is not None:
-        from pyspark.sql import Window
-
-        pick = portable_hash64(
-            F.concat(F.lit(f"rwn{seed}:"), F.col("v").cast("string"))
-        )
-        w = Window.partitionBy("u").orderBy(pick.asc(), F.col("v").asc())
-        ad = (
-            ad.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= max_neighbors)
-            .drop("_rn")
-        )
+    ad, starts = _walk_graph(
+        graph, edge_labels, direction, max_neighbors, start_ids, f"rwn{seed}:"
+    )
     nbrs = ad.groupBy("u").agg(F.sort_array(F.collect_list("v")).alias("_ns")).cache()
 
-    starts = graph.vertices.select("id")
-    if start_ids is not None:
-        starts = starts.filter(F.col("id").isin([int(x) for x in start_ids]))
-    frontier = None
-    for j in range(walks_per_start):
-        leg = starts.select(
-            (F.col("id") * walks_per_start + F.lit(j)).alias("walk_id"),
-            F.col("id").alias("cur"),
-        )
-        frontier = leg if frontier is None else frontier.unionByName(leg)
-    frontier = cut_lineage(frontier, eager=True)
-    acc = frontier.select(
-        "walk_id", F.lit(0).cast("int").alias("step"), F.col("cur").alias("id")
-    )
-    for t in range(length):
+    def step(walks: DataFrame, _corpus: DataFrame) -> DataFrame:
         draw = portable_hash64(
-            F.concat(F.lit(f"rw{seed}:"), F.col("walk_id").cast("string"), F.lit(f":{t}"))
-        )
-        idx = (F.pmod(draw, F.size("_ns")) + F.lit(1)).cast("int")
-        nxt = frontier.join(nbrs, frontier["cur"] == nbrs["u"]).select(
-            "walk_id", F.element_at("_ns", idx).alias("cur")
-        )
-        # periodic cut, not per-step: a short walk's plan is a bounded
-        # join chain over the cached neighbor table, and each eager cut
-        # is a full job — cutting every step made fixed overhead, not
-        # data, the dominant cost (measured ~2.5x on the sf0.1 row)
-        if (t + 1) % cut_every == 0:
-            frontier = cut_lineage(nxt, eager=True)
-        else:
-            frontier = nxt
-        acc = acc.unionByName(
-            frontier.select(
-                "walk_id", F.lit(t + 1).cast("int").alias("step"), F.col("cur").alias("id")
+            F.concat(
+                F.lit(f"rw{seed}:"),
+                F.col("walk_id").cast("string"),
+                F.lit(":"),
+                F.col("step").cast("string"),
             )
         )
-    acc = cut_lineage(acc, eager=True)
+        idx = (F.pmod(draw, F.size("_ns")) + F.lit(1)).cast("int")
+        return walks.join(nbrs, walks["id"] == nbrs["u"]).select(
+            "walk_id", (F.col("step") + 1).alias("step"), F.element_at("_ns", idx).alias("id")
+        )
+
+    legs = [
+        starts.select(
+            (F.col("id") * walks_per_start + F.lit(j)).alias("walk_id"),
+            F.lit(0).alias("step"),
+            "id",
+        )
+        for j in range(walks_per_start)
+    ]
+    corpus = Frontier(reduce(DataFrame.unionByName, legs), step).run(length).state
     nbrs.unpersist()
-    return acc
+    return corpus
 
 
 def strongly_connected_components(
@@ -1531,10 +1538,7 @@ def strongly_connected_components(
         warnings.warn(f"{msg}; returning {result}", RuntimeWarning, stacklevel=3)
 
     ed_all = _adjacency(_edges(graph, edge_labels), "out")
-    # a lazy cut plus a count: one action both materializes the
-    # remaining set and answers "is anything left"
-    remaining = cut_lineage(graph.vertices.select("id"), eager=False)
-    n_rem = remaining.count()
+    remaining, n_rem = counted_cut(graph.vertices.select("id"))
     done = remaining.select("id", F.col("id").alias("component")).limit(0)
     for _outer in range(max_outer):
         if n_rem == 0:
@@ -1633,8 +1637,7 @@ def strongly_connected_components(
         rep = members.groupBy("color").agg(F.min("id").alias("component"))
         assigned = members.join(rep, "color").select("id", "component")
         done = cut_lineage(done.unionByName(assigned), eager=True, disk=big_state)
-        remaining = cut_lineage(bwd.state.select("id"), eager=False, disk=big_state)
-        n_rem = remaining.count()
+        remaining, n_rem = counted_cut(bwd.state.select("id"), disk=big_state)
         sub_e.unpersist()
     if n_rem > 0:
         capped(f"{max_outer} outer rounds", "max_outer (deep SCC chains)", "a partial assignment")
@@ -2595,7 +2598,7 @@ def minimum_spanning_forest(
             .agg(F.min(pick).alias("e"))
             .select("c", "e.w", "e.oa", "e.ob", F.col("e.other").alias("parent"))
         )
-        # lazy cut: the rooting pass's first count materializes it
+        # lazy cut: the rooting pass's first cut materializes it
         elected = cut_lineage(elected, eager=False)
         # a 2-cycle elects its edge twice: the final dedup drops it
         forest_rounds.append(elected.select("oa", "ob", "w"))
@@ -2649,7 +2652,6 @@ def node2vec_walks(
     weight_out: int = 1,
     start_ids: list[int] | None = None,
     max_neighbors: int | None = None,
-    cut_every: int = 1,
     trials: int = 16,
 ) -> DataFrame:
     """Deterministic node2vec walks → (walk_id, step, id): the
@@ -2679,7 +2681,9 @@ def node2vec_walks(
     bit-for-bit (a float-keyed draw would flip picks on cross-engine
     ulp differences). Step 0 has no prev and draws uniformly over the
     rank-indexed adjacency, the standard convention. Walks stop at
-    dead ends.
+    dead ends. As in :func:`random_walks`, the walk is a
+    :class:`Frontier` whose union state is the corpus; a round reads
+    its step number from the driver's ``rounds``.
 
     Scale shape — the whole step is ROW-based; neighbor ARRAYS are
     never built or shipped. The rank-indexed adjacency (u, rn, v)
@@ -2706,8 +2710,6 @@ def node2vec_walks(
     ``max_neighbors`` still caps supernode adjacency with the same
     documented sampling bias as random_walks.
     """
-    if direction not in ("out", "in", "both"):
-        raise ValueError(f"direction must be out|in|both, got {direction!r}")
     for nm, w in (
         ("weight_return", weight_return),
         ("weight_in", weight_in),
@@ -2723,21 +2725,11 @@ def node2vec_walks(
 
     wr, wi, wo = int(weight_return), int(weight_in), int(weight_out)
     wmax = max(wr, wi, wo)
-    wr_l, wi_l, wo_l = F.lit(wr).cast("long"), F.lit(wi).cast("long"), F.lit(
-        wo
-    ).cast("long")
+    wr_l, wi_l, wo_l = (F.lit(w).cast("long") for w in (wr, wi, wo))
 
-    ad = _adjacency(_edges(graph, edge_labels), direction)
-    if max_neighbors is not None:
-        pick = portable_hash64(
-            F.concat(F.lit(f"n2vn{seed}:"), F.col("v").cast("string"))
-        )
-        w_cap = Window.partitionBy("u").orderBy(pick.asc(), F.col("v").asc())
-        ad = (
-            ad.withColumn("_rn", F.row_number().over(w_cap))
-            .filter(F.col("_rn") <= max_neighbors)
-            .drop("_rn")
-        )
+    ad, starts = _walk_graph(
+        graph, edge_labels, direction, max_neighbors, start_ids, f"n2vn{seed}:"
+    )
     # rank-indexed adjacency: rn = 1-based rank of v in sorted N(u).
     # element_at(sort_array(collect_list(v)), rn) ≡ join on (u, rn) —
     # the row-based equivalent of the sorted neighbor array, built by
@@ -2748,23 +2740,12 @@ def node2vec_walks(
     ).cache()
     degs = adr.groupBy("u").agg(F.max("rn").cast("long").alias("_deg")).cache()
 
-    starts = graph.vertices.select("id")
-    if start_ids is not None:
-        starts = starts.filter(F.col("id").isin([int(x) for x in start_ids]))
-    frontier = starts.select(
-        F.col("id").alias("walk_id"), F.col("id").alias("cur")
-    )
-    frontier = cut_lineage(frontier, eager=True)
-    acc = frontier.select(
-        "walk_id", F.lit(0).cast("int").alias("step"), F.col("cur").alias("id")
-    )
-    for t in range(length):
-        adx = adr.select(
-            F.col("u").alias("_xu"),
-            F.col("rn").alias("_xrn"),
-            F.col("v").alias("_xv"),
-        )
-        prs = adr.select(F.col("u").alias("_pu"), F.col("v").alias("_pv"))
+    adx = adr.select(F.col("u").alias("_xu"), F.col("rn").alias("_xrn"), F.col("v").alias("_xv"))
+    prs = adr.select(F.col("u").alias("_pu"), F.col("v").alias("_pv"))
+
+    def step(walks: DataFrame, _corpus: DataFrame) -> DataFrame:
+        t = n2v.rounds
+        frontier = walks.select("walk_id", "prev", F.col("id").alias("cur"))
         base_draw = portable_hash64(
             F.concat(
                 F.lit(f"n2v{seed}:"),
@@ -2785,16 +2766,7 @@ def node2vec_walks(
                     (F.col("cur") == F.col("_xu"))
                     & (F.col("_idx") == F.col("_xrn")),
                 )
-                .select(
-                    "walk_id",
-                    F.col("cur").alias("_p"),
-                    F.col("_xv").alias("_c"),
-                )
-                .select(
-                    "walk_id",
-                    F.col("_p").alias("prev"),
-                    F.col("_c").alias("cur"),
-                )
+                .select("walk_id", F.col("cur").alias("_p"), F.col("_xv").alias("_c"))
             )
         else:
             f1 = frontier.join(degs, frontier["cur"] == degs["u"]).select(
@@ -2942,23 +2914,19 @@ def node2vec_walks(
                 F.col("cur").alias("_p"),
                 F.col("_x").alias("_c"),
             )
-            nxt = accepted.unionByName(fallback).select(
-                "walk_id",
-                F.col("_p").alias("prev"),
-                F.col("_c").alias("cur"),
-            )
-        if (t + 1) % cut_every == 0:
-            frontier = cut_lineage(nxt, eager=True)
-        else:
-            frontier = nxt
-        acc = acc.unionByName(
-            frontier.select(
-                "walk_id",
-                F.lit(t + 1).cast("int").alias("step"),
-                F.col("cur").alias("id"),
-            )
+            nxt = accepted.unionByName(fallback)
+        return nxt.select(
+            "walk_id", F.lit(t + 1).alias("step"), F.col("_c").alias("id"), F.col("_p").alias("prev")
         )
-    acc = cut_lineage(acc, eager=True)
+
+    walks = starts.select(
+        F.col("id").alias("walk_id"),
+        F.lit(0).alias("step"),
+        "id",
+        F.lit(None).cast("long").alias("prev"),
+    )
+    n2v = Frontier(walks, step)
+    corpus = n2v.run(length).state.select("walk_id", "step", "id")
     adr.unpersist()
     degs.unpersist()
-    return acc
+    return corpus

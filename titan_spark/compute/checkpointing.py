@@ -1,4 +1,5 @@
-"""Lineage cuts for iterative loops: one cut per round, with a bounded size.
+"""Lineage cuts for iterative loops: one cut per round, with a bounded size,
+and the round's row count taken on the cut's own job.
 
 Iterated plans (Pregel rounds, repeat_until frontiers, LSH self-join
 inputs) must truncate lineage or the plan tree grows without bound.
@@ -39,12 +40,20 @@ Why not the real size (observed rows × row width): measured on the same
 probe, a cut that carried it stayed at 17 bits but ran 14 rounds in
 29.3–37.2 s. The row count itself cost about 1 s; the rest was lost in
 the plans the small size selects.
+
+Why a round counts on its cut. A loop round needs its row count (an
+empty frontier, no label that moved) as well as its cut, and
+``df.count()`` on a lazy cut runs a job of its own. :func:`counted_cut`
+cuts eagerly and reduces the count in an ``Observation`` during the
+cut's own job, as Fulgora reduces its ``Memory`` counters during the
+round's scan (``FulgoraGraphComputer.java:179-189``).
 """
 
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
 
 
 def _clamp_size(cut: DataFrame) -> DataFrame:
@@ -102,3 +111,15 @@ def cut_lineage(df: DataFrame, eager: bool = True, disk: bool = False) -> DataFr
     else:
         cut = df.localCheckpoint(eager=eager)
     return _clamp_size(cut)
+
+
+def counted_cut(
+    df: DataFrame, flag: Column | None = None, disk: bool = False
+) -> tuple[DataFrame, int]:
+    """An eager :func:`cut_lineage` of ``df`` and its row count, or the
+    count of its rows where ``flag`` holds. The count is an
+    ``Observation`` of the cut's own job, so it costs no job."""
+    obs = Observation()
+    n = F.count(F.lit(1)) if flag is None else F.count_if(flag)
+    cut = cut_lineage(df.observe(obs, n.alias("n")), eager=True, disk=disk)
+    return cut, obs.get["n"]

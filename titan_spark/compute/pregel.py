@@ -12,11 +12,13 @@ Spark mapping (SURVEY §2.9 C2): one round =
 
 The per-round full scan becomes a cached DataFrame; the message
 combiner is the ``agg`` (partial aggregation runs map-side); the
-``Memory`` counter that ends a fixpoint is the ``converged``/``rounds``
-record of :class:`Frontier` and :class:`Fixpoint`. Lineage is truncated with
-``localCheckpoint`` every round — without it the iterated plan
-grows without bound and the driver stack-overflows (SURVEY §7,
-correctness-adjacent).
+``Memory`` counter that ends a fixpoint is a row count reduced during
+the round's own lineage cut
+(:func:`~titan_spark.compute.checkpointing.counted_cut`), kept as the
+``size``/``converged``/``rounds`` record of :class:`Frontier` and
+:class:`Fixpoint`. Lineage is cut every round — without it the
+iterated plan grows without bound and the driver stack-overflows
+(SURVEY §7, correctness-adjacent).
 
 Scale notes: edges are cached across rounds; each round shuffles only
 on vertex id. Message expressions are inspected so that a round joins
@@ -25,24 +27,17 @@ one join per round, not two). AQE handles skewed (supernode)
 recipients — the analog of Titan's PartitionedVertexProgramExecutor
 (C9).
 
-Three loop shapes, one driver each. A round of the last two is ONE
-Spark action: what it produces is cut lazily, so the ``count()`` that
-decides the loop also fills the cut (an eager cut plus an emptiness
-probe is two actions, and under AQE an action runs a job per stage).
+Two loop drivers. Each cuts a round eagerly once, and the count that
+decides the loop rides on that cut's job, so it costs no job of its own.
 
-- :func:`pregel` runs a FIXED number of rounds over every vertex —
-  PageRank, personalized PageRank, label propagation (and so peer
-  pressure and the traversal ``page_rank`` / ``peer_pressure`` steps):
-  no convergence probe, one eager cut per round. Running these rounds
-  on :class:`Fixpoint` instead was measured at +3 to +11 jobs per call
-  (local[4], 4 shuffle partitions): a count runs more jobs than an
-  eager cut of the same plan.
 - :class:`Frontier` runs a loop whose state changes only by what each
   round newly finds, so only the changed set does work: landmark
   distances, betweenness's forward phase, k-hop balls, bidirectional
   BFS, DAG layering, shortest distance (only a vertex whose distance
-  fell can lower a neighbour's), both fixpoints of SCC and the k-truss
-  peel (a delta is what a round removes). The caller's expand step
+  fell can lower a neighbour's), both fixpoints of SCC, the k-truss
+  peel (a delta is what a round removes) and the random and node2vec
+  walks (a delta is the next step of every walk still moving; the
+  state is the walk corpus). The caller's expand step
   (frontier, state) → delta settles against the state itself; the
   driver owns the cuts, the merge of the delta into the state (a union,
   left uncut, unless the caller passes a max, a min or an anti-join),
@@ -54,10 +49,14 @@ probe is two actions, and under AQE an action runs a job per stage).
   table, flagged ``d < k``), Luby's MIS (the active set), greedy
   coloring (the uncoloured ids), connected components' label map
   (flagged where a label fell), Borůvka's live quotient edges, its
-  pointer jumps (flagged where the last jump moved a row) and
-  Louvain's move rounds (flagged where a vertex changed community).
-  GraphX's Pregel has this shape: vertex state in one relation and a
-  count of the active set.
+  pointer jumps (flagged where the last jump moved a row), Louvain's
+  move rounds (flagged where a vertex changed community) and the
+  fixed-round vertex programs of :func:`pregel` — PageRank,
+  personalized PageRank, label propagation (and so peer pressure and
+  the traversal ``page_rank`` / ``peer_pressure`` steps) — which count
+  every vertex row and so stop at their round cap. GraphX's Pregel has
+  this shape: vertex state in one relation and a count of the active
+  set.
 
 A union merge is left uncut because a union of cut deltas is already a
 flat plan whose ``UnionRDD`` has the sum of its children's partitions
@@ -70,7 +69,7 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from titan_spark.compute.checkpointing import cut_lineage
+from titan_spark.compute.checkpointing import counted_cut, cut_lineage
 
 
 def _sides_referenced(*exprs: Column | None) -> set[str]:
@@ -149,7 +148,8 @@ def pregel(
     msg_to_src: Column | None = None,
     max_iterations: int = 10,
 ) -> DataFrame:
-    """Run a vertex program for ``max_iterations`` rounds.
+    """Run a vertex program for ``max_iterations`` rounds, as a
+    :class:`Fixpoint` whose count is every vertex row.
 
     - ``initial``: state columns added to ``vertices`` before round 1.
     - ``msg_to_*``: triplet message expressions.
@@ -163,19 +163,17 @@ def pregel(
     reads no vertex state (the triplet join drops it otherwise). Returns
     the vertex DataFrame with ``id`` + state columns.
     """
+
+    def step(v: DataFrame, _round: int) -> DataFrame:
+        msgs = aggregate_messages(v, edges, agg, msg_to_dst=msg_to_dst, msg_to_src=msg_to_src)
+        return v.join(msgs, "id", "left").select(
+            "id", *[update.get(n, F.col(n)).alias(n) for n in initial]
+        )
+
     v = vertices.select("id", *[e.alias(n) for n, e in initial.items()])
     edges.cache()
     try:
-        v = cut_lineage(v, eager=True)
-        for _ in range(max_iterations):
-            msgs = aggregate_messages(
-                v, edges, agg, msg_to_dst=msg_to_dst, msg_to_src=msg_to_src
-            )
-            v = v.join(msgs, "id", "left").select(
-                "id", *[update.get(n, F.col(n)).alias(n) for n in initial]
-            )
-            v = cut_lineage(v, eager=True)
-        return v
+        return Fixpoint(v, step).run(max_iterations).state
     finally:
         edges.unpersist(blocking=False)
 
@@ -210,8 +208,7 @@ class Frontier:
         self.size = size
         self.rounds = 0
         self._converged: bool | None = False
-        self._expand, self._merge = expand, merge
-        self._cut = lambda df: cut_lineage(df, eager=False, disk=disk)
+        self._expand, self._merge, self._disk = expand, merge, disk
 
     @property
     def converged(self) -> bool:
@@ -220,9 +217,8 @@ class Frontier:
         return self._converged
 
     def advance(self) -> bool:
-        """Run one round (one action); False once the delta is empty."""
-        delta = self._cut(self._expand(self.frontier, self.state))
-        self.size = delta.count()
+        """Run one round; False once the delta is empty."""
+        delta, self.size = counted_cut(self._expand(self.frontier, self.state), disk=self._disk)
         if self.size == 0:
             self._converged = True
             return False
@@ -230,7 +226,7 @@ class Frontier:
         if self._merge is None:
             self.state = self.state.unionByName(delta)
         else:
-            self.state = self._cut(self._merge(self.state, delta))
+            self.state = cut_lineage(self._merge(self.state, delta), eager=False, disk=self._disk)
         self.frontier = delta
         return True
 
@@ -247,9 +243,9 @@ class Fixpoint:
     """A loop that rewrites its whole state each round.
 
     ``step(state, round)`` returns the next state (``round`` counts
-    from 0). The driver cuts it lazily and counts its ``flag`` rows, or
-    every row when ``flag`` is None; a count of 0 ends the loop.
-    ``size`` is that count for the initial state, or any positive
+    from 0). The driver cuts it and counts its ``flag`` rows, or every
+    row when ``flag`` is None, on the cut's job; a count of 0 ends the
+    loop. ``size`` is that count for the initial state, or any positive
     number when the caller knows only that it is not 0; when the caller
     does not know it, the initial state is cut and counted too.
     ``rounds`` counts the steps taken; ``converged`` says the last count
@@ -269,9 +265,7 @@ class Fixpoint:
             self._settle(state)
 
     def _settle(self, state: DataFrame) -> None:
-        self.state = cut_lineage(state, eager=False)
-        rows = self.state if self._flag is None else self.state.filter(self._flag)
-        self.size = rows.count()
+        self.state, self.size = counted_cut(state, self._flag)
         self.converged = self.size == 0
 
     def run(self, max_rounds: int) -> "Fixpoint":

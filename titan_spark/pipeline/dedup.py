@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions 
 
 from titan_spark.functions.hashing import portable_hash64, resolve_hash_fn
 from titan_spark.functions.text import tokenize
-from titan_spark.compute.checkpointing import cut_lineage
+from titan_spark.compute.checkpointing import counted_cut, cut_lineage
 
 # deterministic minhash parameters (fixed seeds; Mersenne prime modulus)
 _MINHASH_PRIME = 2_147_483_647  # 2^31 - 1
@@ -271,10 +271,7 @@ def prefix_filter_candidates(
         .select("_id", "_sz", "_g", "_r")
     )
     # the gate's row count rides on the cut's own job (no extra count)
-    n_ranked = Observation()
-    ranked = cut_lineage(
-        ranked.observe(n_ranked, F.count(F.lit(1)).alias("n")), eager=True
-    )
+    ranked, n_ranked = counted_cut(ranked)
     # SHUFFLE_HASH above the broadcast regime: the prefix self-join is
     # a collision join on the shingle key whose sort order is never
     # reused downstream (the output feeds a pair-dedup hash aggregate),
@@ -286,7 +283,7 @@ def prefix_filter_candidates(
     # relation is far past any broadcast threshold and SMJ was the
     # alternative. Per-partition build size stays bounded: the posting
     # relation shuffles at the session's corpus-scaled partition count.
-    if n_ranked.get["n"] > 2_000_000:
+    if n_ranked > 2_000_000:
         ranked = ranked.hint("SHUFFLE_HASH")
     a, b = ranked.alias("a"), ranked.alias("b")
     # positional filter (PPJoin): a collision at prefix ranks (ra, rb)
@@ -398,10 +395,7 @@ def jaccard_pairs(
     """
     # (id_a, id_b) pairs only — materialized once because the plan
     # references the candidate set four times (id union + two joins)
-    n_cand = Observation()
-    candidates = cut_lineage(
-        candidates.observe(n_cand, F.count(F.lit(1)).alias("n")), eager=True
-    )
+    candidates, n_cand = counted_cut(candidates)
     cand_ids = (
         candidates.select(F.col("id_a").alias("_jid"))
         .unionByName(candidates.select(F.col("id_b").alias("_jid")))
@@ -462,7 +456,7 @@ def jaccard_pairs(
             base_part = int(sess.conf.get("spark.sql.shuffle.partitions"))
         except (TypeError, ValueError):
             base_part = sess.sparkContext.defaultParallelism or 200
-        n_part = max(base_part, min(2048, n_cand.get["n"] // 50_000 + 1))
+        n_part = max(base_part, min(2048, n_cand // 50_000 + 1))
         j = candidates.join(sh_a.repartition(n_part, "id_a"), "id_a").join(
             sh_b.repartition(n_part, "id_b"), "id_b"
         )
